@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Chunking, Dedup, Multimodal, SimSearch, Sketches, TextStats}
-import graft.ops.{Profile, Snapshot}
+import graft.ops.{Par, Profile, Snapshot}
 import graft.streaming.Events
 
 /** Extension-scope query bindings (BASELINE.json: dedup, similarity
@@ -17,8 +17,8 @@ object ExtCatalog {
   val KeywordTerms: Seq[String] = Seq("spark", "query", "join")
 
   /** x_ann_recall_audit floors: recall@5 MEASURED on the sf0.01 fixture
-    * at the catalog operating points (DevAnnRecall: ivf 0.72, lsh 0.94,
-    * pq 0.60), each backed off to ~55-65% of the measurement — the
+    * at the catalog operating points (r8 recall measurement: ivf 0.72,
+    * lsh 0.94, pq 0.60), each backed off to ~55-65% of the measurement — the
     * result is a pure function of (fixture, seed), so the gate is
     * deterministic, and a real recall regression (wrong banding, broken
     * ADC table, bad list probing) still trips the oracle. */
@@ -87,7 +87,7 @@ object ExtCatalog {
       // PQ/ADC compressed-domain ANN (rows-only like LSH/IVF; spec
       // asserts recall vs brute force). m=16/ksub=32 = 16× compression,
       // the measured mid-point of the compression/recall dial on this
-      // near-uniform fixture (DevPqProbe)
+      // near-uniform fixture (r7 m/ksub sweep)
       val e = Tables.embeddings(s, d)
       SimSearch.pqTopK(e.filter(col("vec_id") < 10), e, 5, m = 16, ksub = 32)
     }),
@@ -192,22 +192,13 @@ object ExtCatalog {
       // instead of the operator — each bench run pays its own four
       // searches. Results are 50-row frames; every consumer is a
       // join/aggregate, so materialized row order cannot matter.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      val (brute, ivfR, lshR, pqR) =
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-          // construction runs inside the task too: the IVF/PQ builders
-          // perform their own driver-side fits, which are independent
-          val fB = Future(SimSearch.cosineTopK(q, e, k)
-            .select(col("qid"), col("cid")).localCheckpoint())
-          val fI = Future(SimSearch.ivfTopK(q, e, k).localCheckpoint())
-          val fL = Future(SimSearch.lshTopK(q, e, k).localCheckpoint())
-          val fP = Future(SimSearch.pqTopK(q, e, k, m = 16, ksub = 32).localCheckpoint())
-          import scala.concurrent.duration.Duration
-          (Await.result(fB, Duration.Inf), Await.result(fI, Duration.Inf),
-            Await.result(fL, Duration.Inf), Await.result(fP, Duration.Inf))
-        } finally pool.shutdown()
+      // construction runs inside each thunk too: the IVF/PQ builders
+      // perform their own driver-side fits, which are independent
+      val Seq(brute, ivfR, lshR, pqR) = Par.all(Seq(
+        () => SimSearch.cosineTopK(q, e, k).select(col("qid"), col("cid")).localCheckpoint(),
+        () => SimSearch.ivfTopK(q, e, k).localCheckpoint(),
+        () => SimSearch.lshTopK(q, e, k).localCheckpoint(),
+        () => SimSearch.pqTopK(q, e, k, m = 16, ksub = 32).localCheckpoint()))
       val nq = q.select(count(lit(1)).as("n_queries"))
       def one(name: String, res: DataFrame, floor: Double): DataFrame = {
         val ids = res.select(col("qid"), col("rk").cast("long").as("rk"), col("cid"))

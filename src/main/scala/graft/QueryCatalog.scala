@@ -107,24 +107,16 @@ object QueryCatalog {
       // final join and the broadcast rank recount — without it the wide
       // sketch aggregate (the expensive scan) executes twice per run
       // (and persist would let bench reruns time a CacheManager hit).
-      // The exact distinct recount is independent of the sketch pass, so
-      // it runs on a second driver thread while the checkpoint
-      // materializes (guide §2.6) — its driver-parquet decode no longer
-      // adds to the audit's wall.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (ap, ex) =
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-          val fAp = Future(Profile.profileApprox(li, accuracy)
-            .select(col("column"), col("n_total"),
-              (col("n_total") - col("n_missing")).as("n_nonnull"),
-              col("n_unique"), col("p25"), col("median"), col("p75"))
-            .localCheckpoint())
-          val fEx = Future(Profile.distinctCounts(li).withColumnRenamed("n_unique", "nd"))
-          (Await.result(fAp, Duration.Inf), Await.result(fEx, Duration.Inf))
-        } finally pool.shutdown()
+      // Sequential on purpose: overlapping the exact distinct recount
+      // with the checkpoint on a second driver thread regressed the audit
+      // in both r16 driver runs (2.91 → 3.71 s at 32 cores, 2.82 → 5.05 s
+      // at 8).
+      val ap = Profile.profileApprox(li, accuracy)
+        .select(col("column"), col("n_total"),
+          (col("n_total") - col("n_missing")).as("n_nonnull"),
+          col("n_unique"), col("p25"), col("median"), col("p75"))
+        .localCheckpoint()
+      val ex = Profile.distinctCounts(li).withColumnRenamed("n_unique", "nd")
       val numCols = LiNumeric.map(_._1)
       // Rank recount as ONE flat codegen'd aggregate (7 cols × 7 slots)
       // with the quantiles as LITERALS collected off the checkpointed

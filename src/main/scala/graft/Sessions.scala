@@ -32,7 +32,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // No file-scan split floor (r10 measured, DevScanSplit): Spark's
+      // No file-scan split floor (r10 scan-split measurement): Spark's
       // own split target — max(openCostInBytes, totalScanBytes /
       // defaultParallelism) clamped to maxPartitionBytes — already
       // spreads an explosive few-MB multi-file corpus across the cores

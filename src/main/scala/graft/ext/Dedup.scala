@@ -682,7 +682,7 @@ object Dedup {
     * materializes the pair detection exactly once), its TRUE cardinality
     * measured with one count over the cached longs — post-join optimizer
     * estimates are off by orders of magnitude here (measured 4.6·10¹⁶
-    * estimated bytes for 28 actual edges, DevClusterStats), so the
+    * estimated bytes for 28 actual edges, r9 cluster-stats measurement), so the
     * dispatch counts rather than trusts plan stats — and the component
     * search runs on the driver below `maxDriverEdges`
     * ([[ClusterDriverMaxEdges]]) or as distributed label propagation
@@ -956,7 +956,7 @@ object Dedup {
     * genuine near-dup pair survives unless ALL its shared buckets exceed
     * the cap — an exact-dup-grade mega-cluster upstream dedup owns.
     * Operating point MEASURED on the x16 rehearsal fixture
-    * (DevMinhashCap): caps {0, 64, 32, 16} all emit the IDENTICAL 4096
+    * (r8 band-cap sweep): caps {0, 64, 32, 16} all emit the IDENTICAL 4096
     * verified pairs (banding redundancy carries every true pair) at
     * 4.49 / 3.63 / 2.90 / 2.62 s — 32 takes most of the win while
     * staying 2× above the point where the fixture shows any risk. */

@@ -162,7 +162,7 @@ object ScanStats {
     * pure-scan condition as [[parquetScanRowCount]]. The row-group count
     * is the scan's PARALLELISM CEILING — data assignment is row-group
     * granular, so splitting a file beyond its groups only makes empty
-    * tasks (the r10 DevScanSplit finding) — which makes it the right
+    * tasks (the r10 scan-split measurement) — which makes it the right
     * driver-side signal for "this scan cannot use the machine" dispatch
     * (e.g. [[graft.ops.Profile]]'s narrow fan-out before heavy per-row
     * projections). */

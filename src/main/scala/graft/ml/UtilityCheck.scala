@@ -25,18 +25,14 @@ object UtilityCheck {
   private val FitSampleCap = 262144L
 
   def modelUtility(before: DataFrame, after: DataFrame, target: String): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val spark = before.sparkSession
     import spark.implicits._
     // The two evaluations are independent job chains — run them
     // concurrently so the cluster overlaps their (driver-sequential)
     // optimizer iterations.
-    val evals = Await.result(Future.sequence(Seq(
-      Future(("before", evalOne(before, target))),
-      Future(("after", evalOne(after, target))))), 30.minutes)
-    evals.map { case (name, (acc, f1)) => (name, acc, f1) }
+    val ((accB, f1B), (accA, f1A)) =
+      graft.ops.Par.both(evalOne(before, target), evalOne(after, target))
+    Seq(("before", accB, f1B), ("after", accA, f1A))
       .toDF("dataset", "accuracy", "weighted_f1")
   }
 

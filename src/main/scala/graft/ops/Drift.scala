@@ -94,14 +94,21 @@ object Drift {
     * raw columns and merge-walks the CDFs on the driver (the computation
     * scipy itself performs); above it, the fused scale-safe histogram
     * plan ([[ksFromCounts]]) runs. Free to evaluate — plan statistics,
-    * no job. The ceiling is a MEASURED crossover (DevKsPath, 7 lineitem
-    * columns, local[32]): at ~11 MB of stats the driver merge-walk wins
-    * 1.0 s vs 2.8 s (Spark job floor), at ~170 MB it loses 8.5 s vs
+    * no job. The ceiling is a MEASURED crossover (r8 crossover
+    * measurement, 7 lineitem columns, local[32]): at ~11 MB of stats
+    * the driver merge-walk wins 1.0 s vs 2.8 s (Spark job floor), at
+    * ~170 MB it loses 8.5 s vs
     * 4.0 s — the collect + single-threaded sorts are the r7 x16 tail
     * (ratio 13.8). 64 MB keeps the small-side win and dispatches the
     * value-domain work to the parallel bucketed plan before the driver
     * becomes the bottleneck; both paths are bit-identical. */
   private val KsDriverMaxBytes = BigInt(64L) << 20
+
+  /** Both sides' optimizer size estimates are within [[KsDriverMaxBytes]]
+    * — the driver-path test every dispatch in this object shares. */
+  private def underDriverCeiling(before: DataFrame, after: DataFrame): Boolean =
+    before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
+      after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes
 
   /** Ceiling for the PSI decile-edge fit, in RAW COLLECTED BYTES
     * (rows × fitted columns × 8), not scan-estimate bytes.
@@ -218,9 +225,7 @@ object Drift {
                        driverCollect: Option[Boolean] = None)
       : Seq[(String, Option[Double])] = {
     if (cols.isEmpty) return Seq.empty
-    val useDriver = driverCollect.getOrElse(
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes)
+    val useDriver = driverCollect.getOrElse(underDriverCeiling(before, after))
     if (useDriver) {
       val aArr = collectRaw(before, cols)
       val bArr = collectRaw(after, cols)
@@ -256,9 +261,7 @@ object Drift {
     // psiMergeDriver, w1Merge; equality pinned by DriftSpec on both
     // paths). Non-finite samples fall back to the composed operators,
     // whose NaN/∞ ordering and range-gate semantics own those inputs.
-    val useDriver =
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes
+    val useDriver = underDriverCeiling(before, after)
     if (useDriver) {
       val spark = before.sparkSession
       import spark.implicits._
@@ -341,14 +344,17 @@ object Drift {
     Some(roundLike(best, roundTo))
   }
 
+  /** A category key as its raw UTF-8 bytes, which is how the plan groups
+    * and orders it. A String key would not do: the lenient decode maps
+    * every invalid byte sequence to U+FFFD, merging keys the plan keeps
+    * apart. */
+  private type CatKey = scala.collection.immutable.ArraySeq.ofByte
+
   /** Spark's ascending STRING order (UTF8String binary compare =
-    * unsigned byte-wise lexicographic UTF-8) — java.lang.String.compareTo
-    * is UTF-16 code-unit order, which diverges above the BMP, so the
-    * driver tails sort keys by bytes like the plan's window does. */
-  private val Utf8Ordering: Ordering[String] = (a: String, b: String) =>
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    * unsigned byte-wise lexicographic) — the driver tails walk keys in
+    * the plan window's order. */
+  private val CatKeyOrdering: Ordering[CatKey] = (a: CatKey, b: CatKey) =>
+    java.util.Arrays.compareUnsigned(a.unsafeArray, b.unsafeArray)
 
   /** Driver twin of [[psiFromSides]] over ALREADY-BINNED per-side counts
     * (the plan did the binning — this replaces only the tiny spine-join +
@@ -386,7 +392,7 @@ object Drift {
     * in the plan window's byte-wise key order, max-of-cumsum (JS terms
     * can be NEGATIVE per category, so max ≠ last — replicated exactly).
     * UNrounded like the frame; callers apply the plan's round. */
-  private def jsCountsDriver(counts: Map[Int, Map[String, (Long, Long)]])
+  private def jsCountsDriver(counts: Map[Int, Map[CatKey, (Long, Long)]])
       : Map[Int, Option[Double]] =
     counts.map { case (ci, byK) =>
       var ta = 0L; var tb = 0L
@@ -395,7 +401,7 @@ object Drift {
       else {
         var cum = 0.0
         var best = Double.NegativeInfinity
-        byK.keysIterator.toArray.sorted(Utf8Ordering).foreach { k =>
+        byK.keysIterator.toArray.sorted(CatKeyOrdering).foreach { k =>
           val (oa, ob) = byK(k)
           val p = oa.toDouble / ta.toDouble
           val q = ob.toDouble / tb.toDouble
@@ -412,7 +418,7 @@ object Drift {
   /** Driver twin of [[chi2Multi]]'s tail over per-side category counts —
     * the reference's Σ (oa−ob)²/(oa+ob+1e-9) in byte-wise key order,
     * max-of-cumsum, unrounded (the caller rounds like the plan). */
-  private def chi2CountsDriver(counts: Map[Int, Map[String, (Long, Long)]])
+  private def chi2CountsDriver(counts: Map[Int, Map[CatKey, (Long, Long)]])
       : Map[Int, Option[Double]] =
     counts.map { case (ci, byK) =>
       var ta = 0L; var tb = 0L
@@ -421,7 +427,7 @@ object Drift {
       else {
         var cum = 0.0
         var best = Double.NegativeInfinity
-        byK.keysIterator.toArray.sorted(Utf8Ordering).foreach { k =>
+        byK.keysIterator.toArray.sorted(CatKeyOrdering).foreach { k =>
           val (oa, ob) = byK(k)
           val d = (oa - ob).toDouble
           cum += d * d / ((oa + ob).toDouble + 1e-9)
@@ -430,20 +436,6 @@ object Drift {
         Some(best)
       })
     }
-
-  /** Run two independent driver actions concurrently (guide §2.6: actions
-    * are only sequential because the driver calls them sequentially). */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val f1 = Future(fa)
-      val f2 = Future(fb)
-      (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
-    } finally pool.shutdown()
-  }
 
   /** Segmented drift — per-group two-sample KS: "WHICH segment drifted",
     * the question a whole-table statistic can't answer (a 2% global KS
@@ -551,23 +543,24 @@ object Drift {
     .agg(count(lit(1)).as(out))
 
   /** Collect two (ci, k, count) side frames concurrently and merge into
-    * the per-column category-count maps the driver tails consume. */
+    * the per-column category-count maps the driver tails consume. Keys
+    * come back as binary (see [[CatKey]]). */
   private def collectCatSides(before: DataFrame, after: DataFrame,
-                              cols: Seq[String]): Map[Int, Map[String, (Long, Long)]] = {
-    val (bRows, aRows) = inParallel(
-      catSideCounts(before, cols, "n").collect(),
-      catSideCounts(after, cols, "n").collect())
-    val m = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Map[String, (Long, Long)]]
-    bRows.foreach { r =>
-      val byK = m.getOrElseUpdate(r.getInt(0), scala.collection.mutable.Map.empty)
-      val (a, b) = byK.getOrElse(r.getString(1), (0L, 0L))
-      byK(r.getString(1)) = (a + r.getLong(2), b)
-    }
-    aRows.foreach { r =>
-      val byK = m.getOrElseUpdate(r.getInt(0), scala.collection.mutable.Map.empty)
-      val (a, b) = byK.getOrElse(r.getString(1), (0L, 0L))
-      byK(r.getString(1)) = (a, b + r.getLong(2))
-    }
+                              cols: Seq[String]): Map[Int, Map[CatKey, (Long, Long)]] = {
+    def side(df: DataFrame) =
+      catSideCounts(df, cols, "n").select(col("ci"), col("k").cast("binary"), col("n"))
+    val (bRows, aRows) = Par.both(side(before).collect(), side(after).collect())
+    import scala.collection.mutable
+    val m = mutable.Map.empty[Int, mutable.Map[CatKey, (Long, Long)]]
+    def merge(rows: Array[org.apache.spark.sql.Row], isBefore: Boolean): Unit =
+      rows.foreach { r =>
+        val byK = m.getOrElseUpdate(r.getInt(0), mutable.Map.empty)
+        val k = new CatKey(r.getAs[Array[Byte]](1))
+        val (a, b) = byK.getOrElse(k, (0L, 0L))
+        byK(k) = if (isBefore) (a + r.getLong(2), b) else (a, b + r.getLong(2))
+      }
+    merge(bRows, isBefore = true)
+    merge(aRows, isBefore = false)
     m.view.mapValues(_.toMap).toMap
   }
 
@@ -724,9 +717,7 @@ object Drift {
     // gate). Above the ceiling the scale-safe bucketed plan below runs
     // unchanged; `driverCollect` is the spec's override, like
     // ksStatisticMulti's.
-    val useDriver = driverCollect.getOrElse(
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes)
+    val useDriver = driverCollect.getOrElse(underDriverCeiling(before, after))
     if (useDriver) {
       val spark = before.sparkSession
       import spark.implicits._
@@ -832,9 +823,7 @@ object Drift {
     // bit-identical (DriftSpec pins both paths). Any non-finite value
     // anywhere falls back to the composed plan, whose in-agg percentile
     // fallback owns non-finite ordering.
-    val useDriver = driverCollect.getOrElse(
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes)
+    val useDriver = driverCollect.getOrElse(underDriverCeiling(before, after))
     if (useDriver) {
       val aM = collectRaw(before, cols)
       val bM = collectRaw(after, cols)
@@ -1041,13 +1030,13 @@ object Drift {
     val catCols = shared.filterNot(numericBoth).map(_.name).toSeq
     if (numCols.isEmpty || catCols.isEmpty) {
       // single-family input: the per-family forms are already one scan each
-      val psiRows = psiMulti(before, after, numCols, bins, eps)
+      val psiRows = psiMulti(before, after, numCols, bins, eps, driverCollect = driverTail)
         .map { case (c, v) => (c, "psi", v) }
-      val jsRows = jsMultiRows(before, after, catCols)
+      val jsRows = jsMultiRows(before, after, catCols, driverTail)
       // driver-side sort: both row seqs are already local, and an
       // .orderBy on the LocalRelation costs a range-sample job + a sort
-      // job just to order a ≤|columns|-row frame (DevV5 measured the
-      // same pair as half of v5's job budget)
+      // job just to order a ≤|columns|-row frame (the r10 v5 job count
+      // measured the same pair as half of v5's job budget)
       return (psiRows ++ jsRows).sortBy(_._1).toDF("column", "type", "metric")
     }
     // Fused form — ONE exploded map-side-combined count per side covers
@@ -1084,9 +1073,7 @@ object Drift {
     // bit-identical driver twins (counts are exact longs, binning already
     // happened in-plan; DriftSpec pins both paths). Above the ceiling the
     // plan tail runs untouched — the 100 TB shape is unchanged.
-    val useDriverTail = driverTail.getOrElse(
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes)
+    val useDriverTail = driverTail.getOrElse(underDriverCeiling(before, after))
     val collected: Map[(String, Int), Option[Double]] = if (useDriverTail) {
       // Numeric side: the SAME binIdx expression feeds a flat codegen
       // count-if aggregate (one count per (column, bin)) instead of the
@@ -1112,8 +1099,8 @@ object Drift {
           a
         }.toArray
       }
-      val ((pb, pa), jsSides) = inParallel(
-        inParallel(psiBinCounts(before), psiBinCounts(after)),
+      val ((pb, pa), jsSides) = Par.both(
+        Par.both(psiBinCounts(before), psiBinCounts(after)),
         collectCatSides(before, after, catCols))
       val psiCounts: Map[Int, Map[Int, (Long, Long)]] =
         numCols.indices.map { i =>
@@ -1151,14 +1138,12 @@ object Drift {
   }
 
   /** js rows for [[driftAllExtended]]'s single-family fallback. */
-  private def jsMultiRows(before: DataFrame, after: DataFrame,
-                          catCols: Seq[String]): Seq[(String, String, Option[Double])] = {
+  private def jsMultiRows(before: DataFrame, after: DataFrame, catCols: Seq[String],
+                          driverTail: Option[Boolean]): Seq[(String, String, Option[Double])] = {
     if (catCols.isEmpty) return Seq.empty
     // same tail dispatch as the fused form: side counts in Spark, the
     // ordered term sum on the driver below the ceiling
-    val useDriverTail =
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes
+    val useDriverTail = driverTail.getOrElse(underDriverCeiling(before, after))
     val jsByCi: Map[Int, Option[Double]] =
       if (useDriverTail)
         jsCountsDriver(collectCatSides(before, after, catCols))
@@ -1199,10 +1184,8 @@ object Drift {
     // driftAllExtended's: bounded inputs ⇒ the exact grouped counts
     // collect and the driver twin computes the ordered term sum
     // bit-identically; above the ceiling the windowed plan runs.
-    val useDriverTail = driverTail.getOrElse(
-      before.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes &&
-        after.queryExecution.optimizedPlan.stats.sizeInBytes <= KsDriverMaxBytes)
-    val (ksByCol, chiByCi) = inParallel(
+    val useDriverTail = driverTail.getOrElse(underDriverCeiling(before, after))
+    val (ksByCol, chiByCi) = Par.both(
       ksStatisticMulti(before, after, numCols, roundTo = Some(6)),
       if (catCols.isEmpty) Map.empty[Int, Option[Double]]
       else if (useDriverTail)

@@ -222,52 +222,19 @@ object Exact {
         .otherwise(stdDouble(s1, s2, n, n.cast("double"))))
   }
 
-  /** Exact linear-interpolated quantiles of a ≤2-decimal column via a
-    * CENTS HISTOGRAM: one map-side-combinable groupBy on the distinct cent
-    * values (small at any table size when the value domain is bounded),
-    * then the standard h = p·(n−1) interpolation on the driver — the same
-    * formula Spark's `percentile` and DuckDB's `quantile_cont` use, so
-    * results are bit-identical. At 600k rows this replaces a 3–4 s
-    * all-values aggregate buffer with a ~0.3 s histogram; at 100 TB it's
-    * the difference between shuffling every value and shuffling the value
-    * DOMAIN. */
-  def quantilesViaCentsHistogram(df: org.apache.spark.sql.DataFrame, c: String,
-                                 probs: Seq[Double]): Seq[Double] = {
-    val hist = df.select(cents(col(c)).as("b"))
-      .filter(col("b").isNotNull)
-      .groupBy("b").agg(count(lit(1)).as("cnt"))
-      .orderBy("b").collect()
-    val n = hist.map(_.getLong(1)).sum
-    if (n == 0) return probs.map(_ => Double.NaN)
-    val cum = hist.map(_.getLong(1)).scanLeft(0L)(_ + _).tail
-    def valueAt(r: Long): Double = {
-      val i = {
-        val j = java.util.Arrays.binarySearch(cum, r + 1)
-        if (j >= 0) j else -j - 1
-      }
-      hist(i).getLong(0) / 100.0
-    }
-    probs.map { p =>
-      val h = p * (n - 1)
-      val lo = valueAt(math.floor(h).toLong)
-      if (h == math.floor(h)) lo
-      else {
-        val hi = valueAt(math.floor(h).toLong + 1)
-        interp(lo, hi, h - math.floor(h))
-      }
-    }
-  }
-
   /** DuckDB quantile_cont's EXACT interpolation: lo·(1−f) + hi·f. The
     * algebraically-equal lo+(hi−lo)·f differs by 1 ulp for some inputs
     * (observed at sf0.1), which flips a %.2f bin label across a rounding
     * boundary — formula shape matters, not just the math. */
   def interp(lo: Double, hi: Double, f: Double): Double = lo * (1 - f) + hi * f
 
-  /** [[quantilesViaCentsHistogram]] without the full-histogram collect:
-    * the cumulative walk happens inside the plan (ordered window over the
+  /** Exact linear-interpolated quantiles of a ≤2-decimal column via a
+    * CENTS HISTOGRAM: one map-side-combinable groupBy on the distinct cent
+    * values (small at any table size when the value domain is bounded).
+    * The cumulative walk happens inside the plan (ordered window over the
     * histogram) and only the ≤ 2·|probs| crossing bins come back to the
-    * driver. Same bit-exact interpolation (h = p·(n−1), lo+(hi−lo)·frac).
+    * driver. Same bit-exact interpolation as Spark's `percentile` and
+    * DuckDB's `quantile_cont` (h = p·(n−1), then [[interp]]).
     *
     * The global-order window runs in one task, but over the VALUE DOMAIN
     * (distinct cents), not the data — bounded regardless of table size,

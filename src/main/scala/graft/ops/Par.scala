@@ -19,8 +19,53 @@ import org.apache.spark.sql.DataFrame
   * added. It exists for the opposite regime — plenty of cores, few
   * splits — where one 30 MB shuffle buys a 32× speedup on the compute
   * stage.
+  *
+  * It is also the ONE place driver code runs Spark actions concurrently
+  * ([[both]] / [[all]]): actions are only sequential because the driver
+  * calls them sequentially, so independent jobs submitted from separate
+  * driver threads overlap on the cluster.
   */
 object Par {
+
+  private val forks = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run `body` on a FRESH daemon thread; the returned thunk joins it and
+    * yields its outcome. Fresh, not pooled: Spark's local properties (job
+    * group, scheduler pool, any tracing tag) and the active session are
+    * InheritableThreadLocals, copied once when a thread is created — a
+    * pooled thread would keep the values of whichever caller created it,
+    * a fresh one always sees the current caller's. */
+  private def fork[A](body: => A): () => Either[Throwable, A] = {
+    var out: Either[Throwable, A] = null
+    val t = new Thread(() => out = attempt(body), s"graft-par-${forks.incrementAndGet()}")
+    t.setDaemon(true)
+    t.start()
+    () => { t.join(); out } // join orders the write before this read
+  }
+
+  private def attempt[A](body: => A): Either[Throwable, A] =
+    try Right(body) catch { case e: Throwable => Left(e) }
+
+  /** Evaluate `fa` on the calling thread and `fb` on a forked one,
+    * concurrently; both finish before this returns. A failure rethrows
+    * the original exception (`fa`'s first if both fail). */
+  def both[A, B](fa: => A, fb: => B): (A, B) = {
+    val b = fork(fb)
+    val a = attempt(fa)
+    val bOut = b()
+    (a.toTry.get, bOut.toTry.get)
+  }
+
+  /** [[both]] for any number of thunks: the first runs on the calling
+    * thread, each other on its own forked thread; results in input order,
+    * the first failure (in input order) rethrown after all have joined. */
+  def all[A](thunks: Seq[() => A]): Seq[A] =
+    if (thunks.isEmpty) Seq.empty
+    else {
+      val rest = thunks.tail.map(t => fork(t())).toList
+      val head = attempt(thunks.head())
+      (head :: rest.map(_())).map(_.toTry.get)
+    }
 
   /** Repartition `df` to the session's default parallelism iff its
     * planned RDD has fewer than half that many partitions. Plans (but

@@ -34,7 +34,7 @@ object Profile {
   private val DriverSortMaxCells = 8_000_000L
 
   /** Fan-out floor: below this many rows the per-row work can't repay an
-    * exchange (the r10 DevScanSplit lesson — forced parallelism taxed
+    * exchange (the r10 scan-split measurement — forced parallelism taxed
     * every sub-second query 20–80%), so small inputs stay exchange-free. */
   private val FanOutMinRows = 200000L
 
@@ -43,7 +43,7 @@ object Profile {
     * so a single-row-group file runs any downstream projection single-
     * threaded however many cores exist — at sf0.1 that serialized the
     * entire cents+moments pass of the a1 profile on one core (measured
-    * 1.58 → 1.16 s min by DevMomentsAB r11 with the exchange; the
+    * 1.58 → 1.16 s min in the r11 moments A/B with the exchange; the
     * shuffled payload is only the PRUNED numeric columns). Footer-gated
     * (no job): fires only when the scan's row-group parallelism ceiling
     * is under a QUARTER of the machine and the input is big enough to

@@ -44,7 +44,7 @@ class SourceSweepSpec extends AnyFunSuite {
     // (bounded inputs ⇒ bounded category domains; above it the windowed
     // plan tail runs and neither site executes), reviewed
     "ops/Drift.scala" -> (9, 3),
-    "ops/Exact.scala" -> (5, 1),
+    "ops/Exact.scala" -> (4, 1),
     // r14 +2 collects: collectRawState's per-column parallel path (one
     // RDD collect per fitted column) — both behind the DriverFitMaxCells
     // dispatch, same boundedness as the fused collect they replace
@@ -62,19 +62,26 @@ class SourceSweepSpec extends AnyFunSuite {
     name.startsWith("Dev") || Seq("Bench.scala", "Verify.scala",
       "DemoPipeline.scala").contains(name)
 
-  test("driver-collect and broadcast-hint sites match the reviewed record") {
+  /** repo-relative path → non-comment lines, over every in-scope file. */
+  private def codeFiles: Seq[(String, Seq[String])] = {
     import scala.jdk.CollectionConverters._
-    val actual = java.nio.file.Files.walk(Root).iterator().asScala
+    java.nio.file.Files.walk(Root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && !excluded(p.getFileName.toString))
-      .flatMap { p =>
-        val code = java.nio.file.Files.readAllLines(p).asScala
+      .map { p =>
+        Root.relativize(p).toString -> java.nio.file.Files.readAllLines(p).asScala.toSeq
           .map(_.trim).filterNot(l => l.startsWith("//") || l.startsWith("*"))
-        val collects = code.map(l =>
-          l.sliding(".collect()".length).count(_ == ".collect()")).sum
-        val bcasts = code.map(l =>
-          l.sliding("broadcast(".length).count(_ == "broadcast(")).sum
+      }.toSeq
+  }
+
+  private def occurrences(line: String, s: String): Int = line.sliding(s.length).count(_ == s)
+
+  test("driver-collect and broadcast-hint sites match the reviewed record") {
+    val actual = codeFiles
+      .flatMap { case (f, code) =>
+        val collects = code.map(occurrences(_, ".collect()")).sum
+        val bcasts = code.map(occurrences(_, "broadcast(")).sum
         if (collects == 0 && bcasts == 0) None
-        else Some(Root.relativize(p).toString -> (collects, bcasts))
+        else Some(f -> (collects, bcasts))
       }.toMap
     val drift = (actual.keySet ++ Recorded.keySet).toSeq.sorted.flatMap { f =>
       val a = actual.getOrElse(f, (0, 0))
@@ -87,5 +94,17 @@ class SourceSweepSpec extends AnyFunSuite {
         "review each NEW site for boundedness (ceiling / fit-size / maybeBroadcast\n" +
         "gate), then update SourceSweepSpec.Recorded in the same commit:\n" +
         drift.mkString("\n"))
+  }
+
+  // Concurrent Spark actions go through graft.ops.Par.both / Par.all,
+  // whose fresh threads inherit the caller's local properties; an ad-hoc
+  // pool or execution context would run jobs under a stale job group.
+  test("no thread pool or ExecutionContext outside ops/Par.scala") {
+    val sites = codeFiles.filter(_._1 != "ops/Par.scala").flatMap { case (f, code) =>
+      val n = code.map(l => occurrences(l, "Executors.new") + occurrences(l, "ExecutionContext")).sum
+      if (n == 0) None else Some(s"  $f: $n")
+    }
+    assert(sites.isEmpty,
+      "run concurrent driver work through graft.ops.Par instead of:\n" + sites.mkString("\n"))
   }
 }

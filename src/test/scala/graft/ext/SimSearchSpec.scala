@@ -88,7 +88,7 @@ class SimSearchSpec extends SparkSpec {
     val exactTop = SimSearch.cosineTopK(q, e, 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     // m=32 (2 dims/subspace, 8× compression) is the measured operating
-    // point for this near-uniform fixture: DevPqProbe recall@5 = 26/50
+    // point for this near-uniform fixture: the r7 m/ksub sweep measured recall@5 = 26/50
     // here vs 9/50 at the classic m=8 32×-compression config — PQ's
     // compression/recall dial, documented by measurement
     val pq = SimSearch.pqTopK(q, e, 5, m = 32, ksub = 16).collect()

@@ -257,41 +257,44 @@ class DriftSpec extends SparkSpec {
   }
 
   test("driftAll / driftAllExtended: driver tail and windowed plan tail agree bit-exactly") {
-    val li = graft.Tables.lineitem(spark, Sf)
-    val after = li.filter(col("l_orderkey") % 2 === 1).drop("l_tax")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Any)] =
       df.collect().toSeq.map(r => (r.getString(0), r.getString(1),
         if (r.isNullAt(2)) null else r.getDouble(2)))
-    // the exact d3/d_drift_extended catalog shapes, both tails
-    val d3d = rows(Drift.driftAll(li, after, driverTail = Some(true)))
-    val d3p = rows(Drift.driftAll(li, after, driverTail = Some(false)))
-    assert(d3d == d3p, s"\ndriver: $d3d\nplan:   $d3p")
-    val dxd = rows(Drift.driftAllExtended(li, after, driverTail = Some(true)))
-    val dxp = rows(Drift.driftAllExtended(li, after, driverTail = Some(false)))
-    assert(dxd == dxp, s"\ndriver: $dxd\nplan:   $dxp")
+    def agree(b: org.apache.spark.sql.DataFrame, a: org.apache.spark.sql.DataFrame): Unit = {
+      val d3d = rows(Drift.driftAll(b, a, driverTail = Some(true)))
+      val d3p = rows(Drift.driftAll(b, a, driverTail = Some(false)))
+      assert(d3d == d3p, s"\ndriver: $d3d\nplan:   $d3p")
+      val dxd = rows(Drift.driftAllExtended(b, a, driverTail = Some(true)))
+      val dxp = rows(Drift.driftAllExtended(b, a, driverTail = Some(false)))
+      assert(dxd == dxp, s"\ndriver: $dxd\nplan:   $dxp")
+    }
+    // the exact d3/d_drift_extended catalog shapes
+    val li = graft.Tables.lineitem(spark, Sf)
+    val after = li.filter(col("l_orderkey") % 2 === 1).drop("l_tax")
+    agree(li, after)
+    // numeric-only: driftAllExtended's single-family psiMulti leg
+    val num = Seq("l_quantity", "l_extendedprice", "l_discount")
+    agree(li.select(num.map(col): _*), after.select(num.map(col): _*))
     // nulls bucketing + an all-null column + empty after side
     val b2 = Seq((Some("a"), Some(1.0)), (None, None), (Some("b"), Some(2.0)))
       .toDF("k", "v")
     val a2 = Seq((Some("b"), Some(2.0)), (Some("c"), None), (None, Some(3.0)))
       .toDF("k", "v")
-    assert(rows(Drift.driftAll(b2, a2, driverTail = Some(true))) ==
-      rows(Drift.driftAll(b2, a2, driverTail = Some(false))))
-    assert(rows(Drift.driftAllExtended(b2, a2, driverTail = Some(true))) ==
-      rows(Drift.driftAllExtended(b2, a2, driverTail = Some(false))))
-    val empty = b2.filter(lit(false))
-    assert(rows(Drift.driftAll(b2, empty, driverTail = Some(true))) ==
-      rows(Drift.driftAll(b2, empty, driverTail = Some(false))))
-    assert(rows(Drift.driftAllExtended(b2, empty, driverTail = Some(true))) ==
-      rows(Drift.driftAllExtended(b2, empty, driverTail = Some(false))))
+    agree(b2, a2)
+    agree(b2, b2.filter(lit(false)))
     // byte-order-sensitive keys (supplementary plane sorts AFTER ￿ in
     // UTF-8 byte order but BEFORE it in UTF-16 order — the twin must walk
     // the plan's byte order) + a negative-JS-term shape (max ≠ last)
-    val b3 = Seq("￿", "😀", "a", "a", "a", "z").toDF("k")
-    val a3 = Seq("😀", "😀", "a", "z", "z", "q").toDF("k")
-    assert(rows(Drift.driftAll(b3, a3, driverTail = Some(true))) ==
-      rows(Drift.driftAll(b3, a3, driverTail = Some(false))))
-    assert(rows(Drift.driftAllExtended(b3, a3, driverTail = Some(true))) ==
-      rows(Drift.driftAllExtended(b3, a3, driverTail = Some(false))))
+    agree(Seq("￿", "😀", "a", "a", "a", "z").toDF("k"),
+      Seq("😀", "😀", "a", "z", "z", "q").toDF("k"))
+    // distinct invalid-UTF-8 keys: 0xC3 and 0xC0 both decode leniently to
+    // U+FFFD, but the plan groups them apart — so must the driver tail, in
+    // the categorical-only and the mixed-family shapes
+    def keys(hex: String*) = hex.toDF("h").select(unhex(col("h")).cast("string").as("k"))
+    val b4 = keys("C3", "C3", "C0", "61")
+    val a4 = keys("C3", "C0", "C0", "61", "61")
+    agree(b4, a4)
+    agree(b4.withColumn("v", lit(1.0)), a4.withColumn("v", lit(2.0)))
   }
 
   test("driftAll: dispatch + silent skip of columns missing in after") {
