@@ -5,12 +5,17 @@ import graft.io.{Csv, YamlConfig}
 import graft.io.YamlConfig.PipelineConfig
 import java.time.Instant
 
-/** End-to-end 6-step pipeline on the reference's own sample fixtures
-  * (FIXTURES.md §1) — the "switch from the reference" scenario. */
+/** End-to-end 6-step pipeline on a repo-held sample pair in the shape of
+  * the reference's own samples (FIXTURES.md §1; made by
+  * `dev/make_reference_sample.py`, not the reference's bytes) — the
+  * "switch from the reference" scenario. */
 class GraftSessionSpec extends SparkSpec {
 
-  private lazy val real = Csv.read(spark, "/root/reference/sample_real.csv")
-  private lazy val anon = Csv.read(spark, "/root/reference/sample_anon.csv")
+  private def sample(name: String): String =
+    new java.io.File(getClass.getResource(s"/reference_sample/$name").toURI).getPath
+
+  private lazy val real = Csv.read(spark, sample("sample_real.csv"))
+  private lazy val anon = Csv.read(spark, sample("sample_anon.csv"))
 
   test("S1 csv inference matches the expected schema") {
     assert(real.schema.map(_.name) ==
