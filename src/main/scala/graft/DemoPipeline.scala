@@ -5,7 +5,7 @@ import graft.core.GraftSession
 import graft.io.{Csv, YamlConfig}
 
 /** Runnable walkthrough of the 6-step reference pipeline
-  * (`/root/reference/app.py:104` Upload → Risk → Protect → Utility →
+  * (reference `app.py:104` Upload → Risk → Protect → Utility →
   * Compliance → Report), re-expressed on this engine — the README
   * quickstart executes exactly this file.
   *
@@ -93,10 +93,12 @@ object DemoPipeline {
     require(reloaded == cfg, "config YAML round-trip must be lossless")
     println(s"[demo] config round-trip OK → $cfgPath")
 
-    // ── Step 3: Protect — the FUSED auto path (V5 suggestions + V1
-    //    suppression + V2 generalization + V3 DP noise from ONE fit scan);
-    //    s.protect(reloaded) is the explicit-config form of the same step
-    val prot = s.protectAuto(sdcThreshold = 5, bins = 10, epsilon = 1.0)
+    // ── Step 3: Protect with the round-tripped config (V1 suppression on
+    //    gender, V2 generalization on income, V3 DP noise on age). The
+    //    label column `target` stays untouched, so the D4 model check in
+    //    step 4 scores the protected features; s.protectAuto() is the
+    //    suggestion-driven form, which would also noise `target`
+    val prot = s.protect(reloaded)
     println("[demo] protected preview:")
     prot.show(3, truncate = false)
 

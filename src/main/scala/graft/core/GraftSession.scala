@@ -15,8 +15,9 @@ import java.time.Instant
   * over materialized copies.
   *
   * Every step returns lazy plans where the semantics allow; the only
-  * eager points are fitted parameters (quantile edges, moments, distinct
-  * categories — all tiny) and the report's bounded previews. A user of
+  * eager points are fitted parameters (quantile edges, moments, rare
+  * sets, distinct categories — all small) and the report's bounded
+  * previews. A user of
   * the reference switches by constructing a session and calling the same
   * six steps.
   */
@@ -46,13 +47,21 @@ final class GraftSession(val spark: SparkSession) {
     res
   }
 
-  /** Step 3 — protect: V5-suggested or explicit config through V1→V2→V3
-    * (→V4), one lazy plan end to end. */
+  /** Step 3 — protect with an explicit config: V1 → V2 → V3 (→ V4).
+    * Each step fits first, then applies as a projection: V1 collects
+    * each column's rare set ([[graft.ops.Privacy.sdcSuppressAuto]]), V2
+    * fits its quantile edges on the already-suppressed frame, and V3
+    * noise is a column expression. The returned plan is therefore the
+    * scan under one Project, and every later reader (utility fits,
+    * counts, previews, a CSV publish) re-runs no fit. The fits are eager:
+    * one grouped-count job per suppressed column, the V2 dispatch and
+    * edge jobs per generalized column. A suppressed column whose rare set
+    * passes [[graft.ops.Privacy.SuppressFitMaxValues]] keeps the lazy
+    * broadcast-join form. V4 synthesis (when asked for) fits on the
+    * transformed frame. */
   def protect(config: PipelineConfig): DataFrame = {
     val a = anon.getOrElse(sys.error("no anon dataset uploaded"))
-    var df = a
-    if (config.sdcCols.nonEmpty)
-      df = Privacy.sdcSuppressBroadcast(df, config.sdcCols, config.sdcThreshold)
+    var df = Privacy.sdcSuppressAuto(a, config.sdcCols, config.sdcThreshold)
     config.generalizeCols.foreach { c =>
       // Auto-detect: cents-histogram quantiles only when the column
       // verifiably has ≤2 decimals and fits DECIMAL(18,2); arbitrary
@@ -74,9 +83,11 @@ final class GraftSession(val spark: SparkSession) {
     * fitting plus the single transform pass — instead of a counting scan
     * per operator (V5 sweep + V1 group counts + V2 percentile fit).
     * Synthesis (when requested) still fits separately because it must
-    * observe the TRANSFORMED frame. Driver-fit regime; beyond the
-    * documented ceiling use [[protect]] whose per-operator distributed
-    * fits are individually scale-safe. */
+    * observe the TRANSFORMED frame. Applies through the same `*Fitted`
+    * projections as [[protect]]. Driver-fit regime (the fit holds every
+    * column's values and vocabulary on the driver); beyond the documented
+    * ceiling use [[protect]], whose per-column fits are distributed
+    * aggregates with bounded collects. */
   def protectAuto(sdcThreshold: Long = 5, bins: Int = 10,
                   epsilon: Double = 1.0, sensitivity: Double = 1.0,
                   seed: Long = 42L, synthetic: Boolean = false): DataFrame = {

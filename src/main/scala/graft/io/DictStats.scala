@@ -48,8 +48,9 @@ object DictStats {
   /** Max files this will read footers for before declaring the input
     * metadata-unprovable — footer IO is per-file driver work, and a
     * genuinely huge table should take its scan-side path rather than
-    * serialize a million footer reads on the driver. */
-  private val MaxFiles = 256
+    * serialize a million footer reads on the driver. The footer readers
+    * in [[ScanStats]] share this ceiling. */
+  private[io] val MaxFiles = 256
 
   /** For each asked `column -> T`, a PROVEN answer to
     * `count(DISTINCT column) > T` (SQL semantics: nulls excluded, NaNs

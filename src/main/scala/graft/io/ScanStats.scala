@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Driver-side scan statistics read from FILE METADATA — no Spark job.
@@ -46,33 +46,8 @@ object ScanStats {
     * this answers from metadata what [[exactRowCount]] needs a zero-column
     * count job for — the conservative direction (bound above actual) only
     * costs the slower-but-exact branch, never correctness. */
-  def parquetScanRowUpperBound(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    def unwrap(p: LogicalPlan): LogicalPlan = p match {
-      case Project(exprs, child) if exprs.forall(_.deterministic) => unwrap(child)
-      case SubqueryAlias(_, child) => unwrap(child)
-      case Filter(_, child)        => unwrap(child)
-      case other => other
-    }
-    unwrap(df.queryExecution.optimizedPlan) match {
-      case rel: LogicalRelation => rel.relation match {
-        case fs: HadoopFsRelation
-            if fs.fileFormat.getClass.getName.toLowerCase.contains("parquet") =>
-          val conf = df.sparkSession.sessionState.newHadoopConf()
-          try {
-            var rows = 0L
-            fs.location.inputFiles.foreach { f =>
-              val reader = ParquetFileReader.open(
-                HadoopInputFile.fromPath(new Path(f), conf))
-              try rows += reader.getRecordCount finally reader.close()
-            }
-            Some(rows)
-          } catch { case _: Exception => None }
-        case _ => None
-      }
-      case _ => None
-    }
-  }
+  def parquetScanRowUpperBound(df: DataFrame): Option[Long] =
+    footerFiles(df, throughFilters = true).flatMap(footerTotals(df, _)).map(_._1)
 
   /** The scanned parquet files when `df` is a pure scan whose projections
     * only prune or rename columns (plain attribute lists — no computed
@@ -112,7 +87,8 @@ object ScanStats {
     import org.apache.spark.sql.types._
     if (cols.isEmpty) return Some(Map.empty)
     try {
-      val files = pureParquetInputFiles(df).getOrElse(return None)
+      val files = pureParquetInputFiles(df)
+        .filter(_.length <= DictStats.MaxFiles).getOrElse(return None)
       val schema = df.schema
       if (!cols.forall(c => schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
@@ -166,34 +142,49 @@ object ScanStats {
     * driver-side signal for "this scan cannot use the machine" dispatch
     * (e.g. [[graft.ops.Profile]]'s narrow fan-out before heavy per-row
     * projections). */
-  def parquetScanLayout(df: DataFrame): Option[(Long, Int)] = {
+  def parquetScanLayout(df: DataFrame): Option[(Long, Int)] =
+    footerFiles(df, throughFilters = false).flatMap(footerTotals(df, _))
+
+  /** The parquet files under `df` when its optimized plan is a scan under
+    * deterministic Projects and aliases (and Filters, if
+    * `throughFilters`), and there are at most [[DictStats.MaxFiles]] of
+    * them: every footer reader here opens each file on the driver, so a
+    * table of more files answers None and its caller takes the scan-side
+    * fallback. */
+  private def footerFiles(df: DataFrame, throughFilters: Boolean): Option[Seq[String]] = {
     def unwrap(p: LogicalPlan): LogicalPlan = p match {
       // a Project can only prune/rename columns — row-preserving
       case Project(exprs, child) if exprs.forall(_.deterministic) => unwrap(child)
       case SubqueryAlias(_, child) => unwrap(child)
+      case Filter(_, child) if throughFilters => unwrap(child)
       case other => other
     }
     unwrap(df.queryExecution.optimizedPlan) match {
       case rel: LogicalRelation => rel.relation match {
         case fs: HadoopFsRelation
             if fs.fileFormat.getClass.getName.toLowerCase.contains("parquet") =>
-          val conf = df.sparkSession.sessionState.newHadoopConf()
-          try {
-            var rows = 0L
-            var groups = 0
-            fs.location.inputFiles.foreach { f =>
-              val reader = ParquetFileReader.open(
-                HadoopInputFile.fromPath(new Path(f), conf))
-              try {
-                rows += reader.getRecordCount
-                groups += reader.getRowGroups.size()
-              } finally reader.close()
-            }
-            Some((rows, groups))
-          } catch { case _: Exception => None } // unreadable footer → fallback
+          Some(fs.location.inputFiles.toSeq).filter(_.length <= DictStats.MaxFiles)
         case _ => None
       }
       case _ => None
     }
+  }
+
+  /** (row count, row-group count) summed over the files' footers; None
+    * when a footer is unreadable. */
+  private def footerTotals(df: DataFrame, files: Seq[String]): Option[(Long, Int)] = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    try {
+      var rows = 0L
+      var groups = 0
+      files.foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+        try {
+          rows += reader.getRecordCount
+          groups += reader.getRowGroups.size()
+        } finally reader.close()
+      }
+      Some((rows, groups))
+    } catch { case _: Exception => None } // unreadable footer → fallback
   }
 }

@@ -21,9 +21,9 @@ import org.apache.spark.sql.DataFrame
   * stage.
   *
   * It is also the ONE place driver code runs Spark actions concurrently
-  * ([[both]] / [[all]]): actions are only sequential because the driver
-  * calls them sequentially, so independent jobs submitted from separate
-  * driver threads overlap on the cluster.
+  * ([[both]] / [[all]] / [[map]]): actions are only sequential because
+  * the driver calls them sequentially, so independent jobs submitted from
+  * separate driver threads overlap on the cluster.
   */
 object Par {
 
@@ -66,6 +66,20 @@ object Par {
       val head = attempt(thunks.head())
       (head :: rest.map(_())).map(_.toTry.get)
     }
+
+  /** `f` over `items` on at most `width` threads at once (the caller's
+    * among them), each taking the next unclaimed item: a bounded fan-out
+    * for per-column Spark jobs, whose count can far exceed the cores.
+    * Results keep input order; the first failure (in worker order) is
+    * rethrown after all workers have joined. */
+  def map[A, B](items: Seq[A], width: Int)(f: A => B): Seq[B] = {
+    val in = items.toIndexedSeq
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    all(Seq.fill(math.min(math.max(width, 1), in.size))(() =>
+      Iterator.continually(next.getAndIncrement()).takeWhile(_ < in.size)
+        .map(i => i -> f(in(i))).toList))
+      .flatten.sortBy(_._1).map(_._2)
+  }
 
   /** Repartition `df` to the session's default parallelism iff its
     * planned RDD has fewer than half that many partitions. Plans (but

@@ -9,10 +9,11 @@ import scala.collection.parallel.CollectionConverters._
 /** Anonymization operators (SURVEY.md §2.5 V1–V5, V7) — the reference
   * engine's signature capability (`modules/privacy.py`).
   *
-  * Everything is a lazy Column-expression plan: a full Protect chain
-  * (suppress → generalize → noise) fuses into one whole-stage-codegen pass
-  * plus at most one shuffle per suppressed column — vs the reference's full
-  * table copy per stage (`modules/privacy.py:5,14,25`).
+  * Each transform splits into a fit (rare sets, quantile edges: small
+  * driver-side values) and an apply half that is a plain Column
+  * expression, so a full Protect chain (suppress → generalize → noise)
+  * runs as one whole-stage-codegen projection over the scan — vs the
+  * reference's full table copy per stage (`modules/privacy.py:5,14,25`).
   */
 object Privacy {
 
@@ -56,16 +57,42 @@ object Privacy {
     }
   }
 
-  /** V2 numeric generalization by empirical quantile binning
-    * (`modules/privacy.py:13-22`). Bin edges are EXACT percentiles
-    * (sort-based `percentile`, not approx — SURVEY §4.3); duplicate edges
-    * are merged as `pd.qcut(duplicates="drop")` does. Labels follow the
-    * declared labels-as-truth convention (SURVEY §4.4.3): left-closed
-    * `[lo, hi)`, last bin closed, bounds printed with 2 decimals.
+  /** Ceiling on a fitted rare set in [[sdcSuppressAuto]]. The set rides
+    * every task of the apply pass as an `InSet` literal, so a column with
+    * more rare values than this keeps [[sdcSuppressBroadcast]], whose
+    * rare set stays a broadcast relation. */
+  val SuppressFitMaxValues = 10000
+
+  /** V1 fit-then-project, the suppress step of
+    * [[graft.core.GraftSession.protect]]: per string column of `cols`,
+    * one grouped-count job collects the non-null values counted below
+    * `threshold` (at most [[SuppressFitMaxValues]] + 1 rows reach the
+    * driver), then [[sdcSuppressFitted]] applies the set as a plain
+    * projection, so later readers of the output re-run no aggregate and
+    * no join. Up to one column per core fits at once. A column whose
+    * rare set passes the ceiling takes [[sdcSuppressBroadcast]] instead.
     *
-    * The edge list is tiny (≤ bins+1 doubles) — collected to the driver
-    * and compiled into a when-chain, which codegens into the scan pass.
-    */
+    * Same rows and values as [[sdcSuppressBroadcast]]: a rare NULL group
+    * stays null there (its `<=>` join matches, but the matched key is
+    * itself null), so nulls are left out of the fitted set. */
+  def sdcSuppressAuto(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
+    val strCols = df.schema.fields
+      .filter(f => cols.contains(f.name) && f.dataType == StringType)
+      .map(_.name).toSeq
+    val rareSets = Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
+      val rare = df.filter(col(c).isNotNull)
+        .groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
+        .filter(col("__cnt") < threshold)
+        .select(col(c)).limit(SuppressFitMaxValues + 1)
+        .collect().map(_.getString(0))
+      if (rare.length > SuppressFitMaxValues) None else Some(rare.toSet)
+    }
+    strCols.zip(rareSets).foldLeft(df) {
+      case (d, (c, Some(rare))) => sdcSuppressFitted(d, c, rare, nullRare = false)
+      case (d, (c, None))       => sdcSuppressBroadcast(d, Seq(c), threshold)
+    }
+  }
+
   /** Quantile-edge strategies for [[generalizeNumeric]]:
     *  - [[QuantileStrategy.CentsHistogram]]: distributed histogram over the
     *    value DOMAIN; the scale path, valid for ≤2-decimal columns only
@@ -84,10 +111,27 @@ object Privacy {
     case object SortPercentile extends QuantileStrategy
   }
 
+  /** V2 numeric generalization by empirical quantile binning
+    * (`modules/privacy.py:13-22`). Bin edges are EXACT percentiles
+    * (sort-based `percentile`, not approx — SURVEY §4.3); duplicate edges
+    * are merged as `pd.qcut(duplicates="drop")` does. Labels follow the
+    * declared labels-as-truth convention (SURVEY §4.4.3): left-closed
+    * `[lo, hi)`, last bin closed, bounds printed with 2 decimals.
+    *
+    * Fit, then apply: [[generalizeEdges]] collects the tiny edge list
+    * (≤ bins+1 doubles) to the driver and [[generalizeFitted]] compiles
+    * it into a when-chain, which codegens into the scan pass. */
   def generalizeNumeric(df: DataFrame, c: String, bins: Int = 10,
-                        strategy: QuantileStrategy = QuantileStrategy.CentsHistogram): DataFrame = {
+                        strategy: QuantileStrategy = QuantileStrategy.CentsHistogram): DataFrame =
+    generalizeFitted(df, c, generalizeEdges(df, c, bins, strategy))
+
+  /** The fit half of [[generalizeNumeric]]: the raw `bins + 1` quantile
+    * edges of `c` under `strategy`, before duplicate-merging (which
+    * [[generalizeFitted]] does). */
+  def generalizeEdges(df: DataFrame, c: String, bins: Int,
+                      strategy: QuantileStrategy): Seq[Double] = {
     val probs = (0 to bins).map(i => i.toDouble / bins)
-    val raw: Seq[Double] = strategy match {
+    strategy match {
       case QuantileStrategy.CentsHistogram =>
         // bucketed two-pass plan (no single-task window over the value
         // domain); falls back to the legacy ordered-window form only when
@@ -101,11 +145,6 @@ object Privacy {
         df.agg(expr(s"percentile($c, array(${probs.mkString("D,")}D))").as("q"))
           .head().getSeq[Double](0)
     }
-    if (raw.exists(_.isNaN)) return df.withColumn(c, lit(null).cast("string"))
-    val edges = raw.distinct
-    if (edges.length < 2) return df.withColumn(c, lit(null).cast("string"))
-    val labeled = labelExpr(col(c), edges)
-    df.withColumn(c, labeled)
   }
 
   /** [[generalizeNumeric]] with the quantile strategy chosen from the DATA
@@ -118,10 +157,10 @@ object Privacy {
     * shuffles only the value DOMAIN. Arbitrary CSV columns with >2
     * decimal places must never be binned on cents-rounded values. */
   def generalizeNumericAuto(df: DataFrame, c: String, bins: Int = 10): DataFrame =
-    generalizeNumeric(df, c, bins,
+    generalizeFitted(df, c, generalizeEdges(df, c, bins,
       if (!Exact.centsEligible(df, c)) QuantileStrategy.SortPercentile
       else if (driverFits(df, nCols = 1)) QuantileStrategy.DriverSort
-      else QuantileStrategy.CentsHistogram)
+      else QuantileStrategy.CentsHistogram))
 
   /** C-printf-compatible "%.2f": round the EXACT binary value of the
     * double half-to-even, as C (and DuckDB's printf) does. Java's own
@@ -365,18 +404,15 @@ object Privacy {
         val prevFloor = sconf.getOption("spark.sql.files.minPartitionNum")
         try {
           sconf.set("spark.sql.files.minPartitionNum", layout.get._2.toString)
-          // at most `cores` forks, each pulling the next column off a
-          // shared index: one fork per column at once measured slower on
-          // the pipeline benchmark (4 of 4 pairs, 0.3-1.7 s per op, 4 cores)
-          val cols = (numNames.map(Left(_): Either[String, String]) ++
-            catNames.map(Right(_): Either[String, String])).toIndexedSeq
-          val next = new java.util.concurrent.atomic.AtomicInteger()
-          val fitted = Par.all(Seq.fill(math.min(cores, cols.size))(() =>
-            Iterator.continually(next.getAndIncrement()).takeWhile(_ < cols.size)
-              .map(i => cols(i) match {
-                case Left(c)  => Left(c -> collectNum(c))
-                case Right(c) => Right(c -> collectCat(c))
-              }).toList)).flatten
+          // at most `cores` columns at once: one fork per column measured
+          // slower on the pipeline benchmark (4 of 4 pairs, 0.3-1.7 s per
+          // op, 4 cores)
+          val cols = numNames.map(Left(_): Either[String, String]) ++
+            catNames.map(Right(_): Either[String, String])
+          val fitted = Par.map(cols, cores) {
+            case Left(c)  => Left(c -> collectNum(c))
+            case Right(c) => Right(c -> collectCat(c))
+          }
           (fitted.collect { case Left(kv) => kv }.toMap,
             fitted.collect { case Right(kv) => kv }.toMap)
         } finally prevFloor match {
@@ -1009,9 +1045,13 @@ object Privacy {
     * columns are labels by the time synthesis runs).
     *
     * Driver-fit regime only (ceiling [[DriverFitMaxCells]], same
-    * auto-dispatch contract as [[syntheticSample]]) — beyond it,
-    * [[GraftSession.protect]]'s per-operator distributed fits are each
-    * scale-safe on their own and remain the 100 TB path. */
+    * auto-dispatch contract as [[syntheticSample]]): the fit holds whole
+    * columns and vocabularies. Beyond it, [[graft.core.GraftSession.protect]]
+    * is the 100 TB path: its rare sets come from grouped-count jobs whose
+    * collect stops at [[SuppressFitMaxValues]] + 1 rows, and its edges
+    * from [[generalizeNumericAuto]]'s distributed dispatch. Both paths
+    * apply through the same [[sdcSuppressFitted]] / [[generalizeFitted]]
+    * projections. */
   final case class ProtectFit private[ops] (
       rows: Long,
       fields: Seq[StructField],
@@ -1075,8 +1115,9 @@ object Privacy {
     ProtectFit(rows, fields, numArrs, catMaps)
   }
 
-  /** V1 with a PRE-FITTED rare set (from [[ProtectFit]]): the suppress
-    * pass is a pure codegen when-chain — no counting job, no join. */
+  /** V1 apply half: a PRE-FITTED rare set (from [[ProtectFit]] or
+    * [[sdcSuppressAuto]]) as a pure codegen when-chain — no counting job,
+    * no join. `nullRare` also maps the null group to "OTHER". */
   def sdcSuppressFitted(df: DataFrame, c: String,
                         rare: Set[String], nullRare: Boolean): DataFrame = {
     val isRare =
@@ -1085,13 +1126,14 @@ object Privacy {
     df.withColumn(c, when(isRare, lit("OTHER")).otherwise(col(c)))
   }
 
-  /** V2 with PRE-FITTED raw quantile edges: duplicate-merge and
-    * degenerate-domain semantics identical to [[generalizeNumeric]]. */
+  /** V2 apply half: label `c` by PRE-FITTED raw quantile edges (from
+    * [[generalizeEdges]] or [[ProtectFit.quantileEdges]]). Duplicate
+    * edges merge as `pd.qcut(duplicates="drop")` does; no edges, a NaN
+    * edge or fewer than two distinct edges (empty or one-valued domain)
+    * label every row null. */
   def generalizeFitted(df: DataFrame, c: String, raw: Seq[Double]): DataFrame = {
-    if (raw.isEmpty || raw.exists(_.isNaN))
-      return df.withColumn(c, lit(null).cast("string"))
     val edges = raw.distinct
-    if (edges.length < 2) df.withColumn(c, lit(null).cast("string"))
+    if (raw.exists(_.isNaN) || edges.length < 2) df.withColumn(c, lit(null).cast("string"))
     else df.withColumn(c, labelExpr(col(c), edges))
   }
 }

@@ -47,8 +47,10 @@ class SourceSweepSpec extends AnyFunSuite {
     "ops/Exact.scala" -> (4, 1),
     // r14 +2 collects: collectRawState's per-column parallel path (one
     // RDD collect per fitted column) — both behind the DriverFitMaxCells
-    // dispatch, same boundedness as the fused collect they replace
-    "ops/Privacy.scala" -> (6, 1),
+    // dispatch, same boundedness as the fused collect they replace.
+    // +1 collect: sdcSuppressAuto's rare-set fit, a grouped-count collect
+    // under limit(SuppressFitMaxValues + 1) — bounded at any input size
+    "ops/Privacy.scala" -> (7, 1),
     "ops/Profile.scala" -> (2, 1),
     "ops/Relational.scala" -> (0, 9),
     "ops/RowTransforms.scala" -> (1, 3),

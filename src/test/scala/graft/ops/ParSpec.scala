@@ -30,6 +30,21 @@ class ParSpec extends SparkSpec {
     assert(Par.all(Seq.empty[() => Int]).isEmpty)
   }
 
+  test("map: at most `width` items run at once; results keep input order") {
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
+    val out = Par.map(0 until 10, 3) { i =>
+      peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      Thread.sleep(20)
+      running.decrementAndGet()
+      i * 10
+    }
+    assert(out == (0 until 10).map(_ * 10))
+    assert(peak.get() <= 3 && peak.get() >= 2, s"peak concurrency ${peak.get()}")
+    assert(Par.map(Seq(1, 2), 8)(_ + 1) == Seq(2, 3))
+    assert(Par.map(Seq.empty[Int], 4)(identity).isEmpty)
+  }
+
   test("a failure on either side surfaces as its original exception") {
     intercept[IllegalStateException](Par.both(throw new IllegalStateException("a"), 1))
     intercept[ArithmeticException](Par.both(1, throw new ArithmeticException("b")))
