@@ -63,10 +63,10 @@ object QueryCatalog {
     "p9_onehot" -> ((s, d) => p9OneHot(s, d)),
     "p9_onehot_fuzz" -> ((s, d) => p9OneHotFuzz(s, d)),
     "v1_sdc_suppress" -> ((s, d) =>
-      // window variant: supplier is small at every SF, so one count-over-
-      // partition shuffle beats the groupBy+broadcast pair of jobs; at
-      // 100 TB on a wide table, sdcSuppressBroadcast is the right form
-      // (exercised in protect() and its spec).
+      // the same fit-then-apply V1 as protect(): one grouped-count job
+      // collects the rare names, and the output is a projection over the
+      // scan; a null name group below the threshold becomes 'OTHER', as
+      // the oracle's COUNT(*) OVER (PARTITION BY s_name) counts it.
       // no output orderBy (see p_winsorize) — supplier is small, but the
       // sort still costs range-sample + sort jobs on a job-floor row
       Privacy.sdcSuppress(

@@ -49,19 +49,21 @@ final class GraftSession(val spark: SparkSession) {
 
   /** Step 3 — protect with an explicit config: V1 → V2 → V3 (→ V4).
     * Each step fits first, then applies as a projection: V1 collects
-    * each column's rare set ([[graft.ops.Privacy.sdcSuppressAuto]]), V2
+    * each column's rare set ([[graft.ops.Privacy.sdcSuppress]]), V2
     * fits its quantile edges on the already-suppressed frame, and V3
     * noise is a column expression. The returned plan is therefore the
     * scan under one Project, and every later reader (utility fits,
     * counts, previews, a CSV publish) re-runs no fit. The fits are eager:
     * one grouped-count job per suppressed column, the V2 dispatch and
-    * edge jobs per generalized column. A suppressed column whose rare set
-    * passes [[graft.ops.Privacy.SuppressFitMaxValues]] keeps the lazy
+    * edge jobs per generalized column. A null group counted below the
+    * threshold becomes "OTHER", as in [[protectAuto]]. A suppressed
+    * column whose rare set passes
+    * [[graft.ops.Privacy.SuppressFitMaxValues]] keeps the lazy
     * broadcast-join form. V4 synthesis (when asked for) fits on the
     * transformed frame. */
   def protect(config: PipelineConfig): DataFrame = {
     val a = anon.getOrElse(sys.error("no anon dataset uploaded"))
-    var df = Privacy.sdcSuppressAuto(a, config.sdcCols, config.sdcThreshold)
+    var df = Privacy.sdcSuppress(a, config.sdcCols, config.sdcThreshold)
     config.generalizeCols.foreach { c =>
       // Auto-detect: cents-histogram quantiles only when the column
       // verifiably has ≤2 decimals and fits DECIMAL(18,2); arbitrary
@@ -97,8 +99,7 @@ final class GraftSession(val spark: SparkSession) {
     var dpCols = Seq.empty[String]
     fit.suggestions.foreach {
       case (c, "sdc", _) =>
-        val (rare, nullRare) = fit.rareCategories(c, sdcThreshold)
-        df = Privacy.sdcSuppressFitted(df, c, rare, nullRare)
+        df = Privacy.sdcSuppressFitted(df, c, fit.rareCategories(c, sdcThreshold))
       case (c, "generalize+dp", _) =>
         df = Privacy.generalizeFitted(df, c, fit.quantileEdges(c, bins))
       case (c, "dp", _) => dpCols :+= c

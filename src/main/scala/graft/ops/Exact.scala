@@ -212,16 +212,6 @@ object Exact {
         .otherwise(stdDouble(s1, s2, n, (n - lit(1)).cast("double"))))
   }
 
-  /** Population std (ddof=0, sklearn StandardScaler convention). n = 0 →
-    * NULL (no division — see the ANSI note in [[stdFromMoments]]). */
-  def stdPopFromMoments(s1: Column, s2: Column, n: Column): Column = {
-    val num = (n.cast(DecimalType(10, 0)) * s2 - s1 * s1).cast("double")
-    when(n >= 1,
-      when(decimalMomentsSafe(s1, s2, n),
-        sqrt(greatest(lit(0.0), num / n / n / 10000.0)))
-        .otherwise(stdDouble(s1, s2, n, n.cast("double"))))
-  }
-
   /** DuckDB quantile_cont's EXACT interpolation: lo·(1−f) + hi·f. The
     * algebraically-equal lo+(hi−lo)·f differs by 1 ulp for some inputs
     * (observed at sf0.1), which flips a %.2f bin label across a rounding
@@ -531,29 +521,6 @@ object Exact {
     }.toMap
   }
 
-  /** Collect one numeric column as a primitive double array, nulls and
-    * NaNs dropped — per-partition ArrayBuilder over the INTERNAL rows
-    * (no encoder, no boxing), concatenated on the driver. The fast path
-    * for driver-side fitting while a single column fits driver memory
-    * (600k doubles = 4.8 MB; practical to ~10⁸ rows). */
-  def collectColumnDoubles(df: org.apache.spark.sql.DataFrame, c: String): Array[Double] = {
-    // non-finite values are dropped, as the cents-cast path did (a single
-    // Infinity would otherwise poison every downstream sum and quantile)
-    val rows = df.select(col(c).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")) &&
-        col("v") > Double.NegativeInfinity && col("v") < Double.PositiveInfinity)
-    val parts: Array[Array[Double]] = rows.queryExecution.toRdd
-      .mapPartitions { it =>
-        val buf = new scala.collection.mutable.ArrayBuilder.ofDouble
-        it.foreach(r => buf += r.getDouble(0))
-        Iterator.single(buf.result())
-      }.collect()
-    val out = new Array[Double](parts.map(_.length).sum)
-    var off = 0
-    parts.foreach { p => System.arraycopy(p, 0, out, off, p.length); off += p.length }
-    out
-  }
-
   /** Above this row count, driver-side quantile fits (collect + sort)
     * stop being the cheap path (10⁷ rows × 8 B ≈ 80 MB/column) and
     * callers switch to an in-plan form — the shared ceiling for
@@ -571,32 +538,13 @@ object Exact {
     if (h == math.floor(h)) arr(i) else interp(arr(i), arr(i + 1), h - math.floor(h))
   }
 
-  /** Exact quantiles by collecting the RAW double column to the driver
-    * and selecting on the sorted array — exactly what `quantile_cont`
-    * computes (same sort, same [[interp]] formula), with NO ≤2-decimal
-    * precondition. A distinct-value shuffle costs ~1 s at sf0.1
-    * regardless of plan shape, so when the value domain is nearly unique
-    * the "shuffle the domain" trick degenerates and a narrow scan +
-    * driver select wins — the same locality pandas exploits. Beyond
-    * driver memory, use [[quantilesViaCentsHistogramDistributed]]. */
-  def quantilesViaDriverSort(df: org.apache.spark.sql.DataFrame, c: String,
-                             probs: Seq[Double]): Seq[Double] = {
-    val arr = collectColumnDoubles(df, c)
-    java.util.Arrays.sort(arr)
-    val n = arr.length
-    if (n == 0) return probs.map(_ => Double.NaN)
-    probs.map { p =>
-      val h = p * (n - 1)
-      val i = math.floor(h).toInt
-      if (h == math.floor(h)) arr(i)
-      else interp(arr(i), arr(i + 1), h - math.floor(h))
-    }
-  }
-
-  /** [[collectColumnDoubles]] for MANY columns in ONE scan: per-partition
-    * primitive builders over the internal rows (no encoder, no boxing),
-    * one array per column, concatenated on the driver. Nulls and
-    * non-finite values are dropped per column independently; the second
+  /** Collect numeric columns as primitive double arrays in ONE scan:
+    * per-partition primitive builders over the internal rows (no encoder,
+    * no boxing), one array per column, concatenated on the driver — the
+    * fast path for driver-side fitting while the columns fit driver
+    * memory (600k doubles = 4.8 MB). Nulls and non-finite values are
+    * dropped per column independently (a single Infinity would otherwise
+    * poison every downstream sum and quantile); -0.0 is kept. The second
     * element counts the dropped NON-FINITE values (a non-zero count means
     * the array is not a faithful sample for exact-parity work). */
   def collectColumnsDoubles(df: org.apache.spark.sql.DataFrame,
@@ -759,14 +707,7 @@ object Exact {
           }
           i += 1
         }
-        val qs = probs.map { p =>
-          if (n == 0) Double.NaN
-          else {
-            val h = p * (n - 1)
-            val i = math.floor(h).toInt
-            if (h == math.floor(h)) arr(i) else interp(arr(i), arr(i + 1), h - math.floor(h))
-          }
-        }
+        val qs = probs.map(quantileFromSorted(arr, _))
         if (n == 0)
           NumFit(Some(qs), Some(0L), 0L, None, None, None, None, eligible = true)
         else if (!momentsOk)

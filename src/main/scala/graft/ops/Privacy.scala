@@ -9,11 +9,17 @@ import scala.collection.parallel.CollectionConverters._
 /** Anonymization operators (SURVEY.md §2.5 V1–V5, V7) — the reference
   * engine's signature capability (`modules/privacy.py`).
   *
-  * Each transform splits into a fit (rare sets, quantile edges: small
-  * driver-side values) and an apply half that is a plain Column
-  * expression, so a full Protect chain (suppress → generalize → noise)
-  * runs as one whole-stage-codegen projection over the scan — vs the
-  * reference's full table copy per stage (`modules/privacy.py:5,14,25`).
+  * Each Protect operator has one fit and one apply. The fit yields a
+  * small driver-side value: V1's rare set (A4's grouped count, in
+  * [[sdcSuppress]] or [[ProtectFit.rareCategories]]), V2's quantile edges
+  * ([[generalizeEdges]] or [[ProtectFit.quantileEdges]]). The apply half
+  * is a plain Column expression (V1 through P4 in [[sdcSuppressFitted]],
+  * V2 in [[generalizeFitted]]), so a full Protect chain (suppress →
+  * generalize → noise) runs as one whole-stage-codegen projection over
+  * the scan — vs the reference's full table copy per stage
+  * (`modules/privacy.py:5,14,25`). V1 counts the null group like any
+  * value: every V1 path turns a null group below the threshold into
+  * "OTHER".
   */
 object Privacy {
 
@@ -21,28 +27,48 @@ object Privacy {
     * override — see the comment at the use site. */
   private val fitConfLock = new Object
 
+  /** Ceiling on a fitted rare set in [[sdcSuppress]]. The set rides
+    * every task of the apply pass as an `InSet` literal, so a column with
+    * more rare values than this keeps [[sdcSuppressBroadcast]], whose
+    * rare set stays a broadcast relation. */
+  val SuppressFitMaxValues = 10000
+
   /** V1 SDC rare-category suppression (`modules/privacy.py:4-11`): values
     * of `cols` whose GLOBAL frequency < threshold become "OTHER"; non-string
     * columns are silently skipped, as in the reference (`:7`).
     *
-    * Implementation: count-over-partition window per column — a single
-    * shuffle per suppressed column and no join. At 100 TB with a
-    * low-cardinality column, prefer [[sdcSuppressBroadcast]]: groupBy
-    * (map-side combinable) + broadcast of only the rare set.
-    */
+    * Fit then apply, the reference's two steps: per string column, A4's
+    * grouped count collects the values counted below `threshold` (at most
+    * [[SuppressFitMaxValues]] + 1 rows reach the driver), then P4
+    * ([[sdcSuppressFitted]]) applies the set as a plain projection, so
+    * later readers of the output re-run no aggregate and no join. Up to
+    * one column per core fits at once. The null group is counted like any
+    * other value: a null group below the threshold becomes "OTHER", as in
+    * the v1 oracle's `COUNT(*) OVER (PARTITION BY c)`. A column whose rare
+    * set passes the ceiling takes [[sdcSuppressBroadcast]] instead. */
   def sdcSuppress(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
     val strCols = df.schema.fields
       .filter(f => cols.contains(f.name) && f.dataType == StringType)
-      .map(_.name)
-    strCols.foldLeft(df) { (d, c) =>
-      val cnt = count(lit(1)).over(Window.partitionBy(col(c)))
-      d.withColumn(c, when(cnt < threshold, lit("OTHER")).otherwise(col(c)))
+      .map(_.name).toSeq
+    val rareSets = Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
+      val rare = df.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
+        .filter(col("__cnt") < threshold)
+        .select(col(c)).limit(SuppressFitMaxValues + 1)
+        .collect().map(_.getString(0))
+      if (rare.length > SuppressFitMaxValues) None else Some(rare.toSet)
+    }
+    strCols.zip(rareSets).foldLeft(df) {
+      case (d, (c, Some(rare))) => sdcSuppressFitted(d, c, rare)
+      case (d, (c, None))       => sdcSuppressBroadcast(d, Seq(c), threshold)
     }
   }
 
-  /** V1 at scale: per-column grouped counts (tiny: ≤ |distinct|) joined
-    * back via broadcast — the full table shuffles zero times. */
-  def sdcSuppressBroadcast(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
+  /** V1 above [[SuppressFitMaxValues]]: per-column grouped counts (≤
+    * |distinct| rows) joined back via broadcast, so the full table
+    * shuffles zero times. The rare frame carries a non-null marker, so a
+    * matched null key becomes "OTHER" too, as in [[sdcSuppress]]. */
+  private[graft] def sdcSuppressBroadcast(df: DataFrame, cols: Seq[String],
+                                          threshold: Long = 5): DataFrame = {
     val strCols = df.schema.fields
       .filter(f => cols.contains(f.name) && f.dataType == StringType)
       .map(_.name)
@@ -50,46 +76,10 @@ object Privacy {
       val rare = d.groupBy(col(c).as("__rare_v"))
         .agg(count(lit(1)).as("__cnt"))
         .filter(col("__cnt") < threshold)
-        .select(col("__rare_v"))
+        .select(col("__rare_v"), lit(true).as("__rare"))
       d.join(broadcast(rare), col(c) <=> col("__rare_v"), "left")
-        .withColumn(c, when(col("__rare_v").isNotNull, lit("OTHER")).otherwise(col(c)))
-        .drop("__rare_v")
-    }
-  }
-
-  /** Ceiling on a fitted rare set in [[sdcSuppressAuto]]. The set rides
-    * every task of the apply pass as an `InSet` literal, so a column with
-    * more rare values than this keeps [[sdcSuppressBroadcast]], whose
-    * rare set stays a broadcast relation. */
-  val SuppressFitMaxValues = 10000
-
-  /** V1 fit-then-project, the suppress step of
-    * [[graft.core.GraftSession.protect]]: per string column of `cols`,
-    * one grouped-count job collects the non-null values counted below
-    * `threshold` (at most [[SuppressFitMaxValues]] + 1 rows reach the
-    * driver), then [[sdcSuppressFitted]] applies the set as a plain
-    * projection, so later readers of the output re-run no aggregate and
-    * no join. Up to one column per core fits at once. A column whose
-    * rare set passes the ceiling takes [[sdcSuppressBroadcast]] instead.
-    *
-    * Same rows and values as [[sdcSuppressBroadcast]]: a rare NULL group
-    * stays null there (its `<=>` join matches, but the matched key is
-    * itself null), so nulls are left out of the fitted set. */
-  def sdcSuppressAuto(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
-    val strCols = df.schema.fields
-      .filter(f => cols.contains(f.name) && f.dataType == StringType)
-      .map(_.name).toSeq
-    val rareSets = Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
-      val rare = df.filter(col(c).isNotNull)
-        .groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
-        .filter(col("__cnt") < threshold)
-        .select(col(c)).limit(SuppressFitMaxValues + 1)
-        .collect().map(_.getString(0))
-      if (rare.length > SuppressFitMaxValues) None else Some(rare.toSet)
-    }
-    strCols.zip(rareSets).foldLeft(df) {
-      case (d, (c, Some(rare))) => sdcSuppressFitted(d, c, rare, nullRare = false)
-      case (d, (c, None))       => sdcSuppressBroadcast(d, Seq(c), threshold)
+        .withColumn(c, when(col("__rare").isNotNull, lit("OTHER")).otherwise(col(c)))
+        .drop("__rare_v", "__rare")
     }
   }
 
@@ -140,7 +130,9 @@ object Privacy {
         Exact.quantilesMultiCentsHistogram(df, Seq(c), probs)(c).quantiles
           .getOrElse(Exact.quantilesViaCentsHistogramDistributed(df, c, probs))
       case QuantileStrategy.DriverSort =>
-        Exact.quantilesViaDriverSort(df, c, probs)
+        val arr = Exact.collectColumnsDoubles(df, Seq(c))(c)._1
+        java.util.Arrays.sort(arr)
+        probs.map(Exact.quantileFromSorted(arr, _))
       case QuantileStrategy.SortPercentile =>
         df.agg(expr(s"percentile($c, array(${probs.mkString("D,")}D))").as("q"))
           .head().getSeq[Double](0)
@@ -861,6 +853,20 @@ object Privacy {
     * switches to the index-lookup form. */
   private val CatWhenChainMax = 64
 
+  /** V5's distinct-count threshold: a string column above 20 distinct
+    * values is suppressed, a numeric column above 50 is generalized. */
+  private def suggestThreshold(dt: DataType): Long = if (dt == StringType) 20L else 50L
+
+  /** V5's dtype dispatch, shared by [[smartSuggest]] and
+    * [[ProtectFit.suggestions]]: (column, transform, ε) given whether the
+    * column's distinct count exceeds [[suggestThreshold]]. */
+  private def suggestion(f: StructField, exceeds: => Boolean): Option[(String, String, Option[Double])] =
+    f.dataType match {
+      case StringType => if (exceeds) Some((f.name, "sdc", None)) else None
+      case _: NumericType => Some((f.name, if (exceeds) "generalize+dp" else "dp", Some(1.0)))
+      case _ => None
+    }
+
   /** V5 smart suggestion heuristic (`modules/privacy.py:55-68`): per
     * column, dtype + distinct-count dispatch into a suggested transform.
     *
@@ -883,7 +889,6 @@ object Privacy {
     // Only string/numeric columns influence a suggestion.
     val allCounted = fields.filter(f =>
       f.dataType == StringType || f.dataType.isInstanceOf[NumericType])
-    def threshold(f: StructField): Long = if (f.dataType == StringType) 20L else 50L
     // Metadata fast path (r14): when the input is a pure parquet scan,
     // the `nunique > T` comparisons are usually PROVABLE from the footers'
     // dictionary metadata alone (graft.io.DictStats) — every proven column
@@ -892,7 +897,7 @@ object Privacy {
     // column proves, so V5 runs with ZERO Spark jobs.
     val proven: Map[String, Boolean] =
       try graft.io.DictStats.distinctExceeds(df,
-        allCounted.map(f => f.name -> threshold(f)).toMap)
+        allCounted.map(f => f.name -> suggestThreshold(f.dataType)).toMap)
       catch { case scala.util.control.NonFatal(_) => Map.empty }
     val counted = allCounted.filterNot(f => proven.contains(f.name))
     val cap = SuggestDistinctCap
@@ -944,17 +949,8 @@ object Privacy {
         }
       })
       .withDefaultValue(0L)
-    val rows = fields.flatMap { f =>
-      val isStr = f.dataType == StringType
-      val isNum = f.dataType.isInstanceOf[NumericType]
-      def exceeds = proven.getOrElse(f.name, uniq(f.name) > threshold(f))
-      val suggestion: Option[String] =
-        if (isStr) { if (exceeds) Some("sdc") else None }
-        else if (isNum) { if (exceeds) Some("generalize+dp") else Some("dp") }
-        else None
-      suggestion.map(s =>
-        (f.name, s, if (isNum) Some(1.0) else Option.empty[Double]))
-    }
+    val rows = fields.flatMap(f =>
+      suggestion(f, proven.getOrElse(f.name, uniq(f.name) > suggestThreshold(f.dataType))))
     import spark.implicits._
     // rows is already driver-local (the capped-distinct collect above) —
     // sort it HERE: an .orderBy on the LocalRelation would pay a range-
@@ -1073,16 +1069,7 @@ object Privacy {
     /** [[smartSuggest]]'s decisions from the fitted counts — identical
       * rules, identical output shape. */
     def suggestions: Seq[(String, String, Option[Double])] =
-      fields.flatMap { f =>
-        val u = distinctCount(f.name)
-        val s: Option[String] =
-          if (f.dataType == StringType) { if (u > 20) Some("sdc") else None }
-          else if (f.dataType.isInstanceOf[NumericType])
-            Some(if (u > 50) "generalize+dp" else "dp")
-          else None
-        s.map(x => (f.name, x,
-          if (f.dataType.isInstanceOf[NumericType]) Some(1.0) else None))
-      }
+      fields.flatMap(f => suggestion(f, distinctCount(f.name) > suggestThreshold(f.dataType)))
 
     /** V2 edges: exact interpolated quantiles over the sorted buffer —
       * the [[QuantileStrategy.DriverSort]] arithmetic verbatim. Empty
@@ -1090,20 +1077,13 @@ object Privacy {
     def quantileEdges(c: String, bins: Int): Seq[Double] = {
       val arr = numSorted.getOrElse(c, Array.empty[Double])
       if (arr.isEmpty) Seq.empty
-      else (0 to bins).map { i =>
-        val h = (i.toDouble / bins) * (arr.length - 1)
-        val k = math.floor(h).toInt
-        if (h == math.floor(h)) arr(k) else Exact.interp(arr(k), arr(k + 1), h - math.floor(h))
-      }
+      else (0 to bins).map(i => Exact.quantileFromSorted(arr, i.toDouble / bins))
     }
 
-    /** V1 rare categories of a fitted string column: (non-null rare
-      * values, whether the null group is rare). */
-    def rareCategories(c: String, threshold: Long): (Set[String], Boolean) = {
-      val m = catCounts.getOrElse(c, Map.empty)
-      (m.collect { case (k, n) if k != null && n < threshold => k }.toSet,
-        m.get(null) match { case Some(n) => n < threshold; case None => false })
-    }
+    /** V1 rare categories of a fitted string column: the values counted
+      * below `threshold`, with null a member when the null group is. */
+    def rareCategories(c: String, threshold: Long): Set[String] =
+      catCounts.getOrElse(c, Map.empty).collect { case (k, n) if n < threshold => k }.toSet
   }
 
   /** Build a [[ProtectFit]] with ONE fused scan (see class doc). */
@@ -1115,16 +1095,12 @@ object Privacy {
     ProtectFit(rows, fields, numArrs, catMaps)
   }
 
-  /** V1 apply half: a PRE-FITTED rare set (from [[ProtectFit]] or
-    * [[sdcSuppressAuto]]) as a pure codegen when-chain — no counting job,
-    * no join. `nullRare` also maps the null group to "OTHER". */
-  def sdcSuppressFitted(df: DataFrame, c: String,
-                        rare: Set[String], nullRare: Boolean): DataFrame = {
-    val isRare =
-      (if (nullRare) col(c).isNull else lit(false)) ||
-        (if (rare.nonEmpty) col(c).isInCollection(rare) else lit(false))
-    df.withColumn(c, when(isRare, lit("OTHER")).otherwise(col(c)))
-  }
+  /** V1 apply half: a PRE-FITTED rare set (from [[sdcSuppress]] or
+    * [[ProtectFit.rareCategories]]) applied by P4
+    * ([[RowTransforms.replaceRare]]) as a pure codegen projection — no
+    * counting job, no join. A null member maps the null group to "OTHER". */
+  def sdcSuppressFitted(df: DataFrame, c: String, rare: Set[String]): DataFrame =
+    df.withColumn(c, RowTransforms.replaceRare(col(c), rare))
 
   /** V2 apply half: label `c` by PRE-FITTED raw quantile edges (from
     * [[generalizeEdges]] or [[ProtectFit.quantileEdges]]). Duplicate

@@ -70,7 +70,6 @@ object Profile {
     val fields = df.schema.fields
     val numCols = fields.filter(f => isNum(f.dataType)).map(_.name)
     val othCols = fields.filterNot(f => isNum(f.dataType)).map(_.name)
-    val strCols = fields.filter(_.dataType == StringType).map(_.name)
 
     def dtypeName(dt: DataType): String = dt.sql.toLowerCase
 
@@ -345,31 +344,12 @@ object Profile {
       }.reduce(_ unionByName _))
     }
 
-    // Mode (top-1 with pandas' smallest-on-tie rule) for any string
-    // column on the LEGACY path only (fused columns already carry their
-    // mode from the counts aggregate).
-    val topOne: Option[DataFrame] = strCols.toSeq.filter(loopCols.contains) match {
-      case Nil => None
-      case cs =>
-        val tops = cs.map { c =>
-          valueCountsFor(c)
-            .orderBy(col("top_freq").desc, col("top_value").asc)
-            .limit(1)
-            .withColumn("column", lit(c))
-            .select(col("column"), col("top_value"), col("top_freq"))
-        }
-        Some(tops.reduce(_ union _))
-    }
-
     val base = Seq(numRows, othRows).flatten.reduceOption(_ unionByName _)
-    val baseWithTop = base.map { b =>
-      topOne match {
-        case Some(t) => b.join(t, Seq("column"), "left")
-        case None =>
-          b.withColumn("top_value", lit(null).cast("string"))
-            .withColumn("top_freq", lit(null).cast("long"))
-      }
-    }
+    // the legacy path carries no mode: every string column is fusable,
+    // and fused columns carry theirs from the counts aggregate
+    val baseWithTop = base.map(_
+      .withColumn("top_value", lit(null).cast("string"))
+      .withColumn("top_freq", lit(null).cast("long")))
     (Seq(baseWithTop, fusedRows).flatten.reduceOption(_ unionByName _) match {
       case Some(all) => all
       case None =>

@@ -43,9 +43,6 @@ object Relational {
   /** Exact sum of an already-decimal expression. */
   def dsumExpr(c: Column): Column = sum(c).cast("double")
 
-  /** Exact, partitioning-independent mean of a money column. */
-  def davg(c: Column): Column = sum(money(c)).cast("double") / count(c)
-
   /** Exact per-row revenue: extendedprice × (1 − discount), all decimal. */
   def revenueExpr: Column = money(col("l_extendedprice")) * (one - pct(col("l_discount")))
 

@@ -24,9 +24,14 @@ object RowTransforms {
     df.drop(cols: _*)
 
   /** P4 conditional replace: members of `rare` → "OTHER"
-    * (`modules/privacy.py:10`). */
-  def replaceRare(c: Column, rare: Seq[String]): Column =
-    when(c.isin(rare: _*), lit("OTHER")).otherwise(c)
+    * (`modules/privacy.py:10`). A null member maps the null group too,
+    * as pandas' `isin` matches NaN. */
+  def replaceRare(c: Column, rare: Iterable[String]): Column = {
+    val values = rare.filter(_ != null)
+    val inValues = if (values.nonEmpty) c.isInCollection(values) else lit(false)
+    val hit = if (values.size < rare.size) inValues || c.isNull else inValues
+    when(hit, lit("OTHER")).otherwise(c)
+  }
 
   /** P5 mean imputation (`modules/utility.py:136`) — fitted mean computed
     * with the exact-moments policy, then applied as a literal. */

@@ -44,12 +44,15 @@ class SourceSweepSpec extends AnyFunSuite {
     // (bounded inputs ⇒ bounded category domains; above it the windowed
     // plan tail runs and neither site executes), reviewed
     "ops/Drift.scala" -> (9, 3),
-    "ops/Exact.scala" -> (4, 1),
+    // one collect fewer: the single-column collectColumnDoubles is gone;
+    // V2's driver sort reads through collectColumnsDoubles' collect
+    "ops/Exact.scala" -> (3, 1),
     // r14 +2 collects: collectRawState's per-column parallel path (one
     // RDD collect per fitted column) — both behind the DriverFitMaxCells
     // dispatch, same boundedness as the fused collect they replace.
-    // +1 collect: sdcSuppressAuto's rare-set fit, a grouped-count collect
+    // +1 collect: sdcSuppress's rare-set fit, a grouped-count collect
     // under limit(SuppressFitMaxValues + 1) — bounded at any input size
+    // (the count-over-window V1 it replaced had no collect)
     "ops/Privacy.scala" -> (7, 1),
     "ops/Profile.scala" -> (2, 1),
     "ops/Relational.scala" -> (0, 9),

@@ -50,7 +50,7 @@ class ProtectSpec extends SparkSpec {
 
     val sById = got.map(r => r(0) -> r(1)).toMap
     assert(sById(30L) == "OTHER", "a value counted below the threshold is suppressed")
-    assert(sById(31L) == null && sById(32L) == null, "a rare null group stays null")
+    assert(sById(31L) == "OTHER" && sById(32L) == "OTHER", "a rare null group becomes OTHER")
     assert(sById(0L) == "common" && sById(33L) == "mid")
     assert(got.map(_(3)).distinct.size == 4, "four quantile bins")
 
@@ -62,9 +62,10 @@ class ProtectSpec extends SparkSpec {
 
   test("above the ceiling: the column keeps the broadcast join and the same rows") {
     val n = Privacy.SuppressFitMaxValues + 10
-    // n singleton strings (all rare) plus one common value
-    val anon = parquet(spark.range(n + 20).select(col("id"),
-      when(col("id") < n, concat(lit("v"), col("id").cast("string"))).otherwise(lit("common")).as("s")),
+    // n singleton strings (all rare), one common value and a rare null group
+    val anon = parquet(spark.range(n + 22).select(col("id"),
+      when(col("id") < n, concat(lit("v"), col("id").cast("string")))
+        .when(col("id") < n + 20, lit("common")).as("s")),
       "protect_wide")
     val cfg = PipelineConfig(sdcCols = Seq("s"), sdcThreshold = Threshold)
 
@@ -73,6 +74,6 @@ class ProtectSpec extends SparkSpec {
       s"expected the broadcast-join branch:\n${physicalPlan(prot)}")
     val got = rowsById(prot)
     assert(got == rowsById(chained(anon, cfg)))
-    assert(got.count(_(1) == "OTHER") == n && got.count(_(1) == "common") == 20)
+    assert(got.count(_(1) == "OTHER") == n + 2 && got.count(_(1) == "common") == 20)
   }
 }

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 class PrivacySpec extends SparkSpec {
   import spark.implicits._
 
-  test("sdcSuppress: only sub-threshold categories become OTHER; window and broadcast forms agree") {
-    val df = (Seq.fill(10)("common") ++ Seq("rare1", "rare2", "rare2")).toDF("v")
+  test("sdcSuppress: rare values become OTHER; fitted and join forms agree") {
+    // the null group is counted like any value: two nulls are rare
+    val df = (Seq.fill(10)("common") ++ Seq("rare1", "rare2", "rare2", null, null)).toDF("v")
     for (out <- Seq(Privacy.sdcSuppress(df, Seq("v"), 5),
                     Privacy.sdcSuppressBroadcast(df, Seq("v"), 5))) {
       val counts = out.groupBy("v").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(counts == Map("common" -> 10L, "OTHER" -> 3L))
+      assert(counts == Map("common" -> 10L, "OTHER" -> 5L))
     }
   }
 

@@ -92,6 +92,16 @@ class RowTransformsSpec extends SparkSpec {
     assert(cOut.forall(_.getDouble(0) == 0.0))
   }
 
+  test("replaceRare: a null member maps the null group to OTHER") {
+    val df = Seq[String]("a", "b", null).toDF("c")
+    def out(rare: Set[String]) =
+      df.select(RowTransforms.replaceRare(col("c"), rare)).collect().map(_.getString(0)).toSeq
+    assert(out(Set("a", null)) == Seq("OTHER", "b", "OTHER"))
+    assert(out(Set("a")) == Seq("OTHER", "b", null))
+    assert(out(Set(null)) == Seq("a", "b", "OTHER"))
+    assert(out(Set.empty) == Seq("a", "b", null))
+  }
+
   test("nullLabel stringifies then defaults (crash-free on any dtype)") {
     val df = Seq(Some(1.5), None).toDF("x")
     val out = df.select(RowTransforms.nullLabel(col("x"))).collect().map(_.getString(0))

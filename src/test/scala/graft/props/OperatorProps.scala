@@ -3,7 +3,7 @@ package graft.props
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean}
 import graft.ops.{Drift, Privacy}
 import graft.risk.Linkage
 import graft.ext.{Dedup, Sampling, TextStats}
@@ -26,18 +26,24 @@ object OperatorProps extends Properties("graft") {
 
   private val word: Gen[String] = Gen.oneOf("a", "b", "c", "d", "e", "rare1", "rare2")
   private val words: Gen[List[String]] = Gen.listOfN(25, word)
+  // V1 input: about one draw in 16 is null, so a list usually holds a
+  // null group small enough to be rare (the V1 properties do not shrink:
+  // the default String shrinker fails on null)
+  private val wordsWithNulls: Gen[List[String]] =
+    Gen.listOfN(25, Gen.frequency(15 -> word, 1 -> Gen.const[String](null)))
 
   property("V1: no surviving category has frequency < threshold") =
-    forAll(words, Gen.choose(1L, 6L)) { (vs, t) =>
+    forAllNoShrink(wordsWithNulls, Gen.choose(1L, 6L)) { (vs, t) =>
       vs.nonEmpty ==> {
+        // the null group is a category too: it survives only if frequent
         val out = Privacy.sdcSuppress(vs.toDF("v"), Seq("v"), t)
           .groupBy("v").count().collect()
         out.forall(r => r.getString(0) == "OTHER" || r.getLong(1) >= t)
       }
     }
 
-  property("V1: window and broadcast forms agree") =
-    forAll(words) { vs =>
+  property("V1: fitted and broadcast forms agree") =
+    forAllNoShrink(wordsWithNulls) { vs =>
       vs.nonEmpty ==> {
         val df = vs.toDF("v")
         val a = Privacy.sdcSuppress(df, Seq("v"), 3)
