@@ -81,15 +81,18 @@ final class GraftSession(val spark: SparkSession) {
   /** Step 3 fused — the "smart protect" flow (suggest, then apply the
     * suggestions) with ONE fitting scan: [[graft.ops.Privacy.protectFit]]
     * collects every buffer V5/V1/V2 need, so the whole
-    * suggest→suppress→generalize→noise chain costs one Spark job of
-    * fitting plus the single transform pass — instead of a counting scan
-    * per operator (V5 sweep + V1 group counts + V2 percentile fit).
+    * suggest→suppress→generalize→noise chain costs at most one Spark job
+    * of fitting (none on a pure parquet scan) plus the single transform
+    * pass — instead of a counting scan per operator (V5 sweep + V1 group
+    * counts + V2 percentile fit).
     * Synthesis (when requested) still fits separately because it must
     * observe the TRANSFORMED frame. Applies through the same `*Fitted`
-    * projections as [[protect]]. Driver-fit regime (the fit holds every
-    * column's values and vocabulary on the driver); beyond the documented
-    * ceiling use [[protect]], whose per-column fits are distributed
-    * aggregates with bounded collects. */
+    * projections as [[protect]], and like it sends a string column
+    * holding a key that is not valid UTF-8 to the byte-exact join form.
+    * Driver-fit regime (the fit holds every column's values and
+    * vocabulary on the driver); beyond the documented ceiling use
+    * [[protect]], whose per-column fits are distributed aggregates with
+    * bounded collects. */
   def protectAuto(sdcThreshold: Long = 5, bins: Int = 10,
                   epsilon: Double = 1.0, sensitivity: Double = 1.0,
                   seed: Long = 42L, synthetic: Boolean = false): DataFrame = {
@@ -99,7 +102,10 @@ final class GraftSession(val spark: SparkSession) {
     var dpCols = Seq.empty[String]
     fit.suggestions.foreach {
       case (c, "sdc", _) =>
-        df = Privacy.sdcSuppressFitted(df, c, fit.rareCategories(c, sdcThreshold))
+        df = fit.rareCategories(c, sdcThreshold) match {
+          case Some(rare) => Privacy.sdcSuppressFitted(df, c, rare)
+          case None       => Privacy.sdcSuppressBroadcast(df, Seq(c), sdcThreshold)
+        }
       case (c, "generalize+dp", _) =>
         df = Privacy.generalizeFitted(df, c, fit.quantileEdges(c, bins))
       case (c, "dp", _) => dpCols :+= c

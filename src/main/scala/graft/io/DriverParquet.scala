@@ -13,10 +13,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-/** Driver-side COLUMNAR collect for small pure parquet scans — the fit
-  * collector's fast path.
+/** Driver-side COLUMNAR collect for small pure parquet scans — the fast
+  * path of [[graft.ops.Exact.collectColumns]], the one column collector.
   *
-  * A driver-fit operator (V4 synthetic, the fused protect fit) needs every
+  * A driver-side fit (V2 edges, V4 synthesis, the fused protect fit, the
+  * a1 profile, winsorize, robust-scale, the d3 drift tails) needs every
   * value of a few columns ON THE DRIVER. Routing that through a Spark job
   * costs plan construction + scheduling + one task per SPLIT, and split
   * assignment is row-group-granular — a 1-row-group fixture runs the whole
@@ -26,32 +27,31 @@ import org.apache.spark.sql.types._
   * parallelism BELOW row-group granularity — column chunks are independent
   * byte ranges — with zero scheduler latency.
   *
-  * Scale posture: this path is only ever entered behind the caller's
-  * driver-fit ceiling ([[graft.ops.Privacy]]'s `DriverFitMaxCells`), i.e.
-  * for inputs that were ALREADY being collected whole to the driver; at
-  * 100 TB the caller's distributed fit is dispatched long before here.
-  * Strictly-typed pairings only (Spark type × parquet physical type); any
-  * mismatch, nested schema, decimal, filter, or non-parquet source returns
-  * None and the caller keeps its Spark-collect path — a pure fast path,
-  * never a new semantics.
+  * Scale posture: see [[graft.ops.Exact.collectColumns]] — every caller
+  * gates the collector behind its own driver-fit ceiling, so this path
+  * only ever sees inputs that were ALREADY being collected whole to the
+  * driver. Strictly-typed pairings only (Spark type × parquet physical
+  * type); any mismatch, nested schema, decimal, filter, non-parquet
+  * source or key that is not valid UTF-8 returns None and the collector
+  * runs its Spark form — a pure fast path, never a new semantics.
   */
 object DriverParquet {
 
-  /** Raw finite doubles per numeric column (nulls dropped silently,
-    * NaN/±Inf dropped AND counted — the `collectColumnsDoubles`
-    * contract; UNsorted), category histogram per string column (SQL NULL
-    * under the null key), and the exact row count. None = not eligible;
-    * use the Spark path.
+  /** Raw doubles per numeric column (nulls dropped; NaN/±Inf dropped AND
+    * counted, or kept with -0.0 normalized to 0.0 under `keepNonFinite` —
+    * the [[graft.ops.Exact.collectColumns]] contract; UNsorted), category
+    * histogram per string column (SQL NULL under the null key), and the
+    * exact row count. None = not eligible; use the Spark form.
     *
     * `rawInt64Timestamps` (r16 ADVICE): timestamp columns decode as their
     * RAW INT64 epoch value in the FILE's unit (e.g. micros) — NOT the
     * seconds-since-epoch double the Spark `cast('double')` fallback
     * produces — so they are only eligible when the caller explicitly opts
     * in because it needs nothing beyond a value-injective image
-    * (Profile.distinctCounts). Default OFF: every other caller
-    * (collectNumericColumns / collectNumericColumnsRaw behind the fit and
-    * drift collectors) refuses timestamps here and keeps its cast-to-
-    * seconds Spark path, preserving the driver/plan bit-parity contract. */
+    * (Profile.distinctCounts). Default OFF: the column collector behind
+    * every fit and drift tail refuses timestamps here and keeps its
+    * cast-to-seconds Spark form, preserving the driver/plan bit-parity
+    * contract. */
   def collectColumns(df: DataFrame, numCols: Seq[String], catCols: Seq[String],
                      keepNonFinite: Boolean = false,
                      rawInt64Timestamps: Boolean = false)
@@ -207,21 +207,14 @@ object DriverParquet {
           else Array.concat(slices.map(_._1): _*)
         c -> (arr, slices.map(_._2).sum)
       }.toMap
-      // STRICT UTF-8 decode (r16 ADVICE): `new String(bytes, UTF_8)` maps
-      // every invalid byte sequence to replacement characters, so two
-      // DISTINCT binary keys could merge into one string key — Spark's
-      // distinct/groupBy compares UTF8String bytes and keeps them apart.
-      // A malformed sequence throws CharacterCodingException here, the
-      // outer NonFatal catch returns None, and the caller keeps its Spark
-      // path — the fast path refuses rather than miscounts.
+      // STRICT UTF-8 decode (r16 ADVICE, see [[strictUtf8]]): a key that
+      // is not valid UTF-8 refuses the whole call and the collector runs
+      // its Spark form, which merges keys by bytes — the fast path refuses
+      // rather than miscounts.
       val catMaps: Map[String, Map[String, Long]] = catCols.map { c =>
         val merged = scala.collection.mutable.HashMap.empty[String, Long]
-        val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-          .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
-          .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
         decoded.collect { case (`c`, Right(m)) => m }.foreach(_.forEach { (k, v) =>
-          val key = if (k == null) null
-            else dec.decode(java.nio.ByteBuffer.wrap(k.getBytes)).toString
+          val key = if (k == null) null else strictUtf8(k.getBytes).getOrElse(return None)
           merged.update(key, merged.getOrElse(key, 0L) + v(0))
         })
         c -> merged.toMap
@@ -230,21 +223,17 @@ object DriverParquet {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** [[collectColumns]] for numeric columns only — the drop-in fast path
-    * for [[graft.ops.Exact.collectColumnsDoubles]] (same contract:
-    * finite doubles + the non-finite drop count per column). */
-  def collectNumericColumns(df: DataFrame, cols: Seq[String])
-      : Option[Map[String, (Array[Double], Long)]] =
-    collectColumns(df, cols, Nil).map(_._2)
-
-  /** The KS/drift collector's contract ([[graft.ops.Drift]].collectRaw):
-    * NaN/±Inf are KEPT (real sample points — NaN groups sort last in the
-    * plan path and the oracle alike) and -0.0 normalizes to 0.0
-    * (grouping treats them equal). */
-  def collectNumericColumnsRaw(df: DataFrame, cols: Seq[String])
-      : Option[Map[String, Array[Double]]] =
-    collectColumns(df, cols, Nil, keepNonFinite = true)
-      .map(_._2.view.mapValues(_._1).toMap)
+  /** `bytes` decoded as UTF-8, or None when they are not valid UTF-8.
+    * The lenient `new String(bytes, UTF_8)` maps every malformed
+    * sequence to U+FFFD, so two byte-distinct keys could merge into one
+    * string key, while Spark's grouping compares UTF8String bytes and
+    * keeps them apart. */
+  private[graft] def strictUtf8(bytes: Array[Byte]): Option[String] =
+    try Some(java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+      .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
+      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
+      .decode(java.nio.ByteBuffer.wrap(bytes)).toString)
+    catch { case _: java.nio.charset.CharacterCodingException => None }
 
   /** Inert converter tree for ColumnReadStoreImpl — values are pulled via
     * the typed getters, never pushed through converters. */

@@ -145,43 +145,6 @@ object Drift {
     if (maxResult <= 0) BigInt(8L << 30) else maxResult * 6 / 10
   }
 
-  /** Collect columns as primitive doubles KEEPING NaN/±Inf (they are real
-    * sample points to the plan path and the oracle — NaN groups sort
-    * last) and normalizing -0.0 → 0.0 (grouping treats them equal). */
-  private def collectRaw(df: DataFrame, cols: Seq[String]): Map[String, Array[Double]] = {
-    // r14: pure parquet scans decode driver-side, (files × columns)-way
-    // parallel, no Spark job (graft.io.DriverParquet keep-non-finite
-    // mode — same NaN-kept / -0.0-normalized contract as below)
-    graft.io.DriverParquet.collectNumericColumnsRaw(df, cols) match {
-      case Some(m) => return m
-      case None    => ()
-    }
-    val k = cols.length
-    val rows = df.select(cols.map(c => col(c).cast("double")): _*)
-    val parts: Array[Array[Array[Double]]] = rows.queryExecution.toRdd
-      .mapPartitions { it =>
-        val bufs = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-        it.foreach { r =>
-          var i = 0
-          while (i < k) {
-            if (!r.isNullAt(i)) {
-              val v = r.getDouble(i)
-              bufs(i) += (if (v == 0.0) 0.0 else v)
-            }
-            i += 1
-          }
-        }
-        Iterator.single(bufs.map(_.result()))
-      }.collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      val slices = parts.map(_(i))
-      val out = new Array[Double](slices.map(_.length).sum)
-      var off = 0
-      slices.foreach { p => System.arraycopy(p, 0, out, off, p.length); off += p.length }
-      c -> out
-    }.toMap
-  }
-
   /** Two-sample KS by merge-walking both sorted arrays — the exact
     * per-distinct-value CDF evaluation the plan path performs, with the
     * identical long→double divisions, so results are bit-equal. NaNs sort
@@ -227,10 +190,12 @@ object Drift {
     if (cols.isEmpty) return Seq.empty
     val useDriver = driverCollect.getOrElse(underDriverCeiling(before, after))
     if (useDriver) {
-      val aArr = collectRaw(before, cols)
-      val bArr = collectRaw(after, cols)
+      // NaN/±Inf are kept: they are real sample points to the plan path
+      // and the oracle (NaN sorts last); -0.0 normalizes to 0.0
+      val aArr = Exact.collectColumns(before, cols, keepNonFinite = true)
+      val bArr = Exact.collectColumns(after, cols, keepNonFinite = true)
       cols.map { c =>
-        c -> ksMerge(aArr(c), bArr(c)).map(v => roundTo.fold(v)(roundLike(v, _)))
+        c -> ksMerge(aArr.values(c), bArr.values(c)).map(v => roundTo.fold(v)(roundLike(v, _)))
       }
     } else {
       val counts = ksCountsFrame(before, after, cols)
@@ -265,8 +230,8 @@ object Drift {
     if (useDriver) {
       val spark = before.sparkSession
       import spark.implicits._
-      val a = collectRaw(before, Seq(c))(c)
-      val b = collectRaw(after, Seq(c))(c)
+      val a = Exact.collectColumns(before, Seq(c), keepNonFinite = true).values(c)
+      val b = Exact.collectColumns(after, Seq(c), keepNonFinite = true).values(c)
       if (allFinite(a) && allFinite(b)) {
         java.util.Arrays.parallelSort(a)
         java.util.Arrays.parallelSort(b)
@@ -721,8 +686,8 @@ object Drift {
     if (useDriver) {
       val spark = before.sparkSession
       import spark.implicits._
-      val aArr = collectRaw(before, Seq(c))(c)
-      val bArr = collectRaw(after, Seq(c))(c)
+      val aArr = Exact.collectColumns(before, Seq(c), keepNonFinite = true).values(c)
+      val bArr = Exact.collectColumns(after, Seq(c), keepNonFinite = true).values(c)
       // BOTH sides without a single non-null value ⇒ the plan's grouped
       // aggregate runs over an EMPTY merged grid and emits ZERO rows
       // (grouping keys, not a global agg) — replicate exactly, or the
@@ -825,11 +790,11 @@ object Drift {
     // fallback owns non-finite ordering.
     val useDriver = driverCollect.getOrElse(underDriverCeiling(before, after))
     if (useDriver) {
-      val aM = collectRaw(before, cols)
-      val bM = collectRaw(after, cols)
-      if (cols.forall(c => allFinite(aM(c)) && allFinite(bM(c)))) {
+      val aM = Exact.collectColumns(before, cols, keepNonFinite = true)
+      val bM = Exact.collectColumns(after, cols, keepNonFinite = true)
+      if (cols.forall(c => allFinite(aM.values(c)) && allFinite(bM.values(c)))) {
         return cols.map { c =>
-          val a = aM(c); val b = bM(c)
+          val a = aM.values(c); val b = bM.values(c)
           java.util.Arrays.parallelSort(a)
           java.util.Arrays.parallelSort(b)
           c -> psiMergeDriver(a, b, bins, eps, roundTo)

@@ -538,52 +538,120 @@ object Exact {
     if (h == math.floor(h)) arr(i) else interp(arr(i), arr(i + 1), h - math.floor(h))
   }
 
-  /** Collect numeric columns as primitive double arrays in ONE scan:
-    * per-partition primitive builders over the internal rows (no encoder,
-    * no boxing), one array per column, concatenated on the driver — the
-    * fast path for driver-side fitting while the columns fit driver
-    * memory (600k doubles = 4.8 MB). Nulls and non-finite values are
-    * dropped per column independently (a single Infinity would otherwise
-    * poison every downstream sum and quantile); -0.0 is kept. The second
-    * element counts the dropped NON-FINITE values (a non-zero count means
-    * the array is not a faithful sample for exact-parity work). */
-  def collectColumnsDoubles(df: org.apache.spark.sql.DataFrame,
-                            cols: Seq[String]): Map[String, (Array[Double], Long)] = {
-    // r14 fast path: a pure parquet scan's chunks decode DRIVER-side with
-    // (files × columns)-way parallelism and no Spark job at all
-    // (graft.io.DriverParquet — same contract, strict type pairings,
-    // refuses anything with cast/filter semantics). This is the shared
-    // collector behind the a1 profile's driver-sort fit, winsorize and
-    // robust-scale — all already bounded by DriverFitMaxRows.
-    graft.io.DriverParquet.collectNumericColumns(df, cols) match {
-      case Some(m) => return m
-      case None    => ()
+  /** The values of a few columns on the driver, from [[collectColumns]]:
+    * the row count; per numeric column the UNsorted doubles and the
+    * count of dropped non-finite values; per string column the category
+    * histogram (SQL NULL under the null key, every histogram sums to
+    * `rows`); and the string columns holding a key that is not valid
+    * UTF-8. Such a column's histogram keys are lenient decodes (U+FFFD
+    * for each malformed sequence) and byte-distinct keys that decode
+    * alike share one summed entry, so a caller that must match the
+    * stored bytes (V1's rare set) takes a byte-exact form instead. */
+  final case class Columns(rows: Long,
+                           nums: Map[String, (Array[Double], Long)],
+                           cats: Map[String, Map[String, Long]],
+                           invalidUtf8: Set[String]) {
+    def values(c: String): Array[Double] = nums(c)._1
+  }
+
+  /** The one column collector behind every driver-side fit: V2's driver
+    * sort, V4 synthesis, the fused protect fit, the a1 profile,
+    * winsorize, robust-scale and the d3 drift tails. Every caller gates
+    * it behind its own driver-fit ceiling ([[DriverFitMaxRows]],
+    * `Profile.DriverSortMaxCells`, `Privacy.DriverFitMaxCells`,
+    * `Drift.KsDriverMaxBytes`), so the columns it is asked for were
+    * already bound for driver memory; the ceilings stay with the callers
+    * because each bounds a different shape of fit.
+    *
+    * A pure parquet scan decodes DRIVER-side with no Spark job
+    * ([[graft.io.DriverParquet.collectColumns]]). Anything else runs ONE
+    * fused job over the internal rows (primitive builders, no encoder,
+    * no boxing) with the identical contract:
+    *  - numbers are cast to double and nulls dropped; non-finite values
+    *    are dropped and counted, or with `keepNonFinite` kept (they are
+    *    real sample points to the drift plans — NaN sorts last) with
+    *    -0.0 normalized to 0.0 (grouping treats them equal);
+    *  - category keys are counted per partition on their UTF8String
+    *    bytes and merged by bytes on the driver, then decoded strictly
+    *    as the driver decode does (see [[Columns]] for keys that are not
+    *    valid UTF-8). */
+  def collectColumns(df: org.apache.spark.sql.DataFrame, numCols: Seq[String],
+                     catCols: Seq[String] = Nil,
+                     keepNonFinite: Boolean = false): Columns = {
+    graft.io.DriverParquet.collectColumns(df, numCols, catCols, keepNonFinite) match {
+      case Some((rows, nums, cats)) => return Columns(rows, nums, cats, Set.empty)
+      case None                     => ()
     }
-    val k = cols.length
-    val rows = df.select(cols.map(c => col(c).cast("double")): _*)
-    val parts: Array[(Array[Array[Double]], Array[Long])] = rows.queryExecution.toRdd
-      .mapPartitions { it =>
-        val bufs = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-        val dropped = new Array[Long](k)
-        it.foreach { r =>
-          var i = 0
-          while (i < k) {
-            if (!r.isNullAt(i)) {
-              val v = r.getDouble(i)
-              if (!v.isNaN && !v.isInfinite) bufs(i) += v else dropped(i) += 1L
-            }
-            i += 1
+    val kN = numCols.length
+    val kC = catCols.length
+    val proj = df.select(numCols.map(c => col(c).cast("double")) ++
+      catCols.map(c => col(c).cast("string")): _*)
+    val parts = proj.queryExecution.toRdd.mapPartitions { it =>
+      val bufs = Array.fill(kN)(new scala.collection.mutable.ArrayBuilder.ofDouble)
+      val dropped = new Array[Long](kN)
+      // UTF8String-keyed with clone-on-first-insert: row buffers are
+      // transient, but content hash/equals makes the un-cloned probe
+      // safe — only the vocabulary pays an allocation, not every row
+      val maps = Array.fill(kC)(
+        new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Long]]())
+      var rows = 0L
+      it.foreach { r =>
+        rows += 1
+        var i = 0
+        while (i < kN) {
+          if (!r.isNullAt(i)) {
+            val v = r.getDouble(i)
+            if (keepNonFinite) bufs(i) += (if (v == 0.0) 0.0 else v)
+            else if (!v.isNaN && !v.isInfinite) bufs(i) += v
+            else dropped(i) += 1L
           }
+          i += 1
         }
-        Iterator.single((bufs.map(_.result()), dropped))
-      }.collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      val slices = parts.map(_._1(i))
+        var j = 0
+        while (j < kC) {
+          val key = if (r.isNullAt(kN + j)) null else r.getUTF8String(kN + j)
+          val cnt = maps(j).get(key)
+          if (cnt != null) cnt(0) += 1L
+          else maps(j).put(if (key == null) null else key.clone(), Array(1L))
+          j += 1
+        }
+      }
+      val hists = maps.map { m =>
+        val out = Array.newBuilder[(Array[Byte], Long)]
+        m.forEach((k, v) => out += ((if (k == null) null else k.getBytes) -> v(0)))
+        out.result()
+      }
+      Iterator.single((rows, bufs.map(_.result()), dropped, hists))
+    }.collect()
+    val nums = numCols.zipWithIndex.map { case (c, i) =>
+      val slices = parts.map(_._2(i))
       val out = new Array[Double](slices.map(_.length).sum)
       var off = 0
       slices.foreach { p => System.arraycopy(p, 0, out, off, p.length); off += p.length }
-      c -> (out, parts.map(_._2(i)).sum)
+      c -> (out, parts.map(_._3(i)).sum)
     }.toMap
+    var invalid = Set.empty[String]
+    val cats = catCols.zipWithIndex.map { case (c, j) =>
+      val byBytes = new java.util.HashMap[java.nio.ByteBuffer, Array[Long]]()
+      parts.foreach(_._4(j).foreach { case (k, n) =>
+        val key = if (k == null) null else java.nio.ByteBuffer.wrap(k)
+        val cnt = byBytes.get(key)
+        if (cnt != null) cnt(0) += n else byBytes.put(key, Array(n))
+      })
+      val merged = scala.collection.mutable.HashMap.empty[String, Long]
+      byBytes.forEach { (k, n) =>
+        val key = if (k == null) null else {
+          val bytes = k.array()
+          graft.io.DriverParquet.strictUtf8(bytes).getOrElse {
+            invalid += c
+            new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+          }
+        }
+        merged.update(key, merged.getOrElse(key, 0L) + n(0))
+      }
+      c -> merged.toMap
+    }.toMap
+    Columns(parts.map(_._1).sum, nums, cats, invalid)
   }
 
   /** Per-column fit result of the multi-column quantile jobs: `None`
@@ -593,7 +661,7 @@ object Exact {
   final case class QuantFit(quantiles: Option[Seq[Double]], nUnique: Option[Long])
 
   /** Exact quantiles AND exact distinct counts for MANY columns in ONE
-    * scan via [[collectColumnsDoubles]] + driver sorts — the small-data
+    * scan via [[collectColumns]] + driver sorts — the small-data
     * side of the auto-dispatch (see [[quantilesMultiCentsHistogram]] for
     * the 100 TB side). No ≤2-decimal precondition, but columns containing
     * NaN/±Inf report `QuantFit(None, None)` so callers use the in-agg
@@ -650,7 +718,7 @@ object Exact {
   def numProfileViaDriverSort(
       df: org.apache.spark.sql.DataFrame, cols: Seq[String],
       probs: Seq[Double], withMoments: Boolean = true): Map[String, NumFit] = {
-    val arrays = collectColumnsDoubles(df, cols)
+    val arrays = collectColumns(df, cols).nums
     // per-COLUMN parallelism: each column's sort + cents + moment walk is
     // independent; sequential processing was the driver branch's serial
     // tail (~0.5 s over 8 × 600k cells at sf0.1)

@@ -19,13 +19,12 @@ import scala.collection.parallel.CollectionConverters._
   * the scan — vs the reference's full table copy per stage
   * (`modules/privacy.py:5,14,25`). V1 counts the null group like any
   * value: every V1 path turns a null group below the threshold into
-  * "OTHER".
+  * "OTHER". A string column holding a key that is not valid UTF-8
+  * suppresses through the byte-exact join form [[sdcSuppressBroadcast]]
+  * on every V1 path. The driver-side fits read their columns through
+  * the one collector, [[Exact.collectColumns]].
   */
 object Privacy {
-
-  /** Guards [[collectRawState]]'s temporary `files.minPartitionNum`
-    * override — see the comment at the use site. */
-  private val fitConfLock = new Object
 
   /** Ceiling on a fitted rare set in [[sdcSuppress]]. The set rides
     * every task of the apply pass as an `InSet` literal, so a column with
@@ -45,7 +44,10 @@ object Privacy {
     * one column per core fits at once. The null group is counted like any
     * other value: a null group below the threshold becomes "OTHER", as in
     * the v1 oracle's `COUNT(*) OVER (PARTITION BY c)`. A column whose rare
-    * set passes the ceiling takes [[sdcSuppressBroadcast]] instead. */
+    * set passes the ceiling, or holds a key that is not valid UTF-8 (an
+    * `InSet` literal is a decoded String and would no longer match the
+    * stored bytes), takes the byte-exact [[sdcSuppressBroadcast]]
+    * instead. */
   def sdcSuppress(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
     val strCols = df.schema.fields
       .filter(f => cols.contains(f.name) && f.dataType == StringType)
@@ -53,9 +55,13 @@ object Privacy {
     val rareSets = Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
       val rare = df.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
         .filter(col("__cnt") < threshold)
-        .select(col(c)).limit(SuppressFitMaxValues + 1)
-        .collect().map(_.getString(0))
-      if (rare.length > SuppressFitMaxValues) None else Some(rare.toSet)
+        .select(col(c).cast("binary")).limit(SuppressFitMaxValues + 1)
+        .collect().map(r => if (r.isNullAt(0)) null else r.getAs[Array[Byte]](0))
+      if (rare.length > SuppressFitMaxValues) None
+      else {
+        val keys = rare.map(b => if (b == null) Some(null) else graft.io.DriverParquet.strictUtf8(b))
+        if (keys.contains(None)) None else Some(keys.map(_.orNull).toSet)
+      }
     }
     strCols.zip(rareSets).foldLeft(df) {
       case (d, (c, Some(rare))) => sdcSuppressFitted(d, c, rare)
@@ -130,7 +136,7 @@ object Privacy {
         Exact.quantilesMultiCentsHistogram(df, Seq(c), probs)(c).quantiles
           .getOrElse(Exact.quantilesViaCentsHistogramDistributed(df, c, probs))
       case QuantileStrategy.DriverSort =>
-        val arr = Exact.collectColumnsDoubles(df, Seq(c))(c)._1
+        val arr = Exact.collectColumns(df, Seq(c)).values(c)
         java.util.Arrays.sort(arr)
         probs.map(Exact.quantileFromSorted(arr, _))
       case QuantileStrategy.SortPercentile =>
@@ -295,175 +301,17 @@ object Privacy {
   private final case class NumFit(values: Array[Double], cum: Array[Double],
                                   mu: Double, sigma: Double)
 
-  /** ONE fused scan over the internal rows collecting, per numeric
-    * column, the SORTED raw doubles (nulls and non-finites dropped) and,
-    * per string column, the full category histogram (null is a key) —
-    * the shared fitting collector behind [[syntheticSample]]'s driver
-    * path and [[protectFit]]. Primitive batches, no encoder; practical
-    * while the projected columns fit driver memory (documented ceiling
-    * [[DriverFitMaxCells]]). */
-  private def collectRawState(df: DataFrame, numNames: Seq[String], catNames: Seq[String])
-      : (Long, Map[String, Array[Double]], Map[String, Map[String, Long]]) = {
-    // r14: the fused one-job form below decodes every projected column
-    // SERIALLY within each scan task, and a small fixture's task count is
-    // its row-group count — a 1-row-group file runs the whole fit on one
-    // core while 31 idle (the v4 bench floor). When the scan's
-    // parallelism ceiling is far below the machine and several columns
-    // are projected, split the collect per COLUMN instead: column chunks
-    // are independent byte ranges, so per-column jobs decode in parallel
-    // at zero duplicated IO, and the exact row count ships free in the
-    // same footers. The fused path stays the at-scale form (row groups
-    // ≥ cores: scan tasks already saturate the cluster, one job beats
-    // |columns| scheduler round-trips).
-    // Fastest form first: a pure parquet scan's chunks decode DRIVER-side
-    // with (files × columns)-way parallelism and no scheduler at all
-    // (graft.io.DriverParquet — strict type pairings, refuses anything
-    // with cast/filter semantics). Safe here by construction: this
-    // collector only runs behind the DriverFitMaxCells dispatch, so the
-    // data was already driver-bound.
-    graft.io.DriverParquet.collectColumns(df, numNames, catNames) match {
-      case Some((rowsTotal, rawNums, catMaps)) =>
-        val numArrs = numNames.par.map { c =>
-          val a = rawNums(c)._1 // non-finite values dropped, as this fit wants
-          java.util.Arrays.parallelSort(a)
-          c -> a
-        }.toList.toMap
-        return (rowsTotal, numArrs, catMaps)
-      case None => ()
-    }
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val layout = graft.io.ScanStats.parquetScanLayout(df)
-    if (numNames.length + catNames.length > 1 &&
-        layout.exists { case (_, groups) => groups * 2 <= cores }) {
-      val rowsTotal = layout.get._1
-      def collectNum(c: String): Array[Double] = {
-        val slices = df.select(col(c).cast("double")).queryExecution.toRdd
-          .mapPartitions { it =>
-            val b = new scala.collection.mutable.ArrayBuilder.ofDouble
-            it.foreach { r =>
-              if (!r.isNullAt(0)) {
-                val v = r.getDouble(0)
-                if (!v.isNaN && !v.isInfinite) b += v
-              }
-            }
-            Iterator.single(b.result())
-          }.collect()
-        val sorted = new Array[Double](slices.map(_.length).sum)
-        var off = 0
-        slices.foreach { p => System.arraycopy(p, 0, sorted, off, p.length); off += p.length }
-        java.util.Arrays.parallelSort(sorted)
-        sorted
-      }
-      def collectCat(c: String): Map[String, Long] = {
-        val slices = df.select(col(c).cast("string")).queryExecution.toRdd
-          .mapPartitions { it =>
-            // UTF8String-keyed with clone-on-first-insert: row buffers are
-            // transient, but content hash/equals makes the un-cloned probe
-            // safe — only the vocabulary pays an allocation, not every row
-            val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
-            it.foreach { r =>
-              val key = if (r.isNullAt(0)) null else r.getUTF8String(0)
-              val cnt = m.get(key)
-              if (cnt != null) cnt(0) += 1L
-              else m.put(if (key == null) null else key.clone(), Array(1L))
-            }
-            val out = scala.collection.mutable.HashMap.empty[String, Long]
-            m.forEach((k, v) => out.update(if (k == null) null else k.toString, v(0)))
-            Iterator.single(out.toMap)
-          }.collect()
-        val merged = scala.collection.mutable.HashMap.empty[String, Long]
-        slices.foreach(_.foreach { case (k, v) =>
-          merged.update(k, merged.getOrElse(k, 0L) + v)
-        })
-        merged.toMap
-      }
-      // The session's `files.minPartitionNum = cores` floor (right for
-      // data-bearing scans) makes EACH of these jobs launch `cores`
-      // splits of which only the row-group-bearing ones produce rows —
-      // |columns| × (cores − groups) empty task launches of pure
-      // overhead. Parallelism here comes from the per-column fan-out,
-      // so pin the floor to the true row-group count around the fit
-      // (runtime SQL conf, read at each job's planning inside the try).
-      // The set/restore window is serialized (r15, ADVICE): two
-      // overlapping fits on one session would otherwise race the
-      // save/restore and the second restore could persist the pinned
-      // floor. A single process-wide monitor is enough — the window is
-      // tens of ms on the tiny inputs that reach this branch, and the
-      // fit's own parallelism (the per-column Par fan-out) runs inside
-      // the lock, not against it.
-      val sconf = df.sparkSession.conf
-      val (numArrs, catMaps) = fitConfLock.synchronized {
-        val prevFloor = sconf.getOption("spark.sql.files.minPartitionNum")
-        try {
-          sconf.set("spark.sql.files.minPartitionNum", layout.get._2.toString)
-          // at most `cores` columns at once: one fork per column measured
-          // slower on the pipeline benchmark (4 of 4 pairs, 0.3-1.7 s per
-          // op, 4 cores)
-          val cols = numNames.map(Left(_): Either[String, String]) ++
-            catNames.map(Right(_): Either[String, String])
-          val fitted = Par.map(cols, cores) {
-            case Left(c)  => Left(c -> collectNum(c))
-            case Right(c) => Right(c -> collectCat(c))
-          }
-          (fitted.collect { case Left(kv) => kv }.toMap,
-            fitted.collect { case Right(kv) => kv }.toMap)
-        } finally prevFloor match {
-          case Some(v) => sconf.set("spark.sql.files.minPartitionNum", v)
-          case None    => sconf.unset("spark.sql.files.minPartitionNum")
-        }
-      }
-      return (rowsTotal, numArrs, catMaps)
-    }
-    val kN = numNames.length
-    val kC = catNames.length
-    val proj = df.select(numNames.map(c => col(c).cast("double")) ++
-      catNames.map(c => col(c).cast("string")): _*)
-    val parts = proj.queryExecution.toRdd.mapPartitions { it =>
-      val bufs = Array.fill(kN)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-      val maps = Array.fill(kC)(scala.collection.mutable.HashMap.empty[String, Long])
-      var rows = 0L
-      it.foreach { r =>
-        rows += 1
-        var i = 0
-        while (i < kN) {
-          if (!r.isNullAt(i)) {
-            val v = r.getDouble(i)
-            if (!v.isNaN && !v.isInfinite) bufs(i) += v
-          }
-          i += 1
-        }
-        var j = 0
-        while (j < kC) {
-          val key = if (r.isNullAt(kN + j)) null else r.getUTF8String(kN + j).toString
-          val m = maps(j)
-          m.update(key, m.getOrElse(key, 0L) + 1L)
-          j += 1
-        }
-      }
-      Iterator.single((rows, bufs.map(_.result()), maps.map(_.toMap)))
-    }.collect()
-    val rowsTotal = parts.map(_._1).sum
-    // parallelSort + per-column parallelism: the driver fit's sort was
-    // the single-threaded half of v4's fit wall (r13 v4 measurement:
-    // 0.36 s fit-only against a 0.18 s collect job). Sort order is
-    // deterministic either way; the array stays bounded by the
-    // DriverFitMaxCells dispatch.
-    val numArrs = numNames.zipWithIndex.par.map { case (c, bi) =>
-      val slices = parts.map(_._2(bi))
-      val sorted = new Array[Double](slices.map(_.length).sum)
-      var off = 0
-      slices.foreach { p => System.arraycopy(p, 0, sorted, off, p.length); off += p.length }
-      java.util.Arrays.parallelSort(sorted)
-      c -> sorted
-    }.toList.toMap
-    val catMaps = catNames.zipWithIndex.map { case (c, bj) =>
-      val merged = scala.collection.mutable.HashMap.empty[String, Long]
-      parts.foreach(_._3(bj).foreach { case (k, v) =>
-        merged.update(k, merged.getOrElse(k, 0L) + v)
-      })
-      c -> merged.toMap
-    }.toMap
-    (rowsTotal, numArrs, catMaps)
+  /** [[Exact.collectColumns]] (nulls and non-finites dropped) with every
+    * numeric array sorted in place — the fitting collector behind
+    * [[syntheticSample]]'s driver path and [[protectFit]], both gated by
+    * [[DriverFitMaxCells]]. The sorts run in parallel per column: the
+    * driver fit's sort was the single-threaded half of v4's fit wall (r13
+    * v4 measurement: 0.36 s fit-only against a 0.18 s collect job). */
+  private def collectRawState(df: DataFrame, numNames: Seq[String],
+                              catNames: Seq[String]): Exact.Columns = {
+    val got = Exact.collectColumns(df, numNames, catNames)
+    numNames.par.foreach(c => java.util.Arrays.parallelSort(got.values(c)))
+    got
   }
 
   /** Fit from a SORTED raw-double array (driver path): one pass builds
@@ -616,10 +464,11 @@ object Privacy {
     // Fitting strategy — auto-selected from the optimizer's size estimate
     // (mirrors generalizeNumericAuto's shape dispatch) unless forced.
     // The auto decision may add one LIMIT-bounded probe job (see
-    // [[driverFits]]); the fit itself is then exactly ONE Spark job:
+    // [[driverFits]]); the fit itself is then at most ONE Spark job:
     //  - driver fit (small side; right while the columns fit driver
-    //    memory): one fused scan over the internal rows collects every
-    //    numeric column's RAW doubles (primitive batches, no encoder,
+    //    memory): [[Exact.collectColumns]] collects every numeric
+    //    column's RAW doubles in one fused scan, or none on a pure
+    //    parquet scan (primitive batches, no encoder,
     //    sorted on the driver — a near-unique money column costs a 5 MB
     //    collect instead of a ~1 s distinct shuffle, and arbitrary-
     //    precision columns bootstrap on exact values), every categorical
@@ -634,16 +483,16 @@ object Privacy {
 
     val (sourceRows, numFits, catCounts): (Long, Map[Int, NumFit], Map[Int, Seq[(String, Long)]]) =
       if (useDriverFit) {
-        val (rowsTotal, numArrs, catMaps) =
+        val got =
           collectRawState(df, numIdx.map(_._1.name).toSeq, catIdx.map(_._1.name).toSeq)
         // per-column Kahan fit in parallel (driver-bounded arrays; each
         // column's fit is independent and order-insensitive in the map)
         val nf = numIdx.par.flatMap { case ((f, i)) =>
-          val sorted = numArrs(f.name)
+          val sorted = got.values(f.name)
           if (sorted.isEmpty) None else Some(i -> fitFromSortedDoubles(sorted))
         }.toList.toMap
-        val cc = catIdx.map { case (f, i) => i -> catMaps(f.name).toSeq }.toMap
-        (rowsTotal, nf, cc)
+        val cc = catIdx.map { case (f, i) => i -> got.cats(f.name).toSeq }.toMap
+        (got.rows, nf, cc)
       } else {
         // ---- at-scale fit (r11 rework): collects bounded at ANY domain.
         // The previous form collected the EXACT cents histogram — value-
@@ -1047,12 +896,16 @@ object Privacy {
     * collect stops at [[SuppressFitMaxValues]] + 1 rows, and its edges
     * from [[generalizeNumericAuto]]'s distributed dispatch. Both paths
     * apply through the same [[sdcSuppressFitted]] / [[generalizeFitted]]
-    * projections. */
+    * projections, and both send a string column holding a key that is not
+    * valid UTF-8 to the byte-exact [[sdcSuppressBroadcast]]. The buffers
+    * come from [[Exact.collectColumns]]: no Spark job on a pure parquet
+    * scan, one fused job on anything else. */
   final case class ProtectFit private[ops] (
       rows: Long,
       fields: Seq[StructField],
       numSorted: Map[String, Array[Double]],
-      catCounts: Map[String, Map[String, Long]]) {
+      catCounts: Map[String, Map[String, Long]],
+      invalidUtf8: Set[String]) {
 
     /** Non-null distinct count. Numeric: uniques in the sorted buffer
       * (non-finites dropped by the collector — a ≤2-equivalence-class
@@ -1081,18 +934,24 @@ object Privacy {
     }
 
     /** V1 rare categories of a fitted string column: the values counted
-      * below `threshold`, with null a member when the null group is. */
-    def rareCategories(c: String, threshold: Long): Set[String] =
-      catCounts.getOrElse(c, Map.empty).collect { case (k, n) if n < threshold => k }.toSet
+      * below `threshold`, with null a member when the null group is. None
+      * when the column holds a key that is not valid UTF-8: its counts
+      * are merged under lenient decodes and no String set matches its
+      * bytes, so the caller takes [[sdcSuppressBroadcast]], as
+      * [[sdcSuppress]] does. */
+    def rareCategories(c: String, threshold: Long): Option[Set[String]] =
+      if (invalidUtf8(c)) None
+      else Some(catCounts.getOrElse(c, Map.empty).collect { case (k, n) if n < threshold => k }.toSet)
   }
 
-  /** Build a [[ProtectFit]] with ONE fused scan (see class doc). */
+  /** Build a [[ProtectFit]] with one collect of every column (see class
+    * doc). */
   def protectFit(df: DataFrame): ProtectFit = {
     val fields = df.schema.fields.toSeq
     val numNames = fields.filter(_.dataType.isInstanceOf[NumericType]).map(_.name)
     val catNames = fields.filter(_.dataType == StringType).map(_.name)
-    val (rows, numArrs, catMaps) = collectRawState(df, numNames, catNames)
-    ProtectFit(rows, fields, numArrs, catMaps)
+    val got = collectRawState(df, numNames, catNames)
+    ProtectFit(got.rows, fields, got.nums.view.mapValues(_._1).toMap, got.cats, got.invalidUtf8)
   }
 
   /** V1 apply half: a PRE-FITTED rare set (from [[sdcSuppress]] or

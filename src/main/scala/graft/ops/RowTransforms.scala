@@ -170,7 +170,7 @@ object RowTransforms {
     val driverFit: Option[(Double, Double)] =
       if (graft.io.ScanStats.exactRowCount(df) > Exact.DriverFitMaxRows) None
       else {
-        val (arr, dropped) = Exact.collectColumnsDoubles(df, Seq(c))(c)
+        val (arr, dropped) = Exact.collectColumns(df, Seq(c)).nums(c)
         if (dropped > 0 || arr.isEmpty) None // non-finite / all-null: in-plan form
         else {
           java.util.Arrays.sort(arr)

@@ -42,18 +42,22 @@ class SourceSweepSpec extends AnyFunSuite {
     // collects feeding the psi/js/chi2 driver tails — both behind the
     // same KsDriverMaxBytes input ceiling as every drift driver path
     // (bounded inputs ⇒ bounded category domains; above it the windowed
-    // plan tail runs and neither site executes), reviewed
-    "ops/Drift.scala" -> (9, 3),
-    // one collect fewer: the single-column collectColumnDoubles is gone;
-    // V2's driver sort reads through collectColumnsDoubles' collect
+    // plan tail runs and neither site executes), reviewed.
+    // One collect fewer: the drift tails' own raw-double collect is gone;
+    // they read through Exact.collectColumns behind the same ceiling.
+    "ops/Drift.scala" -> (8, 3),
+    // Exact.collectColumns holds the ONE Spark-side column collect behind
+    // every driver-side fit (one fused job, each caller behind its own
+    // driver-fit ceiling); it replaced collectColumnsDoubles' collect, so
+    // the count is unchanged.
     "ops/Exact.scala" -> (3, 1),
-    // r14 +2 collects: collectRawState's per-column parallel path (one
-    // RDD collect per fitted column) — both behind the DriverFitMaxCells
-    // dispatch, same boundedness as the fused collect they replace.
-    // +1 collect: sdcSuppress's rare-set fit, a grouped-count collect
-    // under limit(SuppressFitMaxValues + 1) — bounded at any input size
-    // (the count-over-window V1 it replaced had no collect)
-    "ops/Privacy.scala" -> (7, 1),
+    // Three collects fewer: collectRawState's fused collect and its
+    // per-column split branch (two collects) are gone; the fit reads
+    // through Exact.collectColumns. Left: sdcSuppress's rare-set fit (a
+    // grouped-count collect under limit(SuppressFitMaxValues + 1)), the
+    // driverFits probe (one long per partition), V4's at-scale fit
+    // (≤ FitHistMaxBuckets rows per column) and V5's capped sweep.
+    "ops/Privacy.scala" -> (4, 1),
     "ops/Profile.scala" -> (2, 1),
     "ops/Relational.scala" -> (0, 9),
     "ops/RowTransforms.scala" -> (1, 3),
@@ -99,6 +103,20 @@ class SourceSweepSpec extends AnyFunSuite {
         "review each NEW site for boundedness (ceiling / fit-size / maybeBroadcast\n" +
         "gate), then update SourceSweepSpec.Recorded in the same commit:\n" +
         drift.mkString("\n"))
+  }
+
+  // Session configuration is fixed when Sessions.local builds the
+  // session. A runtime SQL conf write mid-query is visible to every
+  // concurrent query on the same shared session.
+  test("no runtime SQL conf set/unset in src/main outside Sessions.scala") {
+    val writes = Seq("conf.set(", "conf.unset(", "setConfString(")
+    val sites = codeFiles.filter(_._1 != "Sessions.scala").flatMap { case (f, code) =>
+      val n = code.map(l => writes.map(occurrences(l, _)).sum).sum
+      if (n == 0) None else Some(s"  $f: $n")
+    }
+    assert(sites.isEmpty,
+      "configure the session in Sessions.local instead of writing its conf at run time:\n" +
+        sites.mkString("\n"))
   }
 
   // Concurrent Spark actions go through graft.ops.Par.both / Par.all,

@@ -17,6 +17,21 @@ class GraftSessionSpec extends SparkSpec {
   private lazy val real = Csv.read(spark, sample("sample_real.csv"))
   private lazy val anon = Csv.read(spark, sample("sample_anon.csv"))
 
+  /** `f`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500) // the listener bus is async; let posted events drain
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("S1 csv inference matches the expected schema") {
     assert(real.schema.map(_.name) ==
       Seq("age", "gender", "pincode", "income", "target", "name"))
@@ -114,25 +129,11 @@ class GraftSessionSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val li = graft.Tables.lineitem(spark, Sf)
 
-    // the fused fit is exactly ONE Spark job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val fit =
-      try {
-        val f = Privacy.protectFit(li)
-        // listener bus is async; give posted events a moment to drain
-        Thread.sleep(500)
-        f
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (fit, jobs) = jobsDuring(Privacy.protectFit(li))
     // r14: a pure parquet scan's fit decodes DRIVER-side (DriverParquet),
-    // so the fused fit costs ZERO Spark jobs (was the round-2 "one job"
-    // fusion pin; the one-job ceiling still gates the Spark-collect path,
-    // which non-parquet inputs take — see collectRawState)
-    assert(jobs.get() == 0, s"protectFit ran ${jobs.get()} jobs, want 0 (driver-side decode)")
+    // so the fused fit costs ZERO Spark jobs; any other input takes the
+    // collector's one fused job (pinned in the next test)
+    assert(jobs == 0, s"protectFit ran $jobs jobs, want 0 (driver-side decode)")
 
     // suggestion parity with the standalone V5 sweep
     val v5 = Privacy.smartSuggest(li).collect()
@@ -167,7 +168,7 @@ class GraftSessionSpec extends SparkSpec {
     // directly on supplier
     val sup = graft.Tables.supplier(spark, Sf).select(col("s_suppkey"), col("s_name"))
     val supFit = Privacy.protectFit(sup)
-    val rare = supFit.rareCategories("s_name", 5)
+    val rare = supFit.rareCategories("s_name", 5).get
     assert(rare.nonEmpty, "supplier names should have rare categories")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long](0), r.getAs[String](1))).sortBy(_._1).toSeq
@@ -180,5 +181,20 @@ class GraftSessionSpec extends SparkSpec {
     val synth = sess2.protectAuto(synthetic = true)
     assert(synth.count() == li.count())
     assert(synth.columns.toSeq == auto.columns.toSeq)
+  }
+
+  test("protectFit: one Spark job on a computed-column projection of a scan") {
+    import graft.ops.Privacy
+    import org.apache.spark.sql.functions._
+    // computed columns refuse the driver decode, so the fit runs the
+    // collector's Spark form: one fused job whatever the column count
+    val li = graft.Tables.lineitem(spark, Sf).select(
+      (col("l_quantity") + 1).as("q"), (col("l_extendedprice") * 2).as("p"),
+      (col("l_discount") - 0.5).as("d"), lower(col("l_returnflag")).as("rf"),
+      lower(col("l_linestatus")).as("ls"))
+    val (fit, jobs) = jobsDuring(Privacy.protectFit(li))
+    assert(jobs == 1, s"protectFit ran $jobs jobs, want 1")
+    assert(fit.rows == li.count())
+    assert(fit.catCounts("rf").values.sum == fit.rows)
   }
 }

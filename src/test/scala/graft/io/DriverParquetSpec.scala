@@ -39,14 +39,14 @@ class DriverParquetSpec extends SparkSpec {
         s"non-finite drop count for $c")
     }
     // keep-non-finite mode: NaN/Inf are sample points, -0.0 normalizes
-    val raw = DriverParquet.collectNumericColumnsRaw(df, Seq("f", "d")).get
+    val raw = graft.ops.Exact.collectColumns(df, Seq("f", "d"), keepNonFinite = true)
     for (c <- Seq("f", "d")) {
       val want = df.select(col(c).cast("double").as("v"))
         .filter(col("v").isNotNull).as[Double]
         .collect().map(v => if (v == 0.0) 0.0 else v).sorted
       // Arrays.equals, not Seq ==: primitive Seq equality unboxes to
       // NaN != NaN; bit-level comparison is the intended semantics here
-      assert(java.util.Arrays.equals(raw(c).sorted, want), s"raw column $c")
+      assert(java.util.Arrays.equals(raw.values(c).sorted, want), s"raw column $c")
     }
     val wantHist = df.groupBy("s").count().collect()
       .map(r => (if (r.isNullAt(0)) null else r.getString(0)) -> r.getLong(1)).toMap
@@ -81,12 +81,16 @@ class DriverParquetSpec extends SparkSpec {
       spark.conf.set("spark.sql.parquet.outputTimestampType", _))
     val df = spark.read.parquet(path)
     assert(df.schema("ts").dataType.typeName.startsWith("timestamp"))
-    // default OFF (r16 ADVICE): the fit/drift collectors' contract is
+    // default OFF (r16 ADVICE): the fit/drift collector's contract is
     // cast-to-seconds doubles; a raw-micros image would be ~1e6× off, so
-    // both shared entry points must REFUSE and fall back to Spark
+    // the decode must REFUSE and the collector fall back to Spark, in
+    // both keepNonFinite modes
     assert(DriverParquet.collectColumns(df, Seq("ts"), Nil).isEmpty)
-    assert(DriverParquet.collectNumericColumnsRaw(df, Seq("ts")).isEmpty)
-    assert(DriverParquet.collectNumericColumns(df, Seq("ts")).isEmpty)
+    assert(DriverParquet.collectColumns(df, Seq("ts"), Nil, keepNonFinite = true).isEmpty)
+    for (keep <- Seq(false, true)) {
+      val secs = graft.ops.Exact.collectColumns(df, Seq("ts"), keepNonFinite = keep).values("ts")
+      assert(secs.sorted.toSeq == (0 until 100).map(_.toDouble))
+    }
     // opted in (distinctCounts): the raw INT64 epoch image, file unit
     val got = DriverParquet.collectColumns(df, Seq("ts"), Nil,
       keepNonFinite = true, rawInt64Timestamps = true)

@@ -17,6 +17,26 @@ class PrivacySpec extends SparkSpec {
     }
   }
 
+  test("V1: rare keys that are not valid UTF-8 are suppressed by every entry point") {
+    // 100 × "A", 25 common keys × 5 (so V5 suggests suppression: > 20
+    // distinct), and two byte-distinct invalid keys × 3 each, which a
+    // lenient decode merges into one String counted 6
+    val bad = Seq(Array(0xC3.toByte, 0x28.toByte), Array(0xC4.toByte, 0x28.toByte))
+    val rows = Seq.fill(100)("A".getBytes("UTF-8")) ++
+      (0 until 25).flatMap(i => Seq.fill(5)(f"k$i%02d".getBytes("UTF-8"))) ++
+      bad.flatMap(Seq.fill(3)(_))
+    val mem = rows.toDF("raw").select(col("raw").cast("string").as("v"))
+    val path = java.nio.file.Files.createTempDirectory("v1_badutf8").toString + "/t.parquet"
+    mem.write.mode("overwrite").parquet(path)
+    def others(df: org.apache.spark.sql.DataFrame) = df.filter(col("v") === "OTHER").count()
+    for (df <- Seq(mem, spark.read.parquet(path))) {
+      assert(others(Privacy.sdcSuppressBroadcast(df, Seq("v"), 5)) == 6L)
+      assert(others(Privacy.sdcSuppress(df, Seq("v"), 5)) == 6L)
+      val auto = new graft.core.GraftSession(spark).uploadAnon(df).protectAuto(sdcThreshold = 5)
+      assert(others(auto) == 6L)
+    }
+  }
+
   test("sdcSuppress skips non-string columns silently") {
     val df = Seq((1.0, "x")).toDF("num", "s")
     val out = Privacy.sdcSuppress(df, Seq("num", "s"), 5)
