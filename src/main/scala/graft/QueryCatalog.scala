@@ -72,16 +72,15 @@ object QueryCatalog {
       Privacy.sdcSuppress(
           Tables.supplier(s, d).select(col("s_suppkey"), col("s_name")), Seq("s_name"), 5)),
     "v2_generalize" -> ((s, d) =>
-      // DriverSort: bench tables are known to fit a single collected
-      // column; the distributed histogram stays the scale path (protect()).
+      // The one V2 fit: the driver sort while the column fits the
+      // driver-fit ceiling (sf ≤ 0.1), the cents histogram above it.
       // No output orderBy: the gate compare is row-order-insensitive
       // (144 catalog entries gate without one), the reference's
       // generalize has no ordering contract, and the global sort was
       // the row's dominant cost — 3 AQE jobs / ~0.55 s of its 0.99 s
       // wall at sf0.1, and an O(n log n) range-exchange over 38 M rows
       // at x64 (the r12 curvature watch item, 7.65 vs linear 4).
-      Privacy.generalizeNumeric(Tables.lineitem(s, d), "l_extendedprice", 10,
-        Privacy.QuantileStrategy.DriverSort)
+      Privacy.generalizeNumeric(Tables.lineitem(s, d), "l_extendedprice", 10)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))),
     "v3_dp_noise" -> ((s, d) =>
       Privacy.dpNoise(Tables.lineitem(s, d), Seq("l_quantity"), epsilon = 1.0)
@@ -662,7 +661,7 @@ object QueryCatalog {
   private def v2Sql: String = {
     val probs = (0 to 10).map(i => (i.toDouble / 10).toString).mkString(", ")
     // bins come from the DISTINCT quantile values (the engine dedupes
-    // edges before labeling — Privacy.generalizeNumeric:100); duplicate
+    // edges before labeling — Privacy.generalizeFitted); duplicate
     // quantiles on heavy-mass columns otherwise leave the oracle with
     // phantom empty bins AND the wrong closed-bracket bin, and a
     // single-distinct-edge (constant) column must label every row NULL

@@ -54,8 +54,10 @@ final class GraftSession(val spark: SparkSession) {
     * noise is a column expression. The returned plan is therefore the
     * scan under one Project, and every later reader (utility fits,
     * counts, previews, a CSV publish) re-runs no fit. The fits are eager:
-    * one grouped-count job per suppressed column, the V2 dispatch and
-    * edge jobs per generalized column. A null group counted below the
+    * one grouped-count job per suppressed column, and per generalized
+    * column one [[graft.ops.Exact.quantiles]] fit of its exact edges
+    * (the driver sort below `Privacy`'s driver-fit ceiling, the cents
+    * histogram above it). A null group counted below the
     * threshold becomes "OTHER", as in [[protectAuto]]. A suppressed
     * column whose rare set passes
     * [[graft.ops.Privacy.SuppressFitMaxValues]] keeps the lazy
@@ -65,10 +67,7 @@ final class GraftSession(val spark: SparkSession) {
     val a = anon.getOrElse(sys.error("no anon dataset uploaded"))
     var df = Privacy.sdcSuppress(a, config.sdcCols, config.sdcThreshold)
     config.generalizeCols.foreach { c =>
-      // Auto-detect: cents-histogram quantiles only when the column
-      // verifiably has ≤2 decimals and fits DECIMAL(18,2); arbitrary
-      // user columns fall back to sort-based percentiles.
-      df = Privacy.generalizeNumericAuto(df, c, config.generalizeBins)
+      df = Privacy.generalizeNumeric(df, c, config.generalizeBins)
     }
     if (config.dpCols.nonEmpty)
       df = Privacy.dpNoise(df, config.dpCols, config.epsilon, config.sensitivity, config.seed)

@@ -209,7 +209,7 @@ object Chunking {
                     capacity: Int = 256, buckets: Int = 32): DataFrame = {
     require(capacity > 0, "capacity must be positive")
     // Persist BEFORE the two consumers (offsets, spans) — the
-    // quantilesMultiCentsHistogram precedent: the range partitioner's
+    // Exact.centsHistogramFit precedent: the range partitioner's
     // sampling pass would otherwise re-run the full tokenize scan, and —
     // the correctness half — the sampler's split points vary per
     // materialization (seeded by RDD id), so without a shared

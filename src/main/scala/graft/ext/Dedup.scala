@@ -183,7 +183,7 @@ object Dedup {
     // ~O(total tokens), so it only broadcasts when the INPUT corpus is
     // small (vocab rows ≈ bytes/6); past the threshold the posting⋈dfreq
     // join shuffles both sides — the 100 TB shape. Same auto-dispatch
-    // idiom as generalizeNumericAuto: plan stats, no extra job.
+    // idiom as Privacy.driverFits: plan stats, no extra job.
     val dfreqSmall = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       DfreqBroadcastMaxInputBytes
     val dfreqJ = if (dfreqSmall) broadcast(dfreq) else dfreq

@@ -815,11 +815,11 @@ object TextStats {
     *
     * Tertile edges are exact interpolated quantiles over the PER-DOC
     * score frame (one double per document — already 6-8 orders smaller
-    * than the corpus), fitted via the profile idiom: narrow collect +
-    * driver sort below the row ceiling, in-agg `percentile` broadcast
-    * above it. Both produce the identical quantile_cont interpolation;
-    * the bucket gate itself is a stateless literal/broadcast comparison
-    * riding the score scan. */
+    * than the corpus), fitted by [[graft.ops.Exact.quantiles]]: the
+    * driver sort below the row ceiling, the cents histogram above it
+    * (its `percentile` fallback takes the full-precision scores). The
+    * bucket gate itself is a stateless literal comparison riding the
+    * score scan. */
   def perplexityBuckets(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     import graft.ops.Exact
     val t1 = 1.0 / 3
@@ -844,27 +844,16 @@ object TextStats {
     // the score frame has at most one row per input doc, so the input
     // bound certifies the collect without executing the LM pipeline twice
     // just to count it.
-    val driverFit: Option[Seq[Double]] =
-      if (df.count() <= Exact.DriverFitMaxRows)
-        Exact.quantilesViaDriverSortMulti(lp, Seq("avg_logprob"), Seq(t1, t2))("avg_logprob")
-          .quantiles
-      else None
-    driverFit match {
-      // no output orderBy on either branch: a global sort of the bucket
-      // frame serves no contract (r12's cosmetic-sort catch)
-      case Some(qs) if !qs(0).isNaN =>
-        lp.select(col("doc_id"), col("avg_logprob"),
-            when(col("avg_logprob") >= qs(1), "head")
-              .when(col("avg_logprob") >= qs(0), "middle")
-              .otherwise("tail").as("bucket"))
-      case _ =>
-        val fit = lp.agg(expr(s"percentile(avg_logprob, array(${t1}D, ${t2}D))").as("q"))
-          .select(col("q")(0).as("__t1"), col("q")(1).as("__t2"))
-        lp.crossJoin(broadcast(fit))
-          .select(col("doc_id"), col("avg_logprob"),
-            when(col("avg_logprob") >= col("__t2"), "head")
-              .when(col("avg_logprob") >= col("__t1"), "middle")
-              .otherwise("tail").as("bucket"))
+    val driver = df.count() <= Exact.DriverFitMaxRows
+    val (e1, e2) = Exact.quantiles(lp, Seq("avg_logprob"), Seq(t1, t2), driver)("avg_logprob") match {
+      case Some(qs) => (lit(qs(0)), lit(qs(1)))
+      case None     => (lit(null).cast("double"), lit(null).cast("double"))
     }
+    // no output orderBy: a global sort of the bucket frame serves no
+    // contract (r12's cosmetic-sort catch)
+    lp.select(col("doc_id"), col("avg_logprob"),
+      when(col("avg_logprob") >= e2, "head")
+        .when(col("avg_logprob") >= e1, "middle")
+        .otherwise("tail").as("bucket"))
   }
 }

@@ -42,7 +42,8 @@ object UtilityCheck {
       .map(_.name).toSeq
 
   /** (accuracy, weightedF1) on a 30% holdout; (NaN, NaN) on degenerate
-    * input, mirroring the reference's guards. */
+    * input, mirroring the reference's guards: fewer than two classes, or
+    * a label that is not a non-negative integer. */
   def evalOne(df: DataFrame, target: String): (Double, Double) = {
     import org.apache.spark.ml.classification.{LogisticRegression, RandomForestClassifier}
     import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
@@ -70,17 +71,21 @@ object UtilityCheck {
         lit(1000000L)))
       .select((feats :+ target :+ "__gate").map(col): _*)
       .withColumn("label", col(target).cast("double")).na.drop(Seq("label"))
-    // ONE aggregate fits the class count, the row count, and every
-    // feature's impute mean (the previous per-feature imputeMean was k+1
-    // separate scans).
-    val aggs = Seq(count_distinct(col("label")).as("__k"),
-      count(lit(1)).as("__n")) ++
+    // ONE aggregate fits the class count, the row count, the count of
+    // labels MLlib's classifiers refuse (not a non-negative integer below
+    // Int.MaxValue — e.g. a label column V4 synthesized into continuous
+    // draws), and every feature's impute mean (the previous per-feature
+    // imputeMean was k+1 separate scans).
+    val label = col("label")
+    val badLabel = label < 0 || label >= Int.MaxValue.toDouble || label =!= rint(label)
+    val aggs = Seq(count_distinct(label).as("__k"),
+      count(lit(1)).as("__n"), count(when(badLabel, lit(1))).as("__bad")) ++
       feats.map(c => avg(col(c)).as(s"${c}__mu"))
     val st = base.agg(aggs.head, aggs.tail: _*).head()
-    if (st.getLong(0) < 2) return (Double.NaN, Double.NaN)
+    if (st.getLong(0) < 2 || st.getLong(2) > 0) return (Double.NaN, Double.NaN)
     val nRows = st.getLong(1)
     val imputed = feats.zipWithIndex.foldLeft(base) { case (d, (c, i)) =>
-      val m = if (st.isNullAt(i + 2)) 0.0 else st.getDouble(i + 2)
+      val m = if (st.isNullAt(i + 3)) 0.0 else st.getDouble(i + 3)
       d.withColumn(c, coalesce(col(c).cast("double"), lit(m)))
     }
     // Bounded deterministic hash sample for the fit/eval (the

@@ -815,17 +815,12 @@ object Drift {
     true
   }
 
-  /** The distributed (ci, psi) plan behind [[psiMulti]] — exposed so the
-    * plan-shape guards can assert on the real executed stages (the public
-    * forms collect the driver-sized result into a local frame). */
-  /** Decile-edge fit for PSI, auto-dispatched like Profile.profile: a
-    * narrow fused collect + driver sorts below the size ceiling (the
-    * in-agg `percentile` buffers EVERY value per column inside one
-    * aggregation hash map — ~7 s for 7 lineitem columns at sf0.1, vs
-    * ~0.4 s collected), the domain-shuffling cents histogram above it.
-    * All three fits produce bit-identical quantile_cont interpolation;
-    * the in-agg form survives only as the per-column fallback for values
-    * the cents paths can't certify (>2 decimals / non-finite). */
+  /** Decile-edge fit for PSI through [[Exact.quantiles]]: the driver
+    * sort below the size ceiling (the in-agg `percentile` buffers EVERY
+    * value per column inside one aggregation hash map — ~7 s for 7
+    * lineitem columns at sf0.1, vs ~0.4 s collected), the cents histogram
+    * above it, `percentile` for a column neither certifies. An all-null
+    * column, or one whose edges hold NaN, gets no edges. */
   private def psiEdges(before: DataFrame, cols: Seq[String],
                        bins: Int): Map[Int, Seq[Double]] = {
     val probs = (1 until bins).map(_.toDouble / bins)
@@ -835,24 +830,9 @@ object Drift {
         case Some(rows) => BigInt(rows) * cols.length * 8 <= cap
         case None => before.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
       }
-    val fits: Map[String, Exact.QuantFit] =
-      if (driverOk) Exact.quantilesViaDriverSortMulti(before, cols, probs)
-      else Exact.quantilesMultiCentsHistogram(before, cols, probs)
-    val fallbackCols = cols.filter(c => fits(c).quantiles.isEmpty)
-    val fallbackRow: Map[String, Seq[Double]] =
-      if (fallbackCols.isEmpty) Map.empty
-      else {
-        val r = before.agg(
-          expr(s"percentile(CAST(${fallbackCols.head} AS DOUBLE), array(${probs.mkString("D,")}D))").as("q0"),
-          fallbackCols.tail.zipWithIndex.map { case (c, i) =>
-            expr(s"percentile(CAST($c AS DOUBLE), array(${probs.mkString("D,")}D))").as(s"q${i + 1}")
-          }: _*).head()
-        fallbackCols.zipWithIndex.map { case (c, i) =>
-          c -> (if (r.isNullAt(i)) Seq.empty[Double] else r.getSeq[Double](i))
-        }.toMap
-      }
+    val fits = Exact.quantiles(before, cols, probs, driverOk)
     cols.zipWithIndex.map { case (c, i) =>
-      val qs = fits(c).quantiles.getOrElse(fallbackRow.getOrElse(c, Seq.empty))
+      val qs = fits(c).getOrElse(Seq.empty)
       i -> (if (qs.exists(_.isNaN)) Seq.empty else qs.distinct.sorted)
     }.toMap
   }
@@ -893,6 +873,9 @@ object Drift {
       .agg(round(max(when(col("ta") > 0 && col("tb") > 0, col("cum"))), roundTo).as("psi"))
   }
 
+  /** The distributed (ci, psi) plan behind [[psiMulti]] — exposed so the
+    * plan-shape guards can assert on the real executed stages (the public
+    * forms collect the driver-sized result into a local frame). */
   private[graft] def psiFrame(before: DataFrame, after: DataFrame,
                               cols: Seq[String], bins: Int, eps: Double,
                               roundTo: Int): DataFrame = {

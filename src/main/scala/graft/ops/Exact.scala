@@ -218,83 +218,44 @@ object Exact {
     * boundary — formula shape matters, not just the math. */
   def interp(lo: Double, hi: Double, f: Double): Double = lo * (1 - f) + hi * f
 
-  /** Exact linear-interpolated quantiles of a ≤2-decimal column via a
-    * CENTS HISTOGRAM: one map-side-combinable groupBy on the distinct cent
-    * values (small at any table size when the value domain is bounded).
-    * The cumulative walk happens inside the plan (ordered window over the
-    * histogram) and only the ≤ 2·|probs| crossing bins come back to the
-    * driver. Same bit-exact interpolation as Spark's `percentile` and
-    * DuckDB's `quantile_cont` (h = p·(n−1), then [[interp]]).
-    *
-    * The global-order window runs in one task, but over the VALUE DOMAIN
-    * (distinct cents), not the data — bounded regardless of table size,
-    * which is the right trade at 100 TB where collecting a 10⁷-bin
-    * histogram per column to the driver is the actual bottleneck. */
-  def quantilesViaCentsHistogramDistributed(
-      df: org.apache.spark.sql.DataFrame, c: String,
-      probs: Seq[Double]): Seq[Double] = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = df.select(cents(col(c)).as("b"))
-      .filter(col("b").isNotNull)
-      .groupBy("b").agg(count(lit(1)).as("cnt"))
-    val wCum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist
-      .withColumn("cum", sum(col("cnt")).over(wCum))
-      .withColumn("n", sum(col("cnt")).over(Window.partitionBy()))
-      .withColumn("lo", col("cum") - col("cnt"))
-    val probsArr = array(probs.zipWithIndex.map { case (p, i) =>
-      struct(lit(i).as("pi"), lit(p).as("p"))
-    }: _*)
-    // rank r lives in bin b iff lo <= r < cum; each prob needs ranks
-    // floor(h) and floor(h)+1.
-    val inLo = col("r0") >= col("lo") && col("r0") < col("cum")
-    val inHi = col("r0") + 1 >= col("lo") && col("r0") + 1 < col("cum")
-    val crossings = cum
-      .select(col("b"), col("lo"), col("cum"), explode(probsArr).as("pp"),
-        (col("pp.p") * (col("n") - 1).cast("double")).as("h"))
-      .withColumn("r0", floor(col("h")).cast("long"))
-      .filter(inLo || inHi)
-      .groupBy(col("pp.pi").as("pi"))
-      .agg(first(col("h")).as("h"),
-        min(when(inLo, col("b"))).as("blo"),
-        min(when(inHi, col("b"))).as("bhi"))
-      .collect()
-    val byIdx = crossings.map(r =>
-      r.getInt(0) -> ((r.getDouble(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
-    probs.indices.map { i =>
-      byIdx.get(i) match {
-        case None => Double.NaN // empty histogram
-        case Some((h, blo, bhi)) =>
-          val lo = blo / 100.0
-          if (h == math.floor(h)) lo
-          else interp(lo, bhi.getOrElse(blo) / 100.0, h - math.floor(h))
+  /** The one exact-quantile fit: linear-interpolated `probs` quantiles
+    * (h = p·(n−1), then [[interp]] — DuckDB `quantile_cont`) of every
+    * column in `cols`, for V2 edges, PSI edges, winsorize and the
+    * perplexity tertiles. The caller decides `driver` against its own
+    * ceiling:
+    *  - `driver`: [[collectColumns]] plus a sort per column; any finite
+    *    doubles, no ≤2-decimal precondition;
+    *  - otherwise the bucketed cents histogram ([[centsHistogramFit]]),
+    *    which shuffles the value DOMAIN, never the data, and checks
+    *    cents-eligibility (≤2 decimals, fits DECIMAL(18,2)) in its own
+    *    scan;
+    *  - a column the branch cannot certify (non-finite values dropped on
+    *    the driver, or not cents-eligible) goes into ONE aggregate with a
+    *    `percentile(CAST(c AS DOUBLE), array(probs))` per column, whose
+    *    NaN/±Inf ordering is the oracle's.
+    * None: the column has no non-null value. A Some holds NaN only when
+    * the `percentile` fallback returns it. */
+  def quantiles(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+                probs: Seq[Double], driver: Boolean): Map[String, Option[Seq[Double]]] = {
+    val fits =
+      if (driver) numProfileViaDriverSort(df, cols, probs, withMoments = false)
+      else centsHistogramFit(df, cols, probs, withMoments = false, hiLo = true)
+    val rest = cols.filterNot(fits(_).eligible)
+    val fallback: Map[String, Option[Seq[Double]]] =
+      if (rest.isEmpty) Map.empty
+      else {
+        val ps = array(probs.map(lit): _*)
+        val aggs = rest.map(c => percentile(col(c).cast("double"), ps))
+        val r = df.agg(aggs.head, aggs.tail: _*).head()
+        rest.zipWithIndex.map { case (c, i) =>
+          c -> (if (r.isNullAt(i)) None else Some(r.getSeq[Double](i)))
+        }.toMap
       }
-    }
+    cols.map { c =>
+      val f = fits(c)
+      c -> (if (!f.eligible) fallback(c) else if (f.nUnique.contains(0L)) None else f.quantiles)
+    }.toMap
   }
-
-  /** Exact quantiles for MANY columns in ONE job, scale-safe: explode the
-    * numeric columns into (columnIdx, centBucket) pairs, histogram with a
-    * single map-side-combinable shuffle, range-partition the bins and
-    * compute cumulative counts per bucket + broadcast per-bucket prefix
-    * offsets (the same two-pass trick as `Drift.ksStatistic` — exact Long
-    * arithmetic, no single-task window), then pull back only the ≤2·|probs|
-    * crossing bins per column. Cents-eligibility (≤2 decimals, fits
-    * DECIMAL(18,2)) is verified inside the same scan.
-    *
-    * Returns per column a [[QuantFit]]: `None` fields when the column is
-    * NOT cents-eligible (caller must fall back to the in-agg forms);
-    * otherwise exact quantiles (`Double.NaN` marking an all-null column —
-    * callers emit SQL null, matching `percentile`'s behavior; eligible
-    * columns can never produce a real NaN since cents are finite) AND the
-    * exact distinct count (the histogram's bin count — eligibility makes
-    * value↔bin a bijection). */
-  def quantilesMultiCentsHistogram(
-      df: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      probs: Seq[Double], buckets: Int = 32): Map[String, QuantFit] =
-    centsHistogramFit(df, cols, probs, buckets, withMoments = false,
-      hiLo = true).view
-      .mapValues(f => QuantFit(f.quantiles, f.nUnique)).toMap
 
   /** Full numeric-profile fit on the AT-SCALE branch — the histogram
     * twin of [[numProfileViaDriverSort]]: the same single exploded scan
@@ -317,12 +278,21 @@ object Exact {
       df: org.apache.spark.sql.DataFrame, cols: Seq[String],
       probs: Seq[Double], hiLo: Boolean,
       buckets: Int = 32): Map[String, NumFit] =
-    centsHistogramFit(df, cols, probs, buckets, withMoments = true, hiLo)
+    centsHistogramFit(df, cols, probs, withMoments = true, hiLo, buckets)
 
+  /** Exact quantiles for MANY columns in ONE job, scale-safe: explode the
+    * numeric columns into (columnIdx, centBucket) pairs, histogram with a
+    * single map-side-combinable shuffle, range-partition the bins and
+    * compute cumulative counts per bucket + broadcast per-bucket prefix
+    * offsets (the same two-pass trick as `Drift.ksStatistic` — exact Long
+    * arithmetic, no single-task window), then pull back only the ≤2·|probs|
+    * crossing bins per column. Cents-eligibility is verified inside the
+    * same scan; the bin count is the exact distinct count (eligibility
+    * makes value↔bin a bijection). */
   private def centsHistogramFit(
       df: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      probs: Seq[Double], buckets: Int, withMoments: Boolean,
-      hiLo: Boolean): Map[String, NumFit] = {
+      probs: Seq[Double], withMoments: Boolean, hiLo: Boolean,
+      buckets: Int = 32): Map[String, NumFit] = {
     import org.apache.spark.sql.expressions.Window
     if (cols.isEmpty) return Map.empty
     val pairs = cols.zipWithIndex.map { case (c, i) =>
@@ -332,8 +302,8 @@ object Exact {
       .select(explode(array(pairs: _*)).as("e"))
       .select(col("e.ci").as("ci"), col("e.v").as("v"))
       .filter(col("v").isNotNull)
-      // roundtrip in decimal space, exactly as centsEligible(): NaN/±Inf/
-      // >2dp/overflow all flag `bad` (their b lands in the null-b bin)
+      // double→DECIMAL(18,2)→double round trip: NaN/±Inf/>2dp/overflow
+      // all flag `bad` (their b lands in the null-b bin)
       .withColumn("bad",
         when(col("v") <=> col("v").cast(DecimalType(18, 2)).cast("double"), 0L).otherwise(1L))
       .withColumn("b", cents(col("v")))
@@ -349,7 +319,8 @@ object Exact {
     // independently-sampled split points — the r9 x16 oracle run caught
     // a1's at-scale median off by 0.8% through exactly this (the driver
     // sort runs below the cell ceiling, so no smaller gate could see
-    // it). Checkpoint is eager, so hist's cache is spent right after.
+    // it). Checkpoint is eager, so hist's cache is spent right after;
+    // the checkpoint itself is released once the one collect has run.
     val parts = hist.repartitionByRange(buckets, col("ci"), col("b"))
       .withColumn("bucket", spark_partition_id())
       .localCheckpoint()
@@ -452,7 +423,12 @@ object Exact {
         min("pmn").as("bmn"), max("pmx").as("bmx")) else Nil)
     val summary = offsetsFull.groupBy("ci")
       .agg(summaryAggs.head, summaryAggs.tail: _*)
-    val rows = crossings.unionByName(summary).collect()
+    val rows =
+      try crossings.unionByName(summary).collect()
+      finally parts.queryExecution.analyzed.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _                                            => ()
+      }
     val byCi = rows.groupBy(_.getInt(0))
     cols.zipWithIndex.map { case (c, i) =>
       val rs = byCi.getOrElse(i, Array.empty[org.apache.spark.sql.Row])
@@ -654,31 +630,12 @@ object Exact {
     Columns(parts.map(_._1).sum, nums, cats, invalid)
   }
 
-  /** Per-column fit result of the multi-column quantile jobs: `None`
-    * fields mean "not derivable on this path — fall back to the in-agg
-    * form" (non-cents-eligible / non-finite values present). `quantiles`
-    * uses `Double.NaN` to mark an all-null column. */
-  final case class QuantFit(quantiles: Option[Seq[Double]], nUnique: Option[Long])
-
-  /** Exact quantiles AND exact distinct counts for MANY columns in ONE
-    * scan via [[collectColumns]] + driver sorts — the small-data
-    * side of the auto-dispatch (see [[quantilesMultiCentsHistogram]] for
-    * the 100 TB side). No ≤2-decimal precondition, but columns containing
-    * NaN/±Inf report `QuantFit(None, None)` so callers use the in-agg
-    * forms whose non-finite ordering matches the oracle's. The distinct
-    * count is a free walk of the sorted array — it lets the profile skip
-    * per-column `count_distinct` aggregates (each one multiplies the wide
-    * agg's Expand factor). */
-  def quantilesViaDriverSortMulti(
-      df: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      probs: Seq[Double]): Map[String, QuantFit] =
-    numProfileViaDriverSort(df, cols, probs, withMoments = false).view
-      .mapValues(f => QuantFit(f.quantiles, f.nUnique)).toMap
-
-  /** Full numeric-profile fit of the driver-sort branch: everything the
-    * a1 profile needs for a column, from ONE collected array. `eligible =
-    * false` (any NaN/±Inf present) means "use the in-agg distributed
-    * forms" — exactly [[QuantFit]]'s `None` contract. */
+  /** Per-column fit of [[numProfileViaDriverSort]] and
+    * [[numProfileViaCentsHistogram]]: everything the a1 profile needs for
+    * a column, and the quantiles of [[quantiles]]. `eligible = false`
+    * (NaN/±Inf dropped on the driver; not cents-eligible in the
+    * histogram) means "use Spark's in-aggregate forms". A column with no
+    * non-null value has `nUnique = Some(0)` and NaN quantiles. */
   final case class NumFit(quantiles: Option[Seq[Double]], nUnique: Option[Long],
                           n: Long, mean: Option[Double], std: Option[Double],
                           minV: Option[Double], maxV: Option[Double],
@@ -705,8 +662,8 @@ object Exact {
     * now feeds quantiles AND moments; the distributed forms stay the
     * at-scale branch (and the fallback for non-finite columns).
     *
-    * `withMoments = false` (the [[quantilesViaDriverSortMulti]] callers —
-    * PSI edges, winsorize, the logprob funnel) skips the cents/moment walk
+    * `withMoments = false` ([[quantiles]]' driver branch — V2 edges, PSI
+    * edges, winsorize, the logprob tertiles) skips the cents/moment walk
     * entirely: those callers sort and interpolate ANY finite doubles with
     * no ≤2-decimal or magnitude precondition, and the cents replica both
     * faults past DECIMAL(18,2) (~|v| ≥ 10¹⁶ — epoch-nanos, wide ids) and
@@ -832,16 +789,6 @@ object Exact {
       throw new ArithmeticException(
         s"cents: $v does not fit DECIMAL(18,2) (the distributed cast faults here too)")
     bd.movePointRight(2).longValueExact()
-  }
-
-  /** True iff every value of `c` survives the double→DECIMAL(18,2)→double
-    * round trip (≤ 2 decimal places in shortest representation AND no
-    * overflow-to-null at |x| ≥ ~1e16) — the eligibility condition for the
-    * cents-histogram quantile path. One scan, null-safe. */
-  def centsEligible(df: org.apache.spark.sql.DataFrame, c: String): Boolean = {
-    val roundTrip = col(c).cast(DecimalType(18, 2)).cast("double")
-    df.agg(count(when(!(col(c).cast("double") <=> roundTrip), lit(1))).as("bad"))
-      .head().getLong(0) == 0L
   }
 
   // ---- Driver-side versions for fitted parameters (collected moments) ----

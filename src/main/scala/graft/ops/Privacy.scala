@@ -11,10 +11,12 @@ import scala.collection.parallel.CollectionConverters._
   *
   * Each Protect operator has one fit and one apply. The fit yields a
   * small driver-side value: V1's rare set (A4's grouped count, in
-  * [[sdcSuppress]] or [[ProtectFit.rareCategories]]), V2's quantile edges
-  * ([[generalizeEdges]] or [[ProtectFit.quantileEdges]]). The apply half
-  * is a plain Column expression (V1 through P4 in [[sdcSuppressFitted]],
-  * V2 in [[generalizeFitted]]), so a full Protect chain (suppress →
+  * [[sdcSuppress]] or [[ProtectFit.rareCategories]]), V2's exact
+  * quantile edges of the raw values ([[generalizeEdges]] through the one
+  * exact-quantile fit [[Exact.quantiles]], or [[ProtectFit.quantileEdges]]
+  * on the fused fit's sorted buffers). The apply half is a plain Column
+  * expression (V1 through P4 in [[sdcSuppressFitted]], V2 in
+  * [[generalizeFitted]]), so a full Protect chain (suppress →
   * generalize → noise) runs as one whole-stage-codegen projection over
   * the scan — vs the reference's full table copy per stage
   * (`modules/privacy.py:5,14,25`). V1 counts the null group like any
@@ -89,76 +91,29 @@ object Privacy {
     }
   }
 
-  /** Quantile-edge strategies for [[generalizeNumeric]]:
-    *  - [[QuantileStrategy.CentsHistogram]]: distributed histogram over the
-    *    value DOMAIN; the scale path, valid for ≤2-decimal columns only
-    *    (quantiles of the cents-rounded values).
-    *  - [[QuantileStrategy.DriverSort]]: collect the RAW doubles, select on
-    *    the driver — `quantile_cont` bit-exact for ANY doubles; fastest
-    *    while one column fits driver memory. Equal to CentsHistogram only
-    *    when the column is cents-eligible.
-    *  - [[QuantileStrategy.SortPercentile]]: Spark's exact percentile
-    *    aggregate — distributed general-doubles path (its interpolation
-    *    can differ from quantile_cont by 1 ulp on rare inputs). */
-  sealed trait QuantileStrategy
-  object QuantileStrategy {
-    case object CentsHistogram extends QuantileStrategy
-    case object DriverSort extends QuantileStrategy
-    case object SortPercentile extends QuantileStrategy
-  }
-
   /** V2 numeric generalization by empirical quantile binning
-    * (`modules/privacy.py:13-22`). Bin edges are EXACT percentiles
-    * (sort-based `percentile`, not approx — SURVEY §4.3); duplicate edges
-    * are merged as `pd.qcut(duplicates="drop")` does. Labels follow the
-    * declared labels-as-truth convention (SURVEY §4.4.3): left-closed
-    * `[lo, hi)`, last bin closed, bounds printed with 2 decimals.
+    * (`modules/privacy.py:13-22`). Bin edges are EXACT interpolated
+    * quantiles (`quantile_cont`, not approx — SURVEY §4.3) of the raw
+    * values, whatever their decimals; duplicate edges are merged as
+    * `pd.qcut(duplicates="drop")` does. Labels follow the declared
+    * labels-as-truth convention (SURVEY §4.4.3): left-closed `[lo, hi)`,
+    * last bin closed, bounds printed with 2 decimals.
     *
-    * Fit, then apply: [[generalizeEdges]] collects the tiny edge list
-    * (≤ bins+1 doubles) to the driver and [[generalizeFitted]] compiles
-    * it into a when-chain, which codegens into the scan pass. */
-  def generalizeNumeric(df: DataFrame, c: String, bins: Int = 10,
-                        strategy: QuantileStrategy = QuantileStrategy.CentsHistogram): DataFrame =
-    generalizeFitted(df, c, generalizeEdges(df, c, bins, strategy))
+    * Fit, then apply: [[generalizeEdges]] fits the ≤ bins+1 edges and
+    * [[generalizeFitted]] compiles them into a when-chain, which codegens
+    * into the scan pass. */
+  def generalizeNumeric(df: DataFrame, c: String, bins: Int = 10): DataFrame =
+    generalizeFitted(df, c, generalizeEdges(df, c, bins))
 
   /** The fit half of [[generalizeNumeric]]: the raw `bins + 1` quantile
-    * edges of `c` under `strategy`, before duplicate-merging (which
-    * [[generalizeFitted]] does). */
-  def generalizeEdges(df: DataFrame, c: String, bins: Int,
-                      strategy: QuantileStrategy): Seq[Double] = {
+    * edges of `c` from [[Exact.quantiles]] — the driver sort while the
+    * column fits [[DriverFitMaxCells]], the cents histogram above it —
+    * before duplicate-merging (which [[generalizeFitted]] does). Empty
+    * for a column with no non-null value. */
+  def generalizeEdges(df: DataFrame, c: String, bins: Int): Seq[Double] = {
     val probs = (0 to bins).map(i => i.toDouble / bins)
-    strategy match {
-      case QuantileStrategy.CentsHistogram =>
-        // bucketed two-pass plan (no single-task window over the value
-        // domain); falls back to the legacy ordered-window form only when
-        // the caller FORCED this strategy on a non-cents-eligible column,
-        // whose documented semantics are quantiles of cents-rounded values
-        Exact.quantilesMultiCentsHistogram(df, Seq(c), probs)(c).quantiles
-          .getOrElse(Exact.quantilesViaCentsHistogramDistributed(df, c, probs))
-      case QuantileStrategy.DriverSort =>
-        val arr = Exact.collectColumns(df, Seq(c)).values(c)
-        java.util.Arrays.sort(arr)
-        probs.map(Exact.quantileFromSorted(arr, _))
-      case QuantileStrategy.SortPercentile =>
-        df.agg(expr(s"percentile($c, array(${probs.mkString("D,")}D))").as("q"))
-          .head().getSeq[Double](0)
-    }
+    Exact.quantiles(df, Seq(c), probs, driverFits(df, nCols = 1))(c).getOrElse(Seq.empty)
   }
-
-  /** [[generalizeNumeric]] with the quantile strategy chosen from the DATA
-    * (the auto-dispatch pattern shared with profile/synthesize/KS):
-    * non-cents-eligible columns (>2 decimals, |x| ≥ ~1e16 — one cheap
-    * scan verifies) take the general sort-based percentile; eligible
-    * columns below the driver-collect ceiling take the fused driver sort
-    * (bit-exact `quantile_cont`, beats any shuffle at the job floor);
-    * eligible columns at scale take the bucketed cents histogram, which
-    * shuffles only the value DOMAIN. Arbitrary CSV columns with >2
-    * decimal places must never be binned on cents-rounded values. */
-  def generalizeNumericAuto(df: DataFrame, c: String, bins: Int = 10): DataFrame =
-    generalizeFitted(df, c, generalizeEdges(df, c, bins,
-      if (!Exact.centsEligible(df, c)) QuantileStrategy.SortPercentile
-      else if (driverFits(df, nCols = 1)) QuantileStrategy.DriverSort
-      else QuantileStrategy.CentsHistogram))
 
   /** C-printf-compatible "%.2f": round the EXACT binary value of the
     * double half-to-even, as C (and DuckDB's printf) does. Java's own
@@ -396,7 +351,7 @@ object Privacy {
   }
 
   /** Row-based driver-fit dispatch for [[syntheticSample]] /
-    * [[generalizeNumericAuto]] (round 7 — replaces the earlier 16 MiB
+    * [[generalizeEdges]] (round 7 — replaces the earlier 16 MiB
     * plan-stats byte ceiling). The byte estimate is compression-skewed
     * for parquet sources — snappy routinely packs 5-8× on these tables,
     * so a byte ceiling lets inputs with millions of rows slip into the
@@ -462,7 +417,7 @@ object Privacy {
     val catIdx = fields.zipWithIndex.filterNot(_._1.dataType.isInstanceOf[NumericType])
 
     // Fitting strategy — auto-selected from the optimizer's size estimate
-    // (mirrors generalizeNumericAuto's shape dispatch) unless forced.
+    // (the same [[driverFits]] gate as generalizeEdges) unless forced.
     // The auto decision may add one LIMIT-bounded probe job (see
     // [[driverFits]]); the fit itself is then at most ONE Spark job:
     //  - driver fit (small side; right while the columns fit driver
@@ -894,7 +849,7 @@ object Privacy {
     * columns and vocabularies. Beyond it, [[graft.core.GraftSession.protect]]
     * is the 100 TB path: its rare sets come from grouped-count jobs whose
     * collect stops at [[SuppressFitMaxValues]] + 1 rows, and its edges
-    * from [[generalizeNumericAuto]]'s distributed dispatch. Both paths
+    * from [[generalizeEdges]]' [[Exact.quantiles]] fit. Both paths
     * apply through the same [[sdcSuppressFitted]] / [[generalizeFitted]]
     * projections, and both send a string column holding a key that is not
     * valid UTF-8 to the byte-exact [[sdcSuppressBroadcast]]. The buffers
@@ -925,7 +880,7 @@ object Privacy {
       fields.flatMap(f => suggestion(f, distinctCount(f.name) > suggestThreshold(f.dataType)))
 
     /** V2 edges: exact interpolated quantiles over the sorted buffer —
-      * the [[QuantileStrategy.DriverSort]] arithmetic verbatim. Empty
+      * the driver branch of [[Exact.quantiles]] verbatim. Empty
       * buffer (all-null column) → empty. */
     def quantileEdges(c: String, bins: Int): Seq[Double] = {
       val arr = numSorted.getOrElse(c, Array.empty[Double])

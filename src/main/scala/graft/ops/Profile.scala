@@ -59,13 +59,15 @@ object Profile {
   }
 
   /** A1 `basic_stats`: one row per input column. Numeric moments use the
-    * exact-cents policy in [[Exact]]; quantiles route through the fused
-    * scale-safe cents-histogram job ([[Exact.quantilesMultiCentsHistogram]]
-    * — one extra scan for ALL numeric columns, shuffling the value DOMAIN
-    * instead of every value) and only columns that fail the ≤2-decimals
-    * eligibility check fall back to the all-values sort-based `percentile`
-    * buffer inside the wide agg. Both paths are linear-interpolation
-    * exact — pandas/DuckDB-compatible, NOT `percentile_approx`. */
+    * exact-cents policy in [[Exact]]. Numeric columns fit in one scan:
+    * [[Exact.numProfileViaDriverSort]] below [[DriverSortMaxCells]], else
+    * the scale-safe cents histogram ([[Exact.numProfileViaCentsHistogram]]
+    * — shuffling the value DOMAIN instead of every value); each
+    * [[Exact.NumFit]] carries quantiles, distinct count and moments, and
+    * only columns the fit cannot certify (non-finite, or >2 decimals at
+    * scale) fall back to the all-values sort-based `percentile` buffer
+    * inside the wide agg. Every path is linear-interpolation exact —
+    * pandas/DuckDB-compatible, NOT `percentile_approx`. */
   def profile(df: DataFrame): DataFrame = {
     val fields = df.schema.fields
     val numCols = fields.filter(f => isNum(f.dataType)).map(_.name)
@@ -73,7 +75,7 @@ object Profile {
 
     def dtypeName(dt: DataType): String = dt.sql.toLowerCase
 
-    // Auto-dispatch (mirrors generalizeNumericAuto): below the row
+    // Auto-dispatch (as in Exact.quantiles): below the row
     // threshold a single fused scan + driver sorts is strictly faster than
     // any shuffle-based plan (Spark job floor dominates); above it, the
     // scale-safe bucketed cents-histogram shuffles the value DOMAIN, never
@@ -103,8 +105,6 @@ object Profile {
       else
         Exact.numProfileViaCentsHistogram(df, numCols.toSeq,
           Seq(0.25, 0.5, 0.75), hiLo)
-    val quantiles: Map[String, Exact.QuantFit] =
-      driverFit.view.mapValues(f => Exact.QuantFit(f.quantiles, f.nUnique)).toMap
 
     // One wide aggregate covering every column's scan-side stats. The
     // cents conversion (the only expensive per-row step — a BigDecimal
@@ -141,10 +141,10 @@ object Profile {
         Seq(
           min(col(c)).cast("double").as(s"${c}__min"),
           max(col(c)).cast("double").as(s"${c}__max")) ++
-        (if (quantiles(c).nUnique.isEmpty)
+        (if (driverFit(c).nUnique.isEmpty)
           Seq(count_distinct(col(c)).as(s"${c}__uniq")) else Nil) ++
         // fallback only for non-cents-eligible columns (>2 decimals / huge)
-        (if (quantiles(c).quantiles.isEmpty)
+        (if (driverFit(c).quantiles.isEmpty)
           Seq(expr(s"percentile($c, array(0.25D, 0.5D, 0.75D))").as(s"${c}__q"))
         else Nil)
       }
@@ -171,7 +171,7 @@ object Profile {
     val rowStructs: Seq[Column] =
       numCols.toSeq.map { c =>
         val dt = lit(dtypeName(fields.find(_.name == c).get.dataType))
-        val q: Int => Column = quantiles(c).quantiles match {
+        val q: Int => Column = driverFit(c).quantiles match {
           case Some(vs) => i =>
             if (vs(i).isNaN) lit(null).cast("double") else lit(vs(i))
           case None => i => col(s"${c}__q").getItem(i)
@@ -198,7 +198,7 @@ object Profile {
               lit(null).cast("string").as("max_str"))
           case None =>
             val uniqCol =
-              if (quantiles(c).nUnique.isDefined) lit(quantiles(c).nUnique.get)
+              if (driverFit(c).nUnique.isDefined) lit(driverFit(c).nUnique.get)
               else col(s"${c}__uniq")
             struct(
               lit(c).as("column"),

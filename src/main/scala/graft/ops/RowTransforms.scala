@@ -119,39 +119,20 @@ object RowTransforms {
   /** Winsorize: clip a numeric column at its exact interpolated
     * [pLo, pHi] quantiles — the standard outlier treatment before
     * standardization or DP noise calibration (extension scope; the
-    * reference clips nothing). The fit is ONE tiny `percentile`
-    * aggregate (exact interpolated, == DuckDB `quantile_cont`), folded
-    * onto the scan via a broadcast cross join — the transform itself is
-    * a stateless codegen `least/greatest`, so the plan is fit-job +
-    * one shuffle-free pass, the generalizeNumeric skeleton. */
+    * reference clips nothing). The fit is [[Exact.quantiles]]
+    * (== DuckDB `quantile_cont`): the driver sort below
+    * [[Exact.DriverFitMaxRows]] rows, the cents histogram above it. Both
+    * bounds are applied as literals, so the transform is a stateless
+    * codegen `least/greatest` over the scan: fit, then one shuffle-free
+    * pass. A column with no non-null value passes through. */
   def winsorize(df: DataFrame, c: String,
                 pLo: Double = 0.01, pHi: Double = 0.99): DataFrame = {
-    // Fit auto-dispatch (the Profile.profile idiom): below the row
-    // ceiling, ONE narrow collect + driver sort replaces the in-agg
-    // `percentile` whose per-value buffer map was ~5× the cost; above
-    // it — or when non-finite values make the collected array unfaithful
-    // — the original in-agg broadcast fit runs. Both produce the same
-    // quantile_cont interpolation, applied as literals vs broadcast row.
-    val driverFit: Option[Exact.QuantFit] =
-      if (graft.io.ScanStats.exactRowCount(df) <= Exact.DriverFitMaxRows)
-        Some(Exact.quantilesViaDriverSortMulti(df, Seq(c), Seq(pLo, pHi))(c))
-      else None
-    driverFit.flatMap(_.quantiles) match {
-      case Some(qs) =>
-        val (lo, hi) =
-          if (qs(0).isNaN) // all-null column: percentile yields null → passthrough
-            (lit(null).cast("double"), lit(null).cast("double"))
-          else (lit(qs(0)), lit(qs(1)))
-        df.withColumn(s"${c}_w",
-          least(greatest(col(c).cast("double"), lo), hi))
-      case None =>
-        val fit = df.agg(expr(s"percentile($c, array(${pLo}D, ${pHi}D))").as("q"))
-          .select(col("q")(0).as("__lo"), col("q")(1).as("__hi"))
-        df.crossJoin(broadcast(fit))
-          .withColumn(s"${c}_w",
-            least(greatest(col(c).cast("double"), col("__lo")), col("__hi")))
-          .drop("__lo", "__hi")
+    val driver = graft.io.ScanStats.exactRowCount(df) <= Exact.DriverFitMaxRows
+    val (lo, hi) = Exact.quantiles(df, Seq(c), Seq(pLo, pHi), driver)(c) match {
+      case Some(qs) => (lit(qs(0)), lit(qs(1)))
+      case None     => (lit(null).cast("double"), lit(null).cast("double"))
     }
+    df.withColumn(s"${c}_w", least(greatest(col(c).cast("double"), lo), hi))
   }
 
   /** Robust scaling by median/MAD — the outlier-insensitive sibling of
@@ -163,10 +144,10 @@ object RowTransforms {
     * each an exact `percentile` aggregate broadcast onto the next pass;
     * the transform itself is stateless codegen. */
   def robustScale(df: DataFrame, c: String): DataFrame = {
-    // Fit auto-dispatch — see winsorize. The driver path is especially
-    // right here: median AND MAD both derive from ONE collected array
-    // (two driver sorts), where the in-plan form needs two chained
-    // percentile fit jobs because MAD depends on the median.
+    // Fit auto-dispatch on winsorize's row ceiling. The driver path is
+    // especially right here: median AND MAD both derive from ONE
+    // collected array (two driver sorts), where the in-plan form needs
+    // two chained percentile fit jobs because MAD depends on the median.
     val driverFit: Option[(Double, Double)] =
       if (graft.io.ScanStats.exactRowCount(df) > Exact.DriverFitMaxRows) None
       else {

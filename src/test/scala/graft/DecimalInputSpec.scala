@@ -62,8 +62,8 @@ class DecimalInputSpec extends SparkSpec {
   }
 
   test("privacy family: generalize buckets and DP noise at eps->inf are value-identical") {
-    val dGen = ops.Privacy.generalizeNumericAuto(asDecimal, "l_extendedprice")
-    val fGen = ops.Privacy.generalizeNumericAuto(asDouble, "l_extendedprice")
+    val dGen = ops.Privacy.generalizeNumeric(asDecimal, "l_extendedprice")
+    val fGen = ops.Privacy.generalizeNumeric(asDouble, "l_extendedprice")
     val dCounts = dGen.groupBy(col("l_extendedprice").cast("string")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val fCounts = fGen.groupBy(col("l_extendedprice").cast("string")).count()

@@ -55,7 +55,7 @@ class EmptyInputSpec extends SparkSpec {
       "jsDivergence empty-after" -> (() =>
         ops.Drift.jsDivergence(someLineitem, emptyLineitem, "l_returnflag").collect()),
       "sdcSuppress" -> (() => ops.Privacy.sdcSuppress(emptyLineitem, Seq("l_returnflag")).collect()),
-      "generalizeNumericAuto" -> (() => ops.Privacy.generalizeNumericAuto(emptyLineitem, "l_quantity").collect()),
+      "generalizeNumeric" -> (() => ops.Privacy.generalizeNumeric(emptyLineitem, "l_quantity").collect()),
       "dpNoise" -> (() => ops.Privacy.dpNoise(emptyLineitem, numCols, epsilon = 1.0).collect()),
       "syntheticSample" -> (() => ops.Privacy.syntheticSample(emptyLineitem, numCols).collect()),
       "smartSuggest" -> (() => ops.Privacy.smartSuggest(emptyLineitem).collect()),

@@ -34,8 +34,10 @@ class SourceSweepSpec extends AnyFunSuite {
     // r13: bigramLogProb's two count-table broadcasts fused into ONE
     // pre-combined (a,b)->term broadcast, gated by the checkpointed
     // table's exact row count (BigramBroadcastMaxTermRows) — a bounded,
-    // measured-size broadcast, reviewed
-    "ext/TextStats.scala" -> (0, 5),
+    // measured-size broadcast, reviewed.
+    // One broadcast fewer: perplexityBuckets' tertile fit is
+    // Exact.quantiles, applied as literals on both branches.
+    "ext/TextStats.scala" -> (0, 4),
     "io/Csv.scala" -> (1, 0),
     "io/ZOrder.scala" -> (1, 1),
     // r16 +2 collects: collectCatSides' two per-side grouped-count
@@ -48,9 +50,10 @@ class SourceSweepSpec extends AnyFunSuite {
     "ops/Drift.scala" -> (8, 3),
     // Exact.collectColumns holds the ONE Spark-side column collect behind
     // every driver-side fit (one fused job, each caller behind its own
-    // driver-fit ceiling); it replaced collectColumnsDoubles' collect, so
-    // the count is unchanged.
-    "ops/Exact.scala" -> (3, 1),
+    // driver-fit ceiling); it replaced collectColumnsDoubles' collect.
+    // One collect fewer: the single-task window quantile form is gone;
+    // the cents histogram's crossing-bin collect is the other site.
+    "ops/Exact.scala" -> (2, 1),
     // Three collects fewer: collectRawState's fused collect and its
     // per-column split branch (two collects) are gone; the fit reads
     // through Exact.collectColumns. Left: sdcSuppress's rare-set fit (a
@@ -60,7 +63,9 @@ class SourceSweepSpec extends AnyFunSuite {
     "ops/Privacy.scala" -> (4, 1),
     "ops/Profile.scala" -> (2, 1),
     "ops/Relational.scala" -> (0, 9),
-    "ops/RowTransforms.scala" -> (1, 3),
+    // One broadcast fewer: winsorize applies its Exact.quantiles bounds
+    // as literals on both branches (no broadcast cross-join fit).
+    "ops/RowTransforms.scala" -> (1, 2),
     "report/Html.scala" -> (1, 0),
     // risk/Linkage.scala: 0 collects since the r11 fit-once refactor
     // moved the bounded feature-stat collects into RowTransforms

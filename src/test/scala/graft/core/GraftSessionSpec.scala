@@ -107,6 +107,19 @@ class GraftSessionSpec extends SparkSpec {
     assert(p1.pdfPath.exists(p => new java.io.File(p).length() > 0))
   }
 
+  test("runPipeline with synthesis: a label V4 made continuous gives NaN model utility, not an abort") {
+    val cfg = PipelineConfig(
+      sdcCols = Seq("gender"), generalizeCols = Seq("income"),
+      dpCols = Seq("age"), synthetic = true, seed = 42L)
+    val r = new GraftSession(spark).runPipeline(real, anon, cfg,
+      target = Some("target"), clock = () => Instant.parse("2026-01-01T00:00:00Z"))
+    val acc = r.utility.modelUtility.get.collect()
+      .map(row => row.getString(0) -> row.getDouble(1)).toMap
+    assert(!acc("before").isNaN, "the anon side keeps its integer labels")
+    assert(acc("after").isNaN, "synthesized labels are not classes: no model is fitted")
+    assert(r.reportHtml.contains("model utility"))
+  }
+
   test("S3 yaml config round-trips") {
     val cfg = PipelineConfig(sdcCols = Seq("gender", "city"), epsilon = 2.5,
       generalizeCols = Seq("income"), synthetic = true, seed = 7L)
@@ -150,7 +163,7 @@ class GraftSessionSpec extends SparkSpec {
     var manual = li
     strCols.foreach { c => manual = Privacy.sdcSuppressBroadcast(manual, Seq(c), 5) }
     genCols.foreach { c =>
-      manual = Privacy.generalizeNumeric(manual, c, 10, Privacy.QuantileStrategy.DriverSort)
+      manual = Privacy.generalizeNumeric(manual, c, 10)
     }
     // dp columns draw seeded noise whose values depend on upstream plan
     // layout, so parity is checked on the deterministic columns

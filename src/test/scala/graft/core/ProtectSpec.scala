@@ -21,7 +21,7 @@ class ProtectSpec extends SparkSpec {
   /** The protect chain before fit-then-project, step for step. */
   private def chained(anon: DataFrame, cfg: PipelineConfig): DataFrame = {
     var df = Privacy.sdcSuppressBroadcast(anon, cfg.sdcCols, cfg.sdcThreshold)
-    cfg.generalizeCols.foreach(c => df = Privacy.generalizeNumericAuto(df, c, cfg.generalizeBins))
+    cfg.generalizeCols.foreach(c => df = Privacy.generalizeNumeric(df, c, cfg.generalizeBins))
     Privacy.dpNoise(df, cfg.dpCols, cfg.epsilon, cfg.sensitivity, cfg.seed)
   }
 

@@ -1,30 +1,57 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The two sides of profile's quantile auto-dispatch must agree exactly:
-  * the fused driver-sort path (small data) and the bucketed cents-histogram
-  * path (100 TB side — no longer exercised through `profile` at test scale,
-  * so it is pinned here directly). Both also certify exact distinct counts
-  * (QuantFit.nUnique) that the profile substitutes for count_distinct. */
+/** Both branches of the one exact-quantile fit, [[Exact.quantiles]], must
+  * agree exactly: the driver sort (`driver = true`) and the bucketed
+  * cents histogram (`driver = false` — the 100 TB side, pinned here
+  * directly), and wherever a column takes the `percentile` fallback the
+  * answer is a hand-written `percentile` aggregate's. The exact distinct
+  * counts the profile substitutes for count_distinct (NumFit.nUnique)
+  * are pinned on the `numProfileVia*` pair. */
 class ExactQuantilesSpec extends SparkSpec {
 
   private val probs = Seq(0.25, 0.5, 0.75)
+
+  /** Both branches of [[Exact.quantiles]] on `df`, asserted equal. */
+  private def bothBranches(df: DataFrame, cols: Seq[String],
+                           ps: Seq[Double] = probs): Map[String, Option[Seq[Double]]] = {
+    val sort = Exact.quantiles(df, cols, ps, driver = true)
+    val hist = Exact.quantiles(df, cols, ps, driver = false)
+    cols.foreach(c => assert(sameBits(sort(c), hist(c)),
+      s"$c: driver ${sort(c)} vs histogram ${hist(c)}"))
+    sort
+  }
+
+  /** Bit-for-bit equality, so a NaN the fallback returns equals itself. */
+  private def sameBits(a: Option[Seq[Double]], b: Option[Seq[Double]]): Boolean =
+    (a, b) match {
+      case (Some(x), Some(y)) => x.length == y.length && x.zip(y).forall { case (u, v) =>
+        java.lang.Double.compare(u, v) == 0 }
+      case _ => a.isEmpty && b.isEmpty
+    }
+
+  /** The hand-written `percentile` aggregate the fallback must equal. */
+  private def percentileOf(df: DataFrame, c: String, ps: Seq[Double] = probs): Option[Seq[Double]] = {
+    val r = df.agg(expr(s"percentile(CAST($c AS DOUBLE), array(${ps.mkString("D,")}D))")).head()
+    if (r.isNullAt(0)) None else Some(r.getSeq[Double](0))
+  }
 
   test("histogram path == driver-sort path on all lineitem numeric columns") {
     val li = Tables.lineitem(spark, Sf)
     val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
       "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val hist = Exact.quantilesMultiCentsHistogram(li, cols, probs)
-    val sort = Exact.quantilesViaDriverSortMulti(li, cols, probs)
+    // bit-exact: same h = p·(n−1) ranks, same interp formula, exact cents
+    val qs = bothBranches(li, cols)
+    val hist = Exact.numProfileViaCentsHistogram(li, cols, probs, hiLo = true)
+    val sort = Exact.numProfileViaDriverSort(li, cols, probs)
     val exact = cols.map(c =>
       c -> li.agg(count_distinct(col(c))).head().getLong(0)).toMap
     cols.foreach { c =>
-      assert(hist(c).quantiles.isDefined, s"$c should be cents-eligible")
-      // bit-exact: same h = p·(n−1) ranks, same interp formula, exact cents
-      assert(hist(c).quantiles.get == sort(c).quantiles.get,
-        s"$c: ${hist(c).quantiles.get} vs ${sort(c).quantiles.get}")
+      assert(hist(c).eligible, s"$c should be cents-eligible")
+      assert(qs(c) == hist(c).quantiles, s"$c: ${qs(c)} vs ${hist(c).quantiles}")
       assert(hist(c).nUnique.contains(exact(c)), s"$c hist nUnique")
       assert(sort(c).nUnique.contains(exact(c)), s"$c sort nUnique")
     }
@@ -34,49 +61,106 @@ class ExactQuantilesSpec extends SparkSpec {
     import spark.implicits._
     // 100 distinct values, 2 buckets → quantile ranks cross bucket borders
     val df = (1 to 100).map(i => i.toDouble / 2).toDF("v")
-    val r = Exact.quantilesMultiCentsHistogram(df, Seq("v"), Seq(0.0, 0.33, 0.5, 0.99, 1.0), buckets = 2)
-    val expect = Exact.quantilesViaDriverSortMulti(df, Seq("v"), Seq(0.0, 0.33, 0.5, 0.99, 1.0))
-    assert(r("v").quantiles.get == expect("v").quantiles.get)
-    assert(r("v").nUnique.contains(100L) && expect("v").nUnique.contains(100L))
+    val ps = Seq(0.0, 0.33, 0.5, 0.99, 1.0)
+    val r = Exact.numProfileViaCentsHistogram(df, Seq("v"), ps, hiLo = true, buckets = 2)
+    val expect = Exact.quantiles(df, Seq("v"), ps, driver = true)
+    assert(r("v").quantiles == expect("v"))
+    assert(r("v").nUnique.contains(100L))
+    assert(Exact.numProfileViaDriverSort(df, Seq("v"), ps)("v").nUnique.contains(100L))
   }
 
   test("non-cents-eligible column (3 decimals) reports None for fallback") {
     import spark.implicits._
     val df = Seq(1.001, 2.5, 3.0).toDF("x").withColumn("y", col("x") * 2)
-    val r = Exact.quantilesMultiCentsHistogram(df, Seq("x", "y"), probs)
-    assert(r("x").quantiles.isEmpty && r("x").nUnique.isEmpty,
+    val r = Exact.numProfileViaCentsHistogram(df, Seq("x", "y"), probs, hiLo = true)
+    assert(!r("x").eligible && r("x").quantiles.isEmpty && r("x").nUnique.isEmpty,
       "1.001 does not survive the DECIMAL(18,2) roundtrip")
+    // the one fit answers it anyway: driver sort vs percentile fallback
+    val qs = bothBranches(df, Seq("x", "y"))
+    assert(qs("x") == percentileOf(df, "x"))
   }
 
   test("eligible and ineligible columns mix in one call") {
     import spark.implicits._
     val df = Seq((1.25, 0.333), (2.50, 0.667), (4.75, 1.0)).toDF("ok", "bad3dp")
-    val r = Exact.quantilesMultiCentsHistogram(df, Seq("ok", "bad3dp"), Seq(0.5))
+    val r = Exact.numProfileViaCentsHistogram(df, Seq("ok", "bad3dp"), Seq(0.5), hiLo = true)
     assert(r("bad3dp").quantiles.isEmpty)
     assert(r("ok").quantiles.contains(Seq(2.50)))
     assert(r("ok").nUnique.contains(3L))
+    val qs = bothBranches(df, Seq("ok", "bad3dp"), Seq(0.5))
+    assert(qs("ok").contains(Seq(2.50)))
+    assert(qs("bad3dp").contains(Seq(0.667)) && qs("bad3dp") == percentileOf(df, "bad3dp", Seq(0.5)))
   }
 
   test("all-null column yields NaN markers; absent from histogram entirely") {
     import spark.implicits._
     val df = Seq((1.0, Option.empty[Double]), (2.0, None)).toDF("a", "allnull")
-    val r = Exact.quantilesMultiCentsHistogram(df, Seq("a", "allnull"), Seq(0.5))
+    val r = Exact.numProfileViaCentsHistogram(df, Seq("a", "allnull"), Seq(0.5), hiLo = true)
     assert(r("a").quantiles.contains(Seq(1.5)))
     assert(r("allnull").quantiles.get.forall(_.isNaN))
     assert(r("allnull").nUnique.contains(0L))
-    val s = Exact.quantilesViaDriverSortMulti(df, Seq("a", "allnull"), Seq(0.5))
+    val s = Exact.numProfileViaDriverSort(df, Seq("a", "allnull"), Seq(0.5))
     assert(s("allnull").quantiles.get.forall(_.isNaN))
     assert(s("allnull").nUnique.contains(0L))
+    // the one fit turns the marker into None on both branches
+    val qs = bothBranches(df, Seq("a", "allnull"), Seq(0.5))
+    assert(qs("a").contains(Seq(1.5)) && qs("allnull").isEmpty)
   }
 
   test("NaN values mark a column ineligible on BOTH paths (falls back, never silently drops)") {
     import spark.implicits._
     val df = Seq(1.0, Double.NaN, 3.0).toDF("x")
-    val r = Exact.quantilesMultiCentsHistogram(df, Seq("x"), Seq(0.5))
+    val r = Exact.numProfileViaCentsHistogram(df, Seq("x"), Seq(0.5), hiLo = true)
     assert(r("x").quantiles.isEmpty && r("x").nUnique.isEmpty)
-    val s = Exact.quantilesViaDriverSortMulti(df, Seq("x"), Seq(0.5))
+    val s = Exact.numProfileViaDriverSort(df, Seq("x"), Seq(0.5))
     assert(s("x").quantiles.isEmpty && s("x").nUnique.isEmpty,
       "driver path must not silently drop non-finite values")
+    // NaN sorts last in `percentile`: the median of (1, 3, NaN) is 3
+    val qs = bothBranches(df, Seq("x"), Seq(0.5))
+    assert(qs("x").contains(Seq(3.0)) && qs("x") == percentileOf(df, "x", Seq(0.5)))
+  }
+
+  test("Exact.quantiles: both branches agree on 3-decimal, DECIMAL(12,3), NaN/±Inf, all-null and empty inputs") {
+    import spark.implicits._
+    val n = 200
+    val rows = (1 to n).map { i =>
+      val nonFinite = i % 50 match {
+        case 0  => Double.NaN
+        case 17 => Double.PositiveInfinity
+        case 33 => Double.NegativeInfinity
+        case _  => i * 0.37 - 20.0
+      }
+      (i * 1.013 - 7.0, BigDecimal(i * 7919 % 1000, 3) + i, nonFinite, Option.empty[Double],
+        math.rint(i * 31.7) / 100)
+    }
+    val df = rows.toDF("dec3", "dmoney", "nonfinite", "allnull", "cents")
+      .withColumn("dmoney", col("dmoney").cast("decimal(12,3)"))
+    val cols = df.columns.toSeq
+    val ps = Seq(0.0, 0.1, 1.0 / 3, 0.5, 0.9, 1.0)
+    val qs = bothBranches(df, cols, ps)
+    assert(qs("allnull").isEmpty)
+    assert(qs("cents").isDefined)
+    // every column the histogram refuses takes the fallback on that branch
+    // and must equal a hand-written percentile aggregate
+    val hist = Exact.numProfileViaCentsHistogram(df, cols, ps, hiLo = true)
+    val fallbackCols = cols.filterNot(hist(_).eligible)
+    assert(fallbackCols.toSet == Set("dec3", "dmoney", "nonfinite"), fallbackCols)
+    fallbackCols.foreach(c => assert(sameBits(qs(c), percentileOf(df, c, ps)),
+      s"$c: ${qs(c)} vs percentile ${percentileOf(df, c, ps)}"))
+    // empty frame: no column has a value
+    val empty = bothBranches(df.limit(0), cols, ps)
+    assert(cols.forall(empty(_).isEmpty), empty)
+  }
+
+  test("Exact.quantiles and the histogram profile release their checkpoint") {
+    import spark.implicits._
+    val df = Seq(1.25, 2.5, 3.75, 5.0).toDF("v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Exact.quantiles(df, Seq("v"), probs, driver = false)
+    assert(sc.getPersistentRDDs.size == before, "Exact.quantiles left an RDD persisted")
+    Exact.numProfileViaCentsHistogram(df, Seq("v"), probs, hiLo = true)
+    assert(sc.getPersistentRDDs.size == before, "numProfileViaCentsHistogram left an RDD persisted")
   }
 
   test("histogram NumFit == driver-sort NumFit on all lineitem numeric columns (r12 moments)") {

@@ -59,6 +59,15 @@ class PrivacySpec extends SparkSpec {
     assert(out.filter(col("x").isNull).count() == 0)
   }
 
+  test("generalizeNumeric: a column with more than 2 decimals bins on its raw values, every row labeled") {
+    // cents-rounded edges would read 0.00 … 0.10 here and leave 0.1004
+    // outside every bin (a null label); the raw edges are 0.0014 … 0.1004
+    val df = (1 to 100).map(i => i / 1000.0 + 0.0004).toDF("x")
+    val out = Privacy.generalizeNumeric(df, "x")
+    assert(out.filter(col("x").isNull).count() == 0)
+    assert(out.filter(col("x") === "[0.09, 0.10]").count() == 10)
+  }
+
   test("dpNoise: seeded, mean shift → 0, scale ≈ b for large n") {
     val n = 200000
     val df = spark.range(n).select(lit(10.0).as("x"))

@@ -55,7 +55,9 @@ object OperatorProps extends Properties("graft") {
     }
 
   property("V2: at most `bins` labels, every non-null value labeled") =
-    forAll(Gen.listOfN(40, Gen.choose(-100.0, 100.0).map(v => math.rint(v * 100) / 100)),
+    forAll(Gen.listOfN(40, Gen.oneOf(
+             Gen.choose(-100.0, 100.0).map(v => math.rint(v * 100) / 100),
+             Gen.choose(-100.0, 100.0))),
            Gen.choose(2, 8)) { (vs, bins) =>
       vs.nonEmpty ==> {
         val out = Privacy.generalizeNumeric(vs.toDF("x"), "x", bins)
