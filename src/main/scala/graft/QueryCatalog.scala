@@ -72,8 +72,8 @@ object QueryCatalog {
       Privacy.sdcSuppress(
           Tables.supplier(s, d).select(col("s_suppkey"), col("s_name")), Seq("s_name"), 5)),
     "v2_generalize" -> ((s, d) =>
-      // The one V2 fit: the driver sort while the column fits the
-      // driver-fit ceiling (sf ≤ 0.1), the cents histogram above it.
+      // The one V2 fit: the driver sort up to Exact.DriverFitMaxRows
+      // rows (lineitem through x16), the cents histogram above it.
       // No output orderBy: the gate compare is row-order-insensitive
       // (144 catalog entries gate without one), the reference's
       // generalize has no ordering contract, and the global sort was

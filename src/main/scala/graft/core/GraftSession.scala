@@ -56,8 +56,8 @@ final class GraftSession(val spark: SparkSession) {
     * counts, previews, a CSV publish) re-runs no fit. The fits are eager:
     * one grouped-count job per suppressed column, and per generalized
     * column one [[graft.ops.Exact.quantiles]] fit of its exact edges
-    * (the driver sort below `Privacy`'s driver-fit ceiling, the cents
-    * histogram above it). A null group counted below the
+    * (the driver sort up to [[graft.ops.Exact.DriverFitMaxRows]] rows,
+    * the cents histogram above it). A null group counted below the
     * threshold becomes "OTHER", as in [[protectAuto]]. A suppressed
     * column whose rare set passes
     * [[graft.ops.Privacy.SuppressFitMaxValues]] keeps the lazy

@@ -815,11 +815,11 @@ object TextStats {
     *
     * Tertile edges are exact interpolated quantiles over the PER-DOC
     * score frame (one double per document — already 6-8 orders smaller
-    * than the corpus), fitted by [[graft.ops.Exact.quantiles]]: the
-    * driver sort below the row ceiling, the cents histogram above it
-    * (its `percentile` fallback takes the full-precision scores). The
-    * bucket gate itself is a stateless literal comparison riding the
-    * score scan. */
+    * than the corpus): [[graft.ops.Exact.quantiles]]' driver sort below
+    * the row ceiling, one [[graft.ops.Exact.percentiles]] aggregate above
+    * it (the full-precision scores are never cents-eligible). The bucket
+    * gate itself is a stateless literal comparison riding the score
+    * scan. */
   def perplexityBuckets(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     import graft.ops.Exact
     val t1 = 1.0 / 3
@@ -844,8 +844,12 @@ object TextStats {
     // the score frame has at most one row per input doc, so the input
     // bound certifies the collect without executing the LM pipeline twice
     // just to count it.
-    val driver = df.count() <= Exact.DriverFitMaxRows
-    val (e1, e2) = Exact.quantiles(lp, Seq("avg_logprob"), Seq(t1, t2), driver)("avg_logprob") match {
+    val probs = Seq(t1, t2)
+    val fit =
+      if (df.count() <= Exact.DriverFitMaxRows)
+        Exact.quantiles(lp, Seq("avg_logprob"), probs, driver = true)
+      else Exact.percentiles(lp, Seq("avg_logprob"), probs)
+    val (e1, e2) = fit("avg_logprob") match {
       case Some(qs) => (lit(qs(0)), lit(qs(1)))
       case None     => (lit(null).cast("double"), lit(null).cast("double"))
     }

@@ -220,9 +220,9 @@ object Exact {
 
   /** The one exact-quantile fit: linear-interpolated `probs` quantiles
     * (h = p·(n−1), then [[interp]] — DuckDB `quantile_cont`) of every
-    * column in `cols`, for V2 edges, PSI edges, winsorize and the
-    * perplexity tertiles. The caller decides `driver` against its own
-    * ceiling:
+    * column in `cols`, for V2 edges and PSI edges, and for winsorize and
+    * the perplexity tertiles below their driver ceiling. The caller
+    * decides `driver` against its own ceiling:
     *  - `driver`: [[collectColumns]] plus a sort per column; any finite
     *    doubles, no ≤2-decimal precondition;
     *  - otherwise the bucketed cents histogram ([[centsHistogramFit]]),
@@ -230,9 +230,8 @@ object Exact {
     *    cents-eligibility (≤2 decimals, fits DECIMAL(18,2)) in its own
     *    scan;
     *  - a column the branch cannot certify (non-finite values dropped on
-    *    the driver, or not cents-eligible) goes into ONE aggregate with a
-    *    `percentile(CAST(c AS DOUBLE), array(probs))` per column, whose
-    *    NaN/±Inf ordering is the oracle's.
+    *    the driver, or not cents-eligible) goes into the ONE aggregate of
+    *    [[percentiles]], whose NaN/±Inf ordering is the oracle's.
     * None: the column has no non-null value. A Some holds NaN only when
     * the `percentile` fallback returns it. */
   def quantiles(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
@@ -240,22 +239,30 @@ object Exact {
     val fits =
       if (driver) numProfileViaDriverSort(df, cols, probs, withMoments = false)
       else centsHistogramFit(df, cols, probs, withMoments = false, hiLo = true)
-    val rest = cols.filterNot(fits(_).eligible)
-    val fallback: Map[String, Option[Seq[Double]]] =
-      if (rest.isEmpty) Map.empty
-      else {
-        val ps = array(probs.map(lit): _*)
-        val aggs = rest.map(c => percentile(col(c).cast("double"), ps))
-        val r = df.agg(aggs.head, aggs.tail: _*).head()
-        rest.zipWithIndex.map { case (c, i) =>
-          c -> (if (r.isNullAt(i)) None else Some(r.getSeq[Double](i)))
-        }.toMap
-      }
+    val fallback = percentiles(df, cols.filterNot(fits(_).eligible), probs)
     cols.map { c =>
       val f = fits(c)
       c -> (if (!f.eligible) fallback(c) else if (f.nUnique.contains(0L)) None else f.quantiles)
     }.toMap
   }
+
+  /** The last step of [[quantiles]]: ONE aggregate holding a
+    * `percentile(CAST(c AS DOUBLE), array(probs))` per column of `cols`
+    * (no job when `cols` is empty). It is also the whole fit above the
+    * driver ceiling of winsorize and the perplexity tertiles, whose
+    * columns are often full-precision doubles the cents histogram could
+    * only reject after its own scan. None: no non-null value. */
+  def percentiles(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+                  probs: Seq[Double]): Map[String, Option[Seq[Double]]] =
+    if (cols.isEmpty) Map.empty
+    else {
+      val ps = array(probs.map(lit): _*)
+      val aggs = cols.map(c => percentile(col(c).cast("double"), ps))
+      val r = df.agg(aggs.head, aggs.tail: _*).head()
+      cols.zipWithIndex.map { case (c, i) =>
+        c -> (if (r.isNullAt(i)) None else Some(r.getSeq[Double](i)))
+      }.toMap
+    }
 
   /** Full numeric-profile fit on the AT-SCALE branch — the histogram
     * twin of [[numProfileViaDriverSort]]: the same single exploded scan
@@ -303,15 +310,28 @@ object Exact {
       .select(col("e.ci").as("ci"), col("e.v").as("v"))
       .filter(col("v").isNotNull)
       // double→DECIMAL(18,2)→double round trip: NaN/±Inf/>2dp/overflow
-      // all flag `bad` (their b lands in the null-b bin)
+      // all flag `bad`, and a bad value lands in the null-b bin rather
+      // than a rounded cent, so an ineligible column histograms one bin
+      // instead of a domain as large as its data
       .withColumn("bad",
         when(col("v") <=> col("v").cast(DecimalType(18, 2)).cast("double"), 0L).otherwise(1L))
-      .withColumn("b", cents(col("v")))
+      .withColumn("b", when(col("bad") === 0L, cents(col("v"))))
     // Persist BEFORE repartitionByRange: the range partitioner's sampling
     // pass would otherwise recompute the scan + histogram shuffle.
     val hist = exploded.groupBy("ci", "b")
       .agg(count(lit(1)).as("cnt"), sum("bad").as("bad"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Quantile-only fits ([[quantiles]]) read the ineligible columns off
+    // the job that fills the histogram's cache and stop there when none
+    // is eligible: the `percentile` fallback answers them, so the range
+    // partitioning and walk below would be wasted work. The profile fit
+    // keeps its plan: its x16 gate row was not shown unaffected by the
+    // extra job (one run each read 39-43 s with it, 36-38 s without).
+    if (!withMoments &&
+        hist.filter(col("bad") > 0).select("ci").collect().length == cols.size) {
+      hist.unpersist(blocking = false)
+      return cols.map(_ -> NumFit(None, None, 0L, None, None, None, None, eligible = false)).toMap
+    }
     // localCheckpoint FREEZES the bucket ids for the three downstream
     // consumers (offsets, cumulative join, summary): their pruned
     // exchange subtrees are non-identical, so without one shared
@@ -500,7 +520,8 @@ object Exact {
   /** Above this row count, driver-side quantile fits (collect + sort)
     * stop being the cheap path (10⁷ rows × 8 B ≈ 80 MB/column) and
     * callers switch to an in-plan form — the shared ceiling for
-    * `Profile.profile`, `RowTransforms.winsorize`/`robustScale`. */
+    * `Profile.profile`, `RowTransforms.winsorize`/`robustScale`, V2's
+    * `Privacy.generalizeEdges` and the perplexity tertiles. */
   val DriverFitMaxRows: Long = 10_000_000L
 
   /** Linear-interpolated quantile of an ALREADY-SORTED array — the same

@@ -106,13 +106,16 @@ object Privacy {
     generalizeFitted(df, c, generalizeEdges(df, c, bins))
 
   /** The fit half of [[generalizeNumeric]]: the raw `bins + 1` quantile
-    * edges of `c` from [[Exact.quantiles]] — the driver sort while the
-    * column fits [[DriverFitMaxCells]], the cents histogram above it —
-    * before duplicate-merging (which [[generalizeFitted]] does). Empty
-    * for a column with no non-null value. */
+    * edges of `c` from [[Exact.quantiles]] — the driver sort up to
+    * [[Exact.DriverFitMaxRows]] rows (winsorize's ceiling: sorting one
+    * collected column beats the histogram on a near-unique money column,
+    * whose value domain is as large as the data), the cents histogram
+    * above it — before duplicate-merging (which [[generalizeFitted]]
+    * does). Empty for a column with no non-null value. */
   def generalizeEdges(df: DataFrame, c: String, bins: Int): Seq[Double] = {
     val probs = (0 to bins).map(i => i.toDouble / bins)
-    Exact.quantiles(df, Seq(c), probs, driverFits(df, nCols = 1))(c).getOrElse(Seq.empty)
+    val driver = graft.io.ScanStats.exactRowCount(df) <= Exact.DriverFitMaxRows
+    Exact.quantiles(df, Seq(c), probs, driver)(c).getOrElse(Seq.empty)
   }
 
   /** C-printf-compatible "%.2f": round the EXACT binary value of the
@@ -350,8 +353,8 @@ object Privacy {
     (vs, cs)
   }
 
-  /** Row-based driver-fit dispatch for [[syntheticSample]] /
-    * [[generalizeEdges]] (round 7 — replaces the earlier 16 MiB
+  /** Row-based driver-fit dispatch for [[syntheticSample]]
+    * (round 7 — replaces the earlier 16 MiB
     * plan-stats byte ceiling). The byte estimate is compression-skewed
     * for parquet sources — snappy routinely packs 5-8× on these tables,
     * so a byte ceiling lets inputs with millions of rows slip into the
@@ -417,7 +420,7 @@ object Privacy {
     val catIdx = fields.zipWithIndex.filterNot(_._1.dataType.isInstanceOf[NumericType])
 
     // Fitting strategy — auto-selected from the optimizer's size estimate
-    // (the same [[driverFits]] gate as generalizeEdges) unless forced.
+    // ([[driverFits]]) unless forced.
     // The auto decision may add one LIMIT-bounded probe job (see
     // [[driverFits]]); the fit itself is then at most ONE Spark job:
     //  - driver fit (small side; right while the columns fit driver

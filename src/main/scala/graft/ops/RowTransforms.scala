@@ -119,16 +119,20 @@ object RowTransforms {
   /** Winsorize: clip a numeric column at its exact interpolated
     * [pLo, pHi] quantiles — the standard outlier treatment before
     * standardization or DP noise calibration (extension scope; the
-    * reference clips nothing). The fit is [[Exact.quantiles]]
-    * (== DuckDB `quantile_cont`): the driver sort below
-    * [[Exact.DriverFitMaxRows]] rows, the cents histogram above it. Both
-    * bounds are applied as literals, so the transform is a stateless
-    * codegen `least/greatest` over the scan: fit, then one shuffle-free
-    * pass. A column with no non-null value passes through. */
+    * reference clips nothing). The fit (== DuckDB `quantile_cont`) is
+    * [[Exact.quantiles]]' driver sort below [[Exact.DriverFitMaxRows]]
+    * rows and one [[Exact.percentiles]] aggregate above it. Both bounds
+    * are applied as literals, so the transform is a stateless codegen
+    * `least/greatest` over the scan: fit, then one shuffle-free pass. A
+    * column with no non-null value passes through. */
   def winsorize(df: DataFrame, c: String,
                 pLo: Double = 0.01, pHi: Double = 0.99): DataFrame = {
-    val driver = graft.io.ScanStats.exactRowCount(df) <= Exact.DriverFitMaxRows
-    val (lo, hi) = Exact.quantiles(df, Seq(c), Seq(pLo, pHi), driver)(c) match {
+    val probs = Seq(pLo, pHi)
+    val fit =
+      if (graft.io.ScanStats.exactRowCount(df) <= Exact.DriverFitMaxRows)
+        Exact.quantiles(df, Seq(c), probs, driver = true)
+      else Exact.percentiles(df, Seq(c), probs)
+    val (lo, hi) = fit(c) match {
       case Some(qs) => (lit(qs(0)), lit(qs(1)))
       case None     => (lit(null).cast("double"), lit(null).cast("double"))
     }

@@ -51,9 +51,10 @@ class SourceSweepSpec extends AnyFunSuite {
     // Exact.collectColumns holds the ONE Spark-side column collect behind
     // every driver-side fit (one fused job, each caller behind its own
     // driver-fit ceiling); it replaced collectColumnsDoubles' collect.
-    // One collect fewer: the single-task window quantile form is gone;
-    // the cents histogram's crossing-bin collect is the other site.
-    "ops/Exact.scala" -> (2, 1),
+    // The single-task window quantile form's collect is gone; the cents
+    // histogram now has two: its ineligible-column ids (≤ one row per
+    // fitted column) and its crossing bins (≤ 2·|probs|+1 per column).
+    "ops/Exact.scala" -> (3, 1),
     // Three collects fewer: collectRawState's fused collect and its
     // per-column split branch (two collects) are gone; the fit reads
     // through Exact.collectColumns. Left: sdcSuppress's rare-set fit (a

@@ -154,13 +154,16 @@ class ExactQuantilesSpec extends SparkSpec {
 
   test("Exact.quantiles and the histogram profile release their checkpoint") {
     import spark.implicits._
-    val df = Seq(1.25, 2.5, 3.75, 5.0).toDF("v")
+    // the second frame is not cents-eligible: Exact.quantiles stops after
+    // the histogram scan and must release that cache too
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
-    Exact.quantiles(df, Seq("v"), probs, driver = false)
-    assert(sc.getPersistentRDDs.size == before, "Exact.quantiles left an RDD persisted")
-    Exact.numProfileViaCentsHistogram(df, Seq("v"), probs, hiLo = true)
-    assert(sc.getPersistentRDDs.size == before, "numProfileViaCentsHistogram left an RDD persisted")
+    for (df <- Seq(Seq(1.25, 2.5, 3.75, 5.0).toDF("v"), Seq(1.125, 2.5, 3.75).toDF("v"))) {
+      val before = sc.getPersistentRDDs.size
+      Exact.quantiles(df, Seq("v"), probs, driver = false)
+      assert(sc.getPersistentRDDs.size == before, "Exact.quantiles left an RDD persisted")
+      Exact.numProfileViaCentsHistogram(df, Seq("v"), probs, hiLo = true)
+      assert(sc.getPersistentRDDs.size == before, "numProfileViaCentsHistogram left an RDD persisted")
+    }
   }
 
   test("histogram NumFit == driver-sort NumFit on all lineitem numeric columns (r12 moments)") {

@@ -44,12 +44,18 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("generalizeNumeric: ≤ bins labels, covers all rows, label format") {
-    val df = (1 to 100).map(_.toDouble).toDF("x")
-    val out = Privacy.generalizeNumeric(df, "x", 10)
-    val labels = out.select("x").distinct().collect().map(_.getString(0))
-    assert(labels.length <= 10)
-    assert(labels.forall(_.matches("""\[\d+\.\d{2}, \d+\.\d{2}[\)\]]""")))
-    assert(out.filter(col("x").isNull).count() == 0)
+    // the second input has 3+ decimals: cents-rounded edges would read
+    // 0.00 … 0.10 and leave 0.1004 outside every bin (a null label); the
+    // raw edges are 0.0014 … 0.1004
+    val outs = Seq((1 to 100).map(_.toDouble), (1 to 100).map(i => i / 1000.0 + 0.0004))
+      .map(xs => Privacy.generalizeNumeric(xs.toDF("x"), "x", 10))
+    for (out <- outs) {
+      val labels = out.select("x").distinct().collect().map(_.getString(0))
+      assert(labels.length <= 10)
+      assert(labels.forall(_.matches("""\[\d+\.\d{2}, \d+\.\d{2}[\)\]]""")))
+      assert(out.filter(col("x").isNull).count() == 0)
+    }
+    assert(outs(1).filter(col("x") === "[0.09, 0.10]").count() == 10)
   }
 
   test("generalizeNumeric: duplicate edges merged (skewed data)") {
@@ -57,15 +63,6 @@ class PrivacySpec extends SparkSpec {
     val out = Privacy.generalizeNumeric(df, "x", 10)
     assert(out.select("x").distinct().count() <= 10)
     assert(out.filter(col("x").isNull).count() == 0)
-  }
-
-  test("generalizeNumeric: a column with more than 2 decimals bins on its raw values, every row labeled") {
-    // cents-rounded edges would read 0.00 … 0.10 here and leave 0.1004
-    // outside every bin (a null label); the raw edges are 0.0014 … 0.1004
-    val df = (1 to 100).map(i => i / 1000.0 + 0.0004).toDF("x")
-    val out = Privacy.generalizeNumeric(df, "x")
-    assert(out.filter(col("x").isNull).count() == 0)
-    assert(out.filter(col("x") === "[0.09, 0.10]").count() == 10)
   }
 
   test("dpNoise: seeded, mean shift → 0, scale ≈ b for large n") {
