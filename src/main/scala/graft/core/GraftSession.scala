@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.compliance.Checklist
 import graft.io.YamlConfig.PipelineConfig
 import graft.ml.UtilityCheck
-import graft.ops.{Drift, Privacy, Profile}
+import graft.io.ScanStats
+import graft.ops.{Drift, Par, Privacy, Profile}
 import graft.report.Html
 import graft.risk.Linkage
 import java.time.Instant
@@ -19,7 +20,9 @@ import java.time.Instant
   * sets, distinct categories — all small) and the report's bounded
   * previews. A user of
   * the reference switches by constructing a session and calling the same
-  * six steps.
+  * six steps, one at a time; [[runPipeline]] runs them as the dependency
+  * graph they form (risk, the before side, and protect → after side at
+  * once on [[graft.ops.Par]]) with the same outputs.
   */
 final class GraftSession(val spark: SparkSession) {
 
@@ -54,7 +57,9 @@ final class GraftSession(val spark: SparkSession) {
     * noise is a column expression. The returned plan is therefore the
     * scan under one Project, and every later reader (utility fits,
     * counts, previews, a CSV publish) re-runs no fit. The fits are eager:
-    * one grouped-count job per suppressed column, and per generalized
+    * the suppressed columns' histograms from one collect (no job on a pure
+    * parquet scan; a grouped-count job per column above the driver-fit
+    * ceiling), and per generalized
     * column one [[graft.ops.Exact.quantiles]] fit of its exact edges
     * (the driver sort up to [[graft.ops.Exact.DriverFitMaxRows]] rows,
     * the cents histogram above it). A null group counted below the
@@ -171,6 +176,24 @@ final class GraftSession(val spark: SparkSession) {
     * actually needs, with the Streamlit reruns replaced by one pass of
     * lazy plans and bounded fits.
     *
+    * The six steps form a dependency graph, not a chain, and run as one
+    * on [[graft.ops.Par]]: three branches at once —
+    *  - risk (reads only anon and real);
+    *  - the before side: the anon profile, the compliance checklist, the
+    *    anon preview and the anon row count (none reads protect output);
+    *  - protect, then the after side: the protected profile, drift, the
+    *    optional model utility, the protected preview and its row count.
+    * Each side fans its parts out again, and every part renders its own
+    * report table ([[graft.report.Html.tableHtml]]), so each eager fit
+    * and preview collect runs on its own thread; at this scale a step is
+    * a handful of small jobs whose fixed cost, not the cores, bounds the
+    * wall, so the overlap leaves the executors less idle. The wall is
+    * about max(risk, before, protect + after); [[PipelineRun.stepSeconds]]
+    * holds each branch's. A failure on any branch is rethrown after every
+    * branch has finished. The public steps ([[assessRisk]], [[protect]],
+    * [[measureUtility]], [[compliance]], [[report]]) still run one at a
+    * time for a caller that wants them so.
+    *
     * The returned report is the FULL reference artifact
     * (`modules/reporting.py:36-49` `save_html_report(summary,
     * risk_summary, util_stats, comp_df)`): run + risk summaries, stats
@@ -178,7 +201,10 @@ final class GraftSession(val spark: SparkSession) {
     * bounded previews. Deterministic under a fixed `clock` + config
     * `seed` — byte-stable across reruns and partitionings (every fit is
     * exact-decimal / seeded), which is what makes the artifact diffable
-    * in CI.
+    * in CI. Running the branches at once changes no output: each reads
+    * its own plans, nothing is cached or shared between them, and the
+    * report is assembled in the sequential order, so its bytes equal the
+    * steps run one at a time and rendered by [[graft.report.Html.render]].
     *
     * @param quasi  explicit quasi-identifiers; empty = V7 suggestions
     * @param target optional label column for the D4 model-utility check
@@ -192,41 +218,77 @@ final class GraftSession(val spark: SparkSession) {
                   clock: () => Instant = () => Instant.now()): PipelineRun = {
     uploadReal(realDf)
     uploadAnon(anonDf)
-    val risk = assessRisk(quasi)
-    val prot = protect(config)
-    val utility = measureUtility(target)
-    val (checklist, complianceScore) = compliance()
+    def rendered(df: DataFrame): (DataFrame, String) = df -> Html.tableHtml(df)
+    def beforeSide() = {
+      val ((stats, preview), ((checklist, score), rows)) = Par.both(
+        Par.both(rendered(Profile.profile(anonDf)), rendered(anonDf)),
+        Par.both(
+          { val (cl, s) = compliance(); (rendered(cl), s) },
+          ScanStats.exactRowCount(anonDf)))
+      (score, rows, stats, checklist, preview)
+    }
+    def afterSide(prot: DataFrame) = {
+      val (rows, Seq(stats, drift, preview, model @ _*)) = Par.both(
+        prot.count(),
+        Par.all(Seq(
+          () => rendered(Profile.profile(prot)),
+          () => rendered(Drift.driftAll(anonDf, prot)),
+          () => rendered(prot)) ++
+          target.map(t => () => rendered(UtilityCheck.modelUtility(anonDf, prot, t)))))
+      (rows, stats, drift, preview, model.headOption)
+    }
+    val ((risk, riskWall), ((before, beforeWall), ((prot, protectWall), (after, afterWall)))) =
+      Par.both(
+        timed("risk")(assessRisk(quasi)),
+        Par.both(
+          timed("before")(beforeSide()),
+          { val p = timed("protect")(protect(config)); (p, timed("after")(afterSide(p._1))) }))
+    val (complianceScore, rowsBefore, statsBefore, checklist, anonPreview) = before
+    val (rowsAfter, statsAfter, drift, protPreview, model) = after
     val summary = RunSummary(
       quasiIds = risk.quasi,
       riskScore = Some(risk.riskScore),
-      rowsBefore = anon.map(_.count()),
-      rowsAfter = Some(prot.count()))
+      rowsBefore = Some(rowsBefore),
+      rowsAfter = Some(rowsAfter))
     val riskJson =
       s"""{"risk_score": ${risk.riskScore}, "quasi": ${risk.quasi.map(s => "\"" + s + "\"").mkString("[", ", ", "]")}}"""
     val complianceJson = s"""{"checklist_score": $complianceScore}"""
-    val html = Html.render(title,
+    val html = Html.assemble(title,
       Seq("run summary" -> summary.toJson,
         "risk summary" -> riskJson,
         "compliance" -> complianceJson),
-      Seq("stats BEFORE" -> utility.statsBefore,
-        "stats AFTER" -> utility.statsAfter,
-        "distribution drift" -> utility.drift,
-        "compliance checklist" -> checklist,
-        "anon preview" -> anonDf,
-        "protected preview" -> prot) ++
-        utility.modelUtility.map("model utility" -> _),
+      Seq("stats BEFORE" -> statsBefore._2,
+        "stats AFTER" -> statsAfter._2,
+        "distribution drift" -> drift._2,
+        "compliance checklist" -> checklist._2,
+        "anon preview" -> anonPreview._2,
+        "protected preview" -> protPreview._2) ++
+        model.map("model utility" -> _._2),
       clock = clock)
     val pdf = pdfPath.map(p => graft.report.Pdf.writeFromHtml(html, p))
-    PipelineRun(risk, prot, utility, checklist, complianceScore, html, pdf)
+    val utility = UtilityResult(statsBefore._1, statsAfter._1, drift._1, model.map(_._1))
+    PipelineRun(risk, prot, utility, checklist._1, complianceScore, html, pdf,
+      Seq(riskWall, beforeWall, protectWall, afterWall))
+  }
+
+  /** `body`'s result and its wall seconds under `name`. */
+  private def timed[A](name: String)(body: => A): (A, (String, Double)) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, name -> (System.nanoTime() - t0) / 1e9)
   }
 }
 
 /** Everything [[GraftSession.runPipeline]] produced, including the final
-  * report — the reference app's whole session output as one value. */
+  * report — the reference app's whole session output as one value.
+  * `stepSeconds` holds the wall seconds of each branch of the run (risk,
+  * before side, protect, after side), in that order; it is not part of
+  * the report. */
 final case class PipelineRun(risk: RiskResult, protectedDf: DataFrame,
                              utility: UtilityResult, checklist: DataFrame,
                              complianceScore: Double, reportHtml: String,
-                             pdfPath: Option[String])
+                             pdfPath: Option[String],
+                             stepSeconds: Seq[(String, Double)])
 
 /** Reference `app.py:165`: overall score + quasi set. */
 final case class RiskResult(riskScore: Double, quasi: Seq[String])

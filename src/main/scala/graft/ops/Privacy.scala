@@ -38,38 +38,63 @@ object Privacy {
     * of `cols` whose GLOBAL frequency < threshold become "OTHER"; non-string
     * columns are silently skipped, as in the reference (`:7`).
     *
-    * Fit then apply, the reference's two steps: per string column, A4's
-    * grouped count collects the values counted below `threshold` (at most
-    * [[SuppressFitMaxValues]] + 1 rows reach the driver), then P4
+    * Fit then apply, the reference's two steps: per string column the fit
+    * collects the values counted below `threshold`, then P4
     * ([[sdcSuppressFitted]]) applies the set as a plain projection, so
-    * later readers of the output re-run no aggregate and no join. Up to
-    * one column per core fits at once. The null group is counted like any
-    * other value: a null group below the threshold becomes "OTHER", as in
-    * the v1 oracle's `COUNT(*) OVER (PARTITION BY c)`. A column whose rare
-    * set passes the ceiling, or holds a key that is not valid UTF-8 (an
-    * `InSet` literal is a decoded String and would no longer match the
-    * stored bytes), takes the byte-exact [[sdcSuppressBroadcast]]
-    * instead. */
-  def sdcSuppress(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame = {
+    * later readers of the output re-run no aggregate and no join. Under
+    * the driver-fit ceiling ([[driverFits]], or `maxCells` where a test
+    * forces the other branch) the rare sets come from the category
+    * histograms of [[Exact.collectColumns]] by the
+    * [[ProtectFit.rareCategories]] rule: no Spark job on a pure parquet
+    * scan, one fused job for every column otherwise. Above it, A4's
+    * grouped count runs per column (at most [[SuppressFitMaxValues]] + 1
+    * rows reach the driver), up to one column per core at once. The null
+    * group is counted like any other value: a null group below the
+    * threshold becomes "OTHER", as in the v1 oracle's `COUNT(*) OVER
+    * (PARTITION BY c)`. A column whose rare set passes the ceiling, or
+    * holds a key that is not valid UTF-8 (an `InSet` literal is a decoded
+    * String and would no longer match the stored bytes), takes the
+    * byte-exact [[sdcSuppressBroadcast]] instead. */
+  def sdcSuppress(df: DataFrame, cols: Seq[String], threshold: Long = 5): DataFrame =
+    sdcSuppressWith(df, cols, threshold, DriverFitMaxCells)
+
+  private[graft] def sdcSuppressWith(df: DataFrame, cols: Seq[String], threshold: Long,
+                                     maxCells: Long): DataFrame = {
     val strCols = df.schema.fields
       .filter(f => cols.contains(f.name) && f.dataType == StringType)
       .map(_.name).toSeq
-    val rareSets = Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
-      val rare = df.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
-        .filter(col("__cnt") < threshold)
-        .select(col(c).cast("binary")).limit(SuppressFitMaxValues + 1)
-        .collect().map(r => if (r.isNullAt(0)) null else r.getAs[Array[Byte]](0))
-      if (rare.length > SuppressFitMaxValues) None
-      else {
-        val keys = rare.map(b => if (b == null) Some(null) else graft.io.DriverParquet.strictUtf8(b))
-        if (keys.contains(None)) None else Some(keys.map(_.orNull).toSet)
+    val rareSets =
+      if (strCols.isEmpty) Seq.empty
+      else if (driverFits(df, strCols.size, maxCells)) {
+        val got = Exact.collectColumns(df, Nil, strCols)
+        strCols.map(c => rareKeys(got.cats(c), got.invalidUtf8(c), threshold)
+          .filter(_.size <= SuppressFitMaxValues))
+      } else Par.map(strCols, df.sparkSession.sparkContext.defaultParallelism) { c =>
+        val rare = df.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
+          .filter(col("__cnt") < threshold)
+          .select(col(c).cast("binary")).limit(SuppressFitMaxValues + 1)
+          .collect().map(r => if (r.isNullAt(0)) null else r.getAs[Array[Byte]](0))
+        if (rare.length > SuppressFitMaxValues) None
+        else {
+          val keys = rare.map(b => if (b == null) Some(null) else graft.io.DriverParquet.strictUtf8(b))
+          if (keys.contains(None)) None else Some(keys.map(_.orNull).toSet)
+        }
       }
-    }
     strCols.zip(rareSets).foldLeft(df) {
       case (d, (c, Some(rare))) => sdcSuppressFitted(d, c, rare)
       case (d, (c, None))       => sdcSuppressBroadcast(d, Seq(c), threshold)
     }
   }
+
+  /** V1's rare set from a category histogram: the keys counted below
+    * `threshold`, null a member when the null group is. None when the
+    * histogram's keys are lenient decodes of bytes that are not valid
+    * UTF-8: no String set matches the stored bytes, so the caller takes
+    * [[sdcSuppressBroadcast]]. */
+  private def rareKeys(counts: Map[String, Long], invalidUtf8: Boolean,
+                       threshold: Long): Option[Set[String]] =
+    if (invalidUtf8) None
+    else Some(counts.collect { case (k, n) if n < threshold => k }.toSet)
 
   /** V1 above [[SuppressFitMaxValues]]: per-column grouped counts (≤
     * |distinct| rows) joined back via broadcast, so the full table
@@ -377,10 +402,11 @@ object Privacy {
     * in a region where a 4× input cost ~10× the wall time. */
   private val DriverFitMaxCells = 4L << 20
 
-  private def driverFits(df: DataFrame, nCols: Int): Boolean = {
+  private def driverFits(df: DataFrame, nCols: Int,
+                         maxCells: Long = DriverFitMaxCells): Boolean = {
     val stats = df.queryExecution.optimizedPlan.stats
     if (stats.sizeInBytes > (BigInt(1) << 30)) return false
-    val cap = DriverFitMaxCells / math.max(1, nCols)
+    val cap = maxCells / math.max(1, nCols)
     stats.rowCount.map(_.toLong)
       // Pure parquet-scan plans answer from footers driver-side — no
       // probe JOB at all (the common catalog shape: Tables.* scans).
@@ -898,8 +924,7 @@ object Privacy {
       * bytes, so the caller takes [[sdcSuppressBroadcast]], as
       * [[sdcSuppress]] does. */
     def rareCategories(c: String, threshold: Long): Option[Set[String]] =
-      if (invalidUtf8(c)) None
-      else Some(catCounts.getOrElse(c, Map.empty).collect { case (k, n) if n < threshold => k }.toSet)
+      rareKeys(catCounts.getOrElse(c, Map.empty), invalidUtf8(c), threshold)
   }
 
   /** Build a [[ProtectFit]] with one collect of every column (see class

@@ -11,7 +11,9 @@ import java.time.{Instant, ZoneOffset}
   * `modules/reporting.py:41`).
   *
   * Driver-side by design: tables are `limit(n)` previews, so the collect
-  * is bounded regardless of input scale.
+  * is bounded regardless of input scale. Two halves: [[tableHtml]]
+  * collects one preview, [[assemble]] owns the template, and [[render]]
+  * is the two in sequence.
   */
 object Html {
 
@@ -36,18 +38,30 @@ object Html {
   }
 
   /** S4 report document. `summaries` are pre-serialized key→value blocks
-    * (the reference json.dumps's its session summaries). */
+    * (the reference json.dumps's its session summaries); each table
+    * renders through [[tableHtml]] into [[assemble]]'s template. */
   def render(title: String,
              summaries: Seq[(String, String)],
              tables: Seq[(String, DataFrame)],
              limit: Int = 20,
-             clock: () => Instant = () => Instant.now()): String = {
+             clock: () => Instant = () => Instant.now()): String =
+    assemble(title, summaries,
+      tables.map { case (name, df) => name -> tableHtml(df, limit) }, clock)
+
+  /** The report template over tables already rendered by [[tableHtml]]:
+    * a caller that collects its previews elsewhere (each on the thread
+    * that produced the frame, as `GraftSession.runPipeline` does) gets
+    * the same bytes [[render]] would give for the same tables. */
+  def assemble(title: String,
+               summaries: Seq[(String, String)],
+               renderedTables: Seq[(String, String)],
+               clock: () => Instant = () => Instant.now()): String = {
     val when = ts.format(clock())
     val summaryHtml = summaries.map { case (k, v) =>
       s"<section><h2>${escape(k)}</h2><pre>${escape(v)}</pre></section>"
     }.mkString("\n")
-    val tablesHtml = tables.map { case (name, df) =>
-      s"<section><h2>${escape(name)}</h2>\n${tableHtml(df, limit)}\n</section>"
+    val tablesHtml = renderedTables.map { case (name, html) =>
+      s"<section><h2>${escape(name)}</h2>\n$html\n</section>"
     }.mkString("\n")
     s"""<!DOCTYPE html>
        |<html><head><meta charset="utf-8"><title>${escape(title)}</title></head>

@@ -57,8 +57,10 @@ class SourceSweepSpec extends AnyFunSuite {
     "ops/Exact.scala" -> (3, 1),
     // Three collects fewer: collectRawState's fused collect and its
     // per-column split branch (two collects) are gone; the fit reads
-    // through Exact.collectColumns. Left: sdcSuppress's rare-set fit (a
-    // grouped-count collect under limit(SuppressFitMaxValues + 1)), the
+    // through Exact.collectColumns. Left: sdcSuppress's rare-set fit above
+    // its driver-fit ceiling (a grouped-count collect under
+    // limit(SuppressFitMaxValues + 1); below it the fit reads
+    // Exact.collectColumns' histograms, no collect of its own), the
     // driverFits probe (one long per partition), V4's at-scale fit
     // (≤ FitHistMaxBuckets rows per column) and V5's capped sweep.
     "ops/Privacy.scala" -> (4, 1),

@@ -26,6 +26,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case p => p
     }
 
+  /** `f`'s result and the Spark jobs started while it ran. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500) // the listener bus is async; let posted events drain
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.
     super.afterAll()

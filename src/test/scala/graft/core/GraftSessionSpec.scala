@@ -17,21 +17,6 @@ class GraftSessionSpec extends SparkSpec {
   private lazy val real = Csv.read(spark, sample("sample_real.csv"))
   private lazy val anon = Csv.read(spark, sample("sample_anon.csv"))
 
-  /** `f`'s result and the Spark jobs started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500) // the listener bus is async; let posted events drain
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("S1 csv inference matches the expected schema") {
     assert(real.schema.map(_.name) ==
       Seq("age", "gender", "pincode", "income", "target", "name"))
@@ -118,6 +103,70 @@ class GraftSessionSpec extends SparkSpec {
     assert(!acc("before").isNaN, "the anon side keeps its integer labels")
     assert(acc("after").isNaN, "synthesized labels are not classes: no model is fitted")
     assert(r.reportHtml.contains("model utility"))
+  }
+
+  test("runPipeline: the overlapped run equals the steps run one at a time") {
+    val clock = () => Instant.parse("2026-01-01T00:00:00Z")
+    for (synthetic <- Seq(false, true)) {
+      val cfg = PipelineConfig(
+        sdcCols = Seq("gender"), generalizeCols = Seq("income"),
+        dpCols = Seq("age"), epsilon = 1.0, synthetic = synthetic, seed = 42L)
+      val run = new GraftSession(spark).runPipeline(real, anon, cfg,
+        target = Some("target"), clock = clock)
+
+      val s = new GraftSession(spark).uploadReal(real).uploadAnon(anon)
+      val risk = s.assessRisk()
+      val prot = s.protect(cfg)
+      val u = s.measureUtility(target = Some("target"))
+      val (checklist, score) = s.compliance()
+      val summary = RunSummary(risk.quasi, Some(risk.riskScore),
+        Some(anon.count()), Some(prot.count()))
+      val riskJson = s"""{"risk_score": ${risk.riskScore}, "quasi": ${risk.quasi.map(q => "\"" + q + "\"").mkString("[", ", ", "]")}}"""
+      val html = graft.report.Html.render("SafeData Run",
+        Seq("run summary" -> summary.toJson, "risk summary" -> riskJson,
+          "compliance" -> s"""{"checklist_score": $score}"""),
+        Seq("stats BEFORE" -> u.statsBefore, "stats AFTER" -> u.statsAfter,
+          "distribution drift" -> u.drift, "compliance checklist" -> checklist,
+          "anon preview" -> anon, "protected preview" -> prot,
+          "model utility" -> u.modelUtility.get),
+        clock = clock)
+
+      assert(run.reportHtml == html, s"synthetic = $synthetic")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(run.protectedDf) == rows(prot), s"synthetic = $synthetic")
+      assert(run.stepSeconds.map(_._1) == Seq("risk", "before", "protect", "after"))
+      assert(run.stepSeconds.forall(_._2 > 0.0))
+      assert(!run.reportHtml.contains("stepSeconds"))
+    }
+  }
+
+  test("runPipeline: a failing branch rethrows its own exception, and no thread or persisted RDD is left") {
+    import scala.jdk.CollectionConverters._
+    val cfg = PipelineConfig(sdcCols = Seq("gender"), generalizeCols = Seq("income"),
+      dpCols = Seq("age"), seed = 42L)
+    def parThreads = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.getName.startsWith("graft-par-") && t.isAlive)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    // a missing quasi column fails the risk branch; a missing label fails
+    // one part of the after side's fan-out
+    val direct = Seq(
+      intercept[Throwable](new GraftSession(spark).uploadReal(real).uploadAnon(anon)
+        .assessRisk(Seq("no_such_column"))),
+      intercept[Throwable](graft.ml.UtilityCheck.modelUtility(anon,
+        new GraftSession(spark).uploadAnon(anon).protect(cfg), "no_such_label")))
+    val viaPipeline = Seq(
+      intercept[Throwable](new GraftSession(spark).runPipeline(real, anon, cfg,
+        quasi = Seq("no_such_column"), target = Some("target"))),
+      intercept[Throwable](new GraftSession(spark).runPipeline(real, anon, cfg,
+        target = Some("no_such_label"))))
+    // the messages match up to the plan's expression ids
+    def head(e: Throwable) = e.getMessage.linesIterator.next()
+    for ((d, p) <- direct.zip(viaPipeline)) {
+      assert(p.getClass == d.getClass)
+      assert(head(p) == head(d))
+    }
+    assert(parThreads == 0, "every branch thread has joined")
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
   }
 
   test("S3 yaml config round-trips") {

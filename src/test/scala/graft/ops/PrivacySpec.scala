@@ -37,6 +37,34 @@ class PrivacySpec extends SparkSpec {
     }
   }
 
+  test("sdcSuppress: the collector fit and the grouped-count fit both equal the join form") {
+    // v: a rare key, a rare pair and a rare null group; b: two byte-distinct
+    // invalid-UTF-8 keys × 3 each, which a lenient decode merges into one
+    // String counted 6
+    val bad = Seq(Array(0xC3.toByte, 0x28.toByte), Array(0xC4.toByte, 0x28.toByte))
+    val vs = Seq.fill(10)("common") ++ Seq("r1", "r2", "r2", null, null)
+    val bs = Seq.fill(9)("A".getBytes("UTF-8")) ++ bad.flatMap(Seq.fill(3)(_))
+    val mem = vs.zip(bs).zipWithIndex.map { case ((v, b), i) => (i.toLong, v, b) }
+      .toDF("id", "v", "raw").select(col("id"), col("v"), col("raw").cast("string").as("b"))
+    val path = java.nio.file.Files.createTempDirectory("v1_branches").toString + "/t.parquet"
+    mem.write.mode("overwrite").parquet(path)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("v"), col("b").cast("binary")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq)).sortBy(_._1).toSeq
+    for (df <- Seq(mem, spark.read.parquet(path))) {
+      val join = rows(Privacy.sdcSuppressBroadcast(df, Seq("v", "b"), 5))
+      assert(join.count(_._2 == "OTHER") == 5 && join.count(_._3 == "OTHER".getBytes("UTF-8").toSeq) == 6)
+      assert(rows(Privacy.sdcSuppress(df, Seq("v", "b"), 5)) == join, "below the ceiling")
+      assert(rows(Privacy.sdcSuppressWith(df, Seq("v", "b"), 5, maxCells = 0L)) == join,
+        "above the ceiling")
+    }
+    // on the parquet copy the valid-UTF-8 column's fit is the driver
+    // decode: no Spark job before the output is read
+    val pq = spark.read.parquet(path)
+    val (_, jobs) = jobsDuring(Privacy.sdcSuppress(pq, Seq("v"), 5))
+    assert(jobs == 0, s"sdcSuppress's fit ran $jobs jobs on a parquet scan, want 0")
+  }
+
   test("sdcSuppress skips non-string columns silently") {
     val df = Seq((1.0, "x")).toDF("num", "s")
     val out = Privacy.sdcSuppress(df, Seq("num", "s"), 5)
