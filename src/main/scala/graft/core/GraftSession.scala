@@ -182,14 +182,19 @@ final class GraftSession(val spark: SparkSession) {
     *  - the before side: the anon profile, the compliance checklist, the
     *    anon preview and the anon row count (none reads protect output);
     *  - protect, then the after side: the protected profile, drift, the
-    *    optional model utility, the protected preview and its row count.
+    *    optional model utility, the protected preview and its row count
+    *    (footer-read: protect's output is the scan under Projects).
     * Each side fans its parts out again, and every part renders its own
     * report table ([[graft.report.Html.tableHtml]]), so each eager fit
     * and preview collect runs on its own thread; at this scale a step is
     * a handful of small jobs whose fixed cost, not the cores, bounds the
     * wall, so the overlap leaves the executors less idle. The wall is
     * about max(risk, before, protect + after); [[PipelineRun.stepSeconds]]
-    * holds each branch's. A failure on any branch is rethrown after every
+    * holds each branch's. Inside the driver-fit ceilings risk is one job
+    * (the driver linkage form), each profile one collect finished on the
+    * driver, and the row counts come from parquet footers, so
+    * protect + after side — protect's fits, then drift — is the longest
+    * branch. A failure on any branch is rethrown after every
     * branch has finished. The public steps ([[assessRisk]], [[protect]],
     * [[measureUtility]], [[compliance]], [[report]]) still run one at a
     * time for a caller that wants them so.
@@ -229,7 +234,7 @@ final class GraftSession(val spark: SparkSession) {
     }
     def afterSide(prot: DataFrame) = {
       val (rows, Seq(stats, drift, preview, model @ _*)) = Par.both(
-        prot.count(),
+        ScanStats.exactRowCount(prot),
         Par.all(Seq(
           () => rendered(Profile.profile(prot)),
           () => rendered(Drift.driftAll(anonDf, prot)),

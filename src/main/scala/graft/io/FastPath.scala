@@ -2,8 +2,9 @@ package graft.io
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Process-wide tallies of the driver-side metadata fast paths
-  * ([[DictStats]], [[DriverParquet]]) vs their Spark-job fallbacks.
+/** Process-wide tallies of the driver-side fast paths ([[DictStats]],
+  * [[DriverParquet]], V6's driver linkage form, the a1 profile's driver
+  * string finish) vs their Spark-job fallbacks.
   *
   * Both fast paths degrade SILENTLY by design — any surprise (a
   * parquet-mr ABI change breaking the reflective dictionary-reader
@@ -22,12 +23,23 @@ object FastPath {
   val dictAnswered        = new AtomicLong  // columns it proved from metadata
   val driverParquetHits   = new AtomicLong  // DriverParquet collects served
   val driverParquetMisses = new AtomicLong  // collects refused → Spark path
+  // V6 linkage forms taken by Linkage.linkageRisk (one per call)
+  val linkageDriver       = new AtomicLong  // one tuple collect, finished on the driver
+  val linkagePlan         = new AtomicLong  // the exact cross-join plan
+  val linkageLsh          = new AtomicLong  // above the exact pair ceiling
+  // a1 profile string/date/timestamp/boolean stats (one per call with any)
+  val profileDriverFinish = new AtomicLong  // from the collector's histograms
+  val profilePlanFinish   = new AtomicLong  // the fused two-level aggregate
 
-  def reset(): Unit =
-    Seq(dictAsks, dictAnswered, driverParquetHits, driverParquetMisses).foreach(_.set(0L))
+  private def all = Seq(dictAsks, dictAnswered, driverParquetHits, driverParquetMisses,
+    linkageDriver, linkagePlan, linkageLsh, profileDriverFinish, profilePlanFinish)
+
+  def reset(): Unit = all.foreach(_.set(0L))
 
   /** One JSON object, stable key order, for embedding in bench lines. */
   def snapshotJson: String =
     s"""{"dict_asks":${dictAsks.get},"dict_answered":${dictAnswered.get},""" +
-      s""""driver_parquet_hits":${driverParquetHits.get},"driver_parquet_misses":${driverParquetMisses.get}}"""
+      s""""driver_parquet_hits":${driverParquetHits.get},"driver_parquet_misses":${driverParquetMisses.get},""" +
+      s""""linkage_driver":${linkageDriver.get},"linkage_plan":${linkagePlan.get},"linkage_lsh":${linkageLsh.get},""" +
+      s""""profile_driver_finish":${profileDriverFinish.get},"profile_plan_finish":${profilePlanFinish.get}}"""
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * A dispatch decision (driver-fit vs distributed, broadcast vs shuffle)
   * often needs a ROW count, which plan statistics only carry under CBO;
   * without it the fallback is a probe job. But when the optimized plan
-  * is a pure column-pruned scan, the exact row count is already sitting
-  * in the parquet footers (one block-metadata record per row group) —
+  * is a scan under row-preserving projections, the exact row count is
+  * already sitting in the parquet footers (one block-metadata record per
+  * row group) —
   * the same statistics the scan itself will use — and reading them is a
   * few milliseconds of driver IO per file. Callers keep their probe-job
   * fallback for every other plan shape (filters, joins, non-parquet
@@ -21,9 +22,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 object ScanStats {
 
   /** Exact row count when `df`'s optimized plan is a parquet scan with
-    * no row-changing operator on top (column-pruning Projects and
-    * aliases are fine; any Filter/Join/Aggregate is not). None means
-    * "can't answer from metadata — use your fallback". Callers should
+    * no row-changing operator on top (Projects and aliases are fine,
+    * computed or not; any Filter/Sample/Join/Aggregate/Generate is not).
+    * None means "can't answer from metadata — use your fallback". Callers should
     * bound their own exposure first (the existing plan-stats byte
     * short-circuits): footer reads are per-file driver IO, right for
     * the ≲1 GiB plans dispatch decisions actually probe. */
@@ -31,7 +32,7 @@ object ScanStats {
     parquetScanLayout(df).map(_._1)
 
   /** Exact row count, footer-first: the metadata answer when the plan is
-    * a pure parquet scan, else one zero-column count job. For the
+    * a parquet scan under Projects, else one zero-column count job. For the
     * pre-flight `df.count()` dispatch sites (moment accumulator domain,
     * driver-fit ceilings) whose input is almost always a pure scan —
     * each swap deletes one Spark job from the operator's wall. */
@@ -48,6 +49,13 @@ object ScanStats {
     * costs the slower-but-exact branch, never correctness. */
   def parquetScanRowUpperBound(df: DataFrame): Option[Long] =
     footerFiles(df, throughFilters = true).flatMap(footerTotals(df, _)).map(_._1)
+
+  /** A row-count bound with no job: [[parquetScanRowUpperBound]], else the
+    * optimizer's row-count statistic (exact for in-memory local relations,
+    * an estimate under CBO). None: neither is known. */
+  def rowUpperBound(df: DataFrame): Option[Long] =
+    parquetScanRowUpperBound(df)
+      .orElse(df.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong))
 
   /** The scanned parquet files when `df` is a pure scan whose projections
     * only prune or rename columns (plain attribute lists — no computed
@@ -146,15 +154,15 @@ object ScanStats {
     footerFiles(df, throughFilters = false).flatMap(footerTotals(df, _))
 
   /** The parquet files under `df` when its optimized plan is a scan under
-    * deterministic Projects and aliases (and Filters, if
-    * `throughFilters`), and there are at most [[DictStats.MaxFiles]] of
-    * them: every footer reader here opens each file on the driver, so a
-    * table of more files answers None and its caller takes the scan-side
-    * fallback. */
+    * Projects and aliases (and Filters, if `throughFilters`), and there
+    * are at most [[DictStats.MaxFiles]] of them: every footer reader here
+    * opens each file on the driver, so a table of more files answers None
+    * and its caller takes the scan-side fallback. */
   private def footerFiles(df: DataFrame, throughFilters: Boolean): Option[Seq[String]] = {
     def unwrap(p: LogicalPlan): LogicalPlan = p match {
-      // a Project can only prune/rename columns — row-preserving
-      case Project(exprs, child) if exprs.forall(_.deterministic) => unwrap(child)
+      // a Project emits one row per input row, whatever it computes —
+      // non-deterministic columns (V3's seeded noise) included
+      case Project(_, child) => unwrap(child)
       case SubqueryAlias(_, child) => unwrap(child)
       case Filter(_, child) if throughFilters => unwrap(child)
       case other => other

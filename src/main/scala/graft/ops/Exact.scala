@@ -543,17 +543,22 @@ object Exact {
     * UTF-8. Such a column's histogram keys are lenient decodes (U+FFFD
     * for each malformed sequence) and byte-distinct keys that decode
     * alike share one summed entry, so a caller that must match the
-    * stored bytes (V1's rare set) takes a byte-exact form instead. */
+    * stored bytes (V1's rare set) takes a byte-exact form instead.
+    * `tuples` is the histogram of the distinct tuples of the collector's
+    * `tupleCols`: one row per tuple, its fields typed and ordered as
+    * those columns, with the tuple's row count. */
   final case class Columns(rows: Long,
                            nums: Map[String, (Array[Double], Long)],
                            cats: Map[String, Map[String, Long]],
-                           invalidUtf8: Set[String]) {
+                           invalidUtf8: Set[String],
+                           tuples: Seq[(org.apache.spark.sql.catalyst.InternalRow, Long)] = Nil) {
     def values(c: String): Array[Double] = nums(c)._1
   }
 
   /** The one column collector behind every driver-side fit: V2's driver
     * sort, V4 synthesis, the fused protect fit, the a1 profile,
-    * winsorize, robust-scale and the d3 drift tails. Every caller gates
+    * winsorize, robust-scale, the d3 drift tails and V6's driver linkage
+    * form. Every caller gates
     * it behind its own driver-fit ceiling ([[DriverFitMaxRows]],
     * `Profile.DriverSortMaxCells`, `Privacy.DriverFitMaxCells`,
     * `Drift.KsDriverMaxBytes`), so the columns it is asked for were
@@ -571,18 +576,35 @@ object Exact {
     *  - category keys are counted per partition on their UTF8String
     *    bytes and merged by bytes on the driver, then decoded strictly
     *    as the driver decode does (see [[Columns]] for keys that are not
-    *    valid UTF-8). */
+    *    valid UTF-8);
+    *  - `tupleCols` (V6's driver linkage form) are counted as TUPLES of
+    *    their typed values, grouped as Spark's groupBy groups them
+    *    (binary row equality, -0.0 = 0.0, one NaN): per partition on the
+    *    tuple's UnsafeRow, merged by those bytes on the driver. A tuple
+    *    histogram always runs the Spark form. */
   def collectColumns(df: org.apache.spark.sql.DataFrame, numCols: Seq[String],
                      catCols: Seq[String] = Nil,
-                     keepNonFinite: Boolean = false): Columns = {
-    graft.io.DriverParquet.collectColumns(df, numCols, catCols, keepNonFinite) match {
-      case Some((rows, nums, cats)) => return Columns(rows, nums, cats, Set.empty)
-      case None                     => ()
-    }
+                     keepNonFinite: Boolean = false,
+                     tupleCols: Seq[String] = Nil): Columns = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    if (tupleCols.isEmpty)
+      graft.io.DriverParquet.collectColumns(df, numCols, catCols, keepNonFinite) match {
+        case Some((rows, nums, cats)) => return Columns(rows, nums, cats, Set.empty)
+        case None                     => ()
+      }
     val kN = numCols.length
     val kC = catCols.length
+    val tupleTypes = tupleCols.map(c => df.schema(c).dataType)
+    // -0.0 → 0.0 before the key is encoded (UnsafeRow.setDouble already
+    // canonicalizes NaN): grouping equality as binary row equality
+    val tupleExprs = tupleCols.zip(tupleTypes).map {
+      case (c, t @ (DoubleType | FloatType)) =>
+        when(col(c) === lit(0), lit(0).cast(t)).otherwise(col(c))
+      case (c, _) => col(c)
+    }
     val proj = df.select(numCols.map(c => col(c).cast("double")) ++
-      catCols.map(c => col(c).cast("string")): _*)
+      catCols.map(c => col(c).cast("string")) ++ tupleExprs: _*)
     val parts = proj.queryExecution.toRdd.mapPartitions { it =>
       val bufs = Array.fill(kN)(new scala.collection.mutable.ArrayBuilder.ofDouble)
       val dropped = new Array[Long](kN)
@@ -591,6 +613,13 @@ object Exact {
       // safe — only the vocabulary pays an allocation, not every row
       val maps = Array.fill(kC)(
         new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Long]]())
+      // the same clone-on-insert for tuple keys, on their UnsafeRow
+      val tupleKey =
+        if (tupleTypes.isEmpty) null
+        else UnsafeProjection.create(tupleTypes.zipWithIndex.map { case (t, i) =>
+          BoundReference(kN + kC + i, t, nullable = true)
+        })
+      val tupleMap = new java.util.HashMap[UnsafeRow, Array[Long]]()
       var rows = 0L
       it.foreach { r =>
         rows += 1
@@ -612,13 +641,20 @@ object Exact {
           else maps(j).put(if (key == null) null else key.clone(), Array(1L))
           j += 1
         }
+        if (tupleKey != null) {
+          val key = tupleKey(r)
+          val cnt = tupleMap.get(key)
+          if (cnt != null) cnt(0) += 1L else tupleMap.put(key.copy(), Array(1L))
+        }
       }
       val hists = maps.map { m =>
         val out = Array.newBuilder[(Array[Byte], Long)]
         m.forEach((k, v) => out += ((if (k == null) null else k.getBytes) -> v(0)))
         out.result()
       }
-      Iterator.single((rows, bufs.map(_.result()), dropped, hists))
+      val tuples = Array.newBuilder[(Array[Byte], Long)]
+      tupleMap.forEach((k, v) => tuples += (k.getBytes -> v(0)))
+      Iterator.single((rows, bufs.map(_.result()), dropped, hists, tuples.result()))
     }.collect()
     val nums = numCols.zipWithIndex.map { case (c, i) =>
       val slices = parts.map(_._2(i))
@@ -648,7 +684,16 @@ object Exact {
       }
       c -> merged.toMap
     }.toMap
-    Columns(parts.map(_._1).sum, nums, cats, invalid)
+    val tuples = new java.util.HashMap[UnsafeRow, Array[Long]]()
+    parts.foreach(_._5.foreach { case (bytes, n) =>
+      val key = new UnsafeRow(tupleCols.length)
+      key.pointTo(bytes, bytes.length)
+      val cnt = tuples.get(key)
+      if (cnt != null) cnt(0) += n else tuples.put(key, Array(n))
+    })
+    val tupleSeq = Seq.newBuilder[(org.apache.spark.sql.catalyst.InternalRow, Long)]
+    tuples.forEach((k, n) => tupleSeq += (k -> n(0)))
+    Columns(parts.map(_._1).sum, nums, cats, invalid, tupleSeq.result())
   }
 
   /** Per-column fit of [[numProfileViaDriverSort]] and
@@ -695,15 +740,21 @@ object Exact {
     * distinct count and min/max — plain double work — stay usable. */
   def numProfileViaDriverSort(
       df: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      probs: Seq[Double], withMoments: Boolean = true): Map[String, NumFit] = {
-    val arrays = collectColumns(df, cols).nums
+      probs: Seq[Double], withMoments: Boolean = true): Map[String, NumFit] =
+    fitCollected(collectColumns(df, cols), cols, probs, withMoments)
+
+  /** [[numProfileViaDriverSort]] over columns already collected, for a
+    * caller whose one collect also carries other columns (the a1
+    * profile's category histograms). Sorts the collected arrays in
+    * place. */
+  def fitCollected(got: Columns, cols: Seq[String], probs: Seq[Double],
+                   withMoments: Boolean = true): Map[String, NumFit] =
     // per-COLUMN parallelism: each column's sort + cents + moment walk is
     // independent; sequential processing was the driver branch's serial
     // tail (~0.5 s over 8 × 600k cells at sf0.1)
     cols.map { c =>
-      c -> java.util.concurrent.CompletableFuture.supplyAsync(() => fitOne(arrays(c), probs, withMoments))
+      c -> java.util.concurrent.CompletableFuture.supplyAsync(() => fitOne(got.nums(c), probs, withMoments))
     }.map { case (c, fut) => c -> fut.join() }.toMap
-  }
 
   /** Largest |double| whose DECIMAL(18,2) cents form cannot overflow
     * precision 18: 16 integer digits + 2 decimals = 18. Doubles at 10¹⁶

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,9 +28,10 @@ object Profile {
     * driver-fit cost actually grows in; a row ceiling alone let a 7-column
     * profile collect ~540 MB at 10⁷ rows) the quantile fit stops
     * collecting raw columns to the driver and switches to the
-    * domain-shuffling histogram path. 8M cells ≈ 64 MB collect + ~1 s of
-    * single-threaded driver sorts — near the measured crossover vs the
-    * bucketed histogram job. */
+    * domain-shuffling histogram path; the non-numeric columns count their
+    * cells too when their stats ride the same collect. 8M cells ≈ 64 MB
+    * collect + ~1 s of single-threaded driver sorts — near the measured
+    * crossover vs the bucketed histogram job. */
   private val DriverSortMaxCells = 8_000_000L
 
   /** Fan-out floor: below this many rows the per-row work can't repay an
@@ -67,13 +68,35 @@ object Profile {
     * only columns the fit cannot certify (non-finite, or >2 decimals at
     * scale) fall back to the all-values sort-based `percentile` buffer
     * inside the wide agg. Every path is linear-interpolation exact —
-    * pandas/DuckDB-compatible, NOT `percentile_approx`. */
-  def profile(df: DataFrame): DataFrame = {
+    * pandas/DuckDB-compatible, NOT `percentile_approx`.
+    *
+    * Inside the driver-fit regime (rows × (numeric + string/date/
+    * timestamp/boolean columns) ≤ [[DriverSortMaxCells]]) the numeric
+    * fit and the non-numeric stats come from ONE [[Exact.collectColumns]]
+    * call, and when every column is finished on the driver the profile
+    * is a local frame: rendering or collecting it runs no job. */
+  def profile(df: DataFrame): DataFrame = profileWith(df, DriverSortMaxCells)
+
+  /** [[profile]] with the driver-fit cell ceiling as a parameter: -1
+    * forces both plan forms. */
+  private[graft] def profileWith(df: DataFrame, maxCells: Long): DataFrame = {
     val fields = df.schema.fields
     val numCols = fields.filter(f => isNum(f.dataType)).map(_.name)
     val othCols = fields.filterNot(f => isNum(f.dataType)).map(_.name)
 
     def dtypeName(dt: DataType): String = dt.sql.toLowerCase
+
+    // Non-numeric columns whose string cast is order-preserving (see the
+    // fused branch below) are profiled from their value counts; the rest
+    // take the legacy per-column aggregates.
+    def fusable(dt: DataType): Boolean = dt match {
+      case StringType | DateType | BooleanType => true
+      case _: TimestampType => true
+      case _: TimestampNTZType => true
+      case _ => false
+    }
+    val (fusedCols, loopCols) =
+      othCols.toSeq.partition(c => fusable(fields.find(_.name == c).get.dataType))
 
     // Auto-dispatch (as in Exact.quantiles): below the row
     // threshold a single fused scan + driver sorts is strictly faster than
@@ -84,7 +107,8 @@ object Profile {
     // count_distinct (each one multiplies its Expand factor) only for the
     // rare column the fit can't certify (non-finite / >2-decimals at
     // scale).
-    val nRows = if (numCols.isEmpty) 0L else graft.io.ScanStats.exactRowCount(df)
+    val nRows =
+      if (numCols.isEmpty && fusedCols.isEmpty) 0L else graft.io.ScanStats.exactRowCount(df)
     // moment accumulators: hi/lo long sums inside the row ceiling (every
     // in-domain row updates long buffers only — no per-row BigDecimal),
     // plain decimal sums past it
@@ -98,13 +122,31 @@ object Profile {
     // (cents projection + moment slots over every raw row) was ~half of
     // a1's wall. Non-finite / >2-decimal columns come back
     // eligible = false and stay on the in-agg forms below.
+    // The non-numeric columns ride the same collect inside the ceiling
+    // (their histograms are value-domain sized, but a column of distinct
+    // strings costs a cell per row like a numeric column does).
+    val numDriver = numCols.nonEmpty && nRows * numCols.length <= maxCells
+    val fusedDriver = fusedCols.nonEmpty &&
+      nRows * (numCols.length + fusedCols.length) <= maxCells
+    val collected =
+      if (!numDriver && !fusedDriver) None
+      else Some(Exact.collectColumns(df, if (numDriver) numCols.toSeq else Nil,
+        if (fusedDriver) fusedCols else Nil))
     val driverFit: Map[String, Exact.NumFit] =
       if (numCols.isEmpty) Map.empty
-      else if (nRows * numCols.length <= DriverSortMaxCells)
-        Exact.numProfileViaDriverSort(df, numCols.toSeq, Seq(0.25, 0.5, 0.75))
+      else if (numDriver)
+        Exact.fitCollected(collected.get, numCols.toSeq, Seq(0.25, 0.5, 0.75))
       else
         Exact.numProfileViaCentsHistogram(df, numCols.toSeq,
           Seq(0.25, 0.5, 0.75), hiLo)
+    // a column holding a key that is not valid UTF-8 has lenient-decoded
+    // histogram keys: its byte-order min/max and mode need the plan form
+    val fusedStats: Option[Seq[CatStats]] = collected
+      .filter(g => fusedDriver && fusedCols.forall(c => !g.invalidUtf8(c)))
+      .map(g => fusedCols.map(c => catStats(g.cats(c))))
+    if (fusedCols.nonEmpty)
+      (if (fusedStats.isDefined) graft.io.FastPath.profileDriverFinish
+       else graft.io.FastPath.profilePlanFinish).incrementAndGet()
 
     // One wide aggregate covering every column's scan-side stats. The
     // cents conversion (the only expensive per-row step — a BigDecimal
@@ -124,6 +166,37 @@ object Profile {
     def fullyFitted(c: String): Option[Exact.NumFit] =
       driverFit.get(c).filter(f => f.eligible && (f.n == 0 || f.mean.isDefined))
     val aggCols = numCols.toSeq.filterNot(c => fullyFitted(c).isDefined)
+
+    def dtypeOf(c: String) = dtypeName(fields.find(_.name == c).get.dataType)
+    def local(rows: Seq[Row]): DataFrame =
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), LocalSchema)
+    // the fused rows finished on the driver, in the plan's column order
+    val fusedRowsLocal = fusedCols.zip(fusedStats.getOrElse(Nil)).map { case (c, st) =>
+      val isStr = fields.find(_.name == c).get.dataType == StringType
+      Row(c, dtypeOf(c), st.nTotal, st.nTotal - st.nNonNull,
+        if (st.nTotal > 0) (st.nTotal - st.nNonNull).toDouble / st.nTotal * 100.0 else null,
+        st.nUnique, null, null, null, null, null, null, null,
+        st.min.orNull, st.max.orNull,
+        if (isStr) st.top.map(_._1).orNull else null,
+        if (isStr) st.top.map(_._2).orNull else null)
+    }
+
+    // Every column finished on the driver: the profile is a local frame
+    // of the same rows, sorted by column name as the plan's orderBy sorts.
+    if (fields.nonEmpty && aggCols.isEmpty && loopCols.isEmpty &&
+        (fusedCols.isEmpty || fusedStats.isDefined)) {
+      def orNull(v: Option[Double]): Any = v.orNull
+      val numRowsLocal = numCols.toSeq.map { c =>
+        val f = fullyFitted(c).get
+        val q = f.quantiles.get.map(v => if (v.isNaN) null else v)
+        Row(c, dtypeOf(c), nRows, nRows - f.n,
+          if (nRows > 0) (nRows - f.n).toDouble / nRows * 100.0 else null,
+          f.nUnique.get, orNull(f.mean), orNull(f.std), orNull(f.minV),
+          q(0), q(1), q(2), orNull(f.maxV), null, null, null, null)
+      }
+      return local((numRowsLocal ++ fusedRowsLocal)
+        .sortWith((a, b) => utf8(a.getString(0)).compareTo(utf8(b.getString(0))) < 0))
+    }
     // prune to the aggregated columns BEFORE the fan-out decision so the
     // (possible) exchange ships only numeric columns, then project cents
     // AFTER it so the expensive per-row step runs at machine parallelism
@@ -225,7 +298,9 @@ object Profile {
       if (numCols.isEmpty) None
       else Some(wide.select(explode(array(rowStructs: _*)).as("r")).select(col("r.*")))
 
-    // Non-numeric columns, FUSED (round 7): one exploded narrow pass
+    // Non-numeric columns, FUSED (round 7) — the at-scale branch; inside
+    // the driver-fit regime [[catStats]] finishes the same stats from the
+    // collector's histograms. One exploded narrow pass
     // replaces a value-count groupBy per column (k extra scans + k
     // shuffles — ~40% of the profile's wall at sf0.1). Every row becomes
     // one (colIdx, value-as-string) entry; the first map-side-combinable
@@ -240,17 +315,9 @@ object Profile {
     // is what makes min/max-over-strings equal min/max-then-cast. Any
     // column OUTSIDE that list routes through the legacy per-column
     // aggregates — correctness first, fusion where proven.
-    def fusable(dt: DataType): Boolean = dt match {
-      case StringType | DateType | BooleanType => true
-      case _: TimestampType => true
-      case _: TimestampNTZType => true
-      case _ => false
-    }
-    val (fusedCols, loopCols) =
-      othCols.toSeq.partition(c => fusable(fields.find(_.name == c).get.dataType))
-
     val fusedRows: Option[DataFrame] = fusedCols match {
       case Nil => None
+      case _ if fusedStats.isDefined => Some(local(fusedRowsLocal))
       case cs =>
         val entries = cs.zipWithIndex.map { case (c, i) =>
           struct(lit(i).as("ci"), col(c).cast("string").as("v"))
@@ -355,6 +422,44 @@ object Profile {
       case None =>
         throw new IllegalArgumentException("profile: input has no columns")
     }).orderBy(col("column"))
+  }
+
+  /** The local frame's schema: [[profile]]'s columns and types, every
+    * field nullable. */
+  private val LocalSchema = StructType((
+    Seq[(String, DataType)]("column" -> StringType, "dtype" -> StringType,
+      "n_total" -> LongType, "n_missing" -> LongType, "missing_pct" -> DoubleType,
+      "n_unique" -> LongType) ++
+      Seq("mean", "std", "min_num", "p25", "median", "p75", "max_num").map(_ -> DoubleType) ++
+      Seq("min_str" -> StringType, "max_str" -> StringType, "top_value" -> StringType,
+        "top_freq" -> LongType)
+    ).map { case (n, t) => StructField(n, t) })
+
+  private def utf8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+
+  /** One non-numeric column's profile stats from its category histogram
+    * (the string cast of each value; SQL NULL under the null key), as the
+    * fused plan derives them: row and non-null counts, distinct non-null
+    * values, min/max in UTF-8 byte order (Spark's string order), and the
+    * mode — highest count, ties to the smallest key with NULL smallest,
+    * the plan's `min(struct(-cnt, v))`. `top` is None on empty input. */
+  private[ops] final case class CatStats(nTotal: Long, nNonNull: Long, nUnique: Long,
+                                         min: Option[String], max: Option[String],
+                                         top: Option[(String, java.lang.Long)])
+
+  private[ops] def catStats(hist: Map[String, Long]): CatStats = {
+    // (key, its UTF-8 form or null, count); NULL sorts first
+    val entries = hist.toSeq.map { case (k, n) => (k, if (k == null) null else utf8(k), n) }
+    def less(a: org.apache.spark.unsafe.types.UTF8String,
+             b: org.apache.spark.unsafe.types.UTF8String) =
+      a == null && b != null || a != null && b != null && a.compareTo(b) < 0
+    val keys = entries.filter(_._2 != null)
+    CatStats(hist.values.sum, keys.map(_._3).sum, keys.length.toLong,
+      keys.reduceOption((a, b) => if (less(b._2, a._2)) b else a).map(_._1),
+      keys.reduceOption((a, b) => if (less(a._2, b._2)) b else a).map(_._1),
+      entries.reduceOption { (a, b) =>
+        if (a._3 != b._3) (if (a._3 > b._3) a else b) else if (less(b._2, a._2)) b else a
+      }.map(e => (e._1, java.lang.Long.valueOf(e._3))))
   }
 
   /** Sketch-based profile — the single-scan 100 TB sibling of [[profile]]:

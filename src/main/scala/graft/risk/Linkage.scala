@@ -1,10 +1,14 @@
 package graft.risk
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InterpretedOrdering}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.RowTransforms
+import org.apache.spark.unsafe.types.UTF8String
+import graft.io.{FastPath, ScanStats}
+import graft.ops.{Exact, RowTransforms}
 
 /** k-NN linkage re-identification risk (SURVEY.md §2.5 V6, P8/P9;
   * reference `modules/risk.py:10-35`).
@@ -16,15 +20,26 @@ import graft.ops.RowTransforms
   * 1 − d₀/(d₀ + 1e-9) (with k=1 the row max IS d₀, so the score collapses
   * to an exact-match detector); overall = clip(mean, 0, 1).
   *
-  * Two physical forms (auto-dispatched by [[linkageRisk]]):
-  *  - [[linkageRiskExact]]: exact cross-join + min-per-row. O(n·m) — correct
-  *    choice up to ~10⁵×10⁵ pairs; Catalyst broadcasts the smaller side.
+  * Three forms; [[linkageRisk]] takes the first that applies:
+  *  - the driver form ([[driverSums]]): one Spark job collects both
+  *    sides' distinct quasi tuples with their counts, and the driver
+  *    computes the exact form's answer bit for bit. Taken when both
+  *    sides' row bounds (parquet footers, else plan statistics) are at
+  *    most [[graft.ops.Exact.DriverFitMaxRows]], distinct anon × distinct
+  *    real tuples are at most [[DriverMaxPairs]], and every value is
+  *    finite, inside the cents domain and valid UTF-8;
+  *  - [[linkageRiskExact]], the plan form: exact cross-join +
+  *    min-per-row, O(n·m) — taken up to ~10⁵×10⁵ pairs
+  *    ([[exactIsSafe]]); Catalyst broadcasts the smaller side. It is the
+  *    oracle's row (`v6_linkage_risk`);
   *  - [[linkageRiskLSH]]: BucketedRandomProjectionLSH approximate
-  *    similarity join for the 100 TB path (documented approximation:
-  *    pairs beyond `threshold` are treated as non-matches, which leaves
-  *    their score ≈ 0 — exactly where the exact form puts them).
+  *    similarity join for the 100 TB path, above [[exactIsSafe]]'s
+  *    ceiling (documented approximation: pairs beyond `threshold` are
+  *    treated as non-matches, which leaves their score ≈ 0 — exactly
+  *    where the exact form puts them).
+  * `graft.io.FastPath` counts which form each call took.
   *
-  * Both forms VECTOR-GROUP first (r12): the k=1 distance depends only on
+  * Every form VECTOR-GROUPS first (r12): the k=1 distance depends only on
   * the quasi-ID VALUES, so each side collapses to its distinct tuples
   * (a map-side-combinable groupBy — value-domain-sized however large the
   * input) before any pair work, with the anon multiplicity carried for
@@ -82,7 +97,6 @@ object Linkage {
     val hiLo = graft.io.ScanStats.parquetScanRowCount(fit)
       .orElse(graft.io.ScanStats.parquetScanRowUpperBound(fit))
       .getOrElse(fit.count()) <= graft.ops.Exact.HiLoSafeMaxRows
-    import graft.ops.Exact
     val proj = graft.ops.Par.widen(fit.select((nums ++ cats).map(col): _*))
       .select((nums ++ cats).map(c => col(c)) ++
         nums.map(c => Exact.cents(col(c)).as(s"__cents_$c")): _*)
@@ -134,7 +148,8 @@ object Linkage {
       real.queryExecution.optimizedPlan.stats.sizeInBytes <= maxPairBytesProduct
 
   /** V6 with a scale guard — the user-facing entry point: exact while
-    * the pair space is affordable ([[exactIsSafe]]), else fail over to
+    * the pair space is affordable ([[exactIsSafe]]) — on the driver
+    * when [[driverSums]] accepts the inputs, else as a plan — else fail over to
     * [[linkageRiskLSH]] rather than silently planning an O(n·m) cross
     * join (at full fact-table size that join is the one thing in this
     * module that cannot survive a scale-up; the LSH answer differs only
@@ -142,8 +157,236 @@ object Linkage {
     * [[linkageRiskExact]] / [[linkageRiskLSH]] directly. */
   def linkageRisk(anon: DataFrame, real: DataFrame, quasi: Seq[String],
                   maxPairBytesProduct: BigInt = ExactMaxPairBytesProduct): DataFrame =
-    if (exactIsSafe(anon, real, maxPairBytesProduct)) linkageRiskExact(anon, real, quasi)
-    else linkageRiskLSH(anon, real, quasi)
+    linkageRiskWith(anon, real, quasi, maxPairBytesProduct, Exact.DriverFitMaxRows, DriverMaxPairs)
+
+  /** [[linkageRisk]] with the driver form's two ceilings as parameters:
+    * `maxPairs = -1` forces the plan form, `Long.MaxValue` the driver
+    * form wherever its inputs allow it. */
+  private[graft] def linkageRiskWith(anon: DataFrame, real: DataFrame, quasi: Seq[String],
+                                     maxPairBytesProduct: BigInt, maxRows: Long,
+                                     maxPairs: Long): DataFrame =
+    if (!exactIsSafe(anon, real, maxPairBytesProduct)) {
+      FastPath.linkageLsh.incrementAndGet()
+      linkageRiskLSH(anon, real, quasi)
+    } else driverSums(anon, real, quasi, maxRows, maxPairs) match {
+      case Some(sums) =>
+        FastPath.linkageDriver.incrementAndGet()
+        riskTail(anon.sparkSession.createDataFrame(java.util.Collections.singletonList(sums),
+          StructType(Seq(StructField("sum_score", DoubleType), StructField("n", LongType)))))
+      case None =>
+        FastPath.linkagePlan.incrementAndGet()
+        linkageRiskExact(anon, real, quasi)
+    }
+
+  /** Ceiling on distinct anon tuples × distinct real tuples for
+    * [[driverSums]], whose k=1 scan runs on one driver thread. Measured
+    * on 4 cores with three features (two numeric, one categorical) over
+    * all-distinct parquet tuples, collect included: 10⁶ pairs 0.29 s
+    * against 1.4 s for the plan form, 10⁸ pairs 1.0 s against 12.6 s.
+    * The ceiling keeps the driver scan near a second; above it the plan
+    * form spreads the pairs over however many cores the cluster has. */
+  val DriverMaxPairs: Long = 100_000_000L
+
+  /** The final step both exact forms share: the clipped, rounded mean
+    * of a (sum_score, n) row. */
+  private def riskTail(sums: DataFrame): DataFrame =
+    sums.select(round(least(lit(1.0), greatest(lit(0.0), col("sum_score") / col("n"))), 9)
+      .as("risk_score"))
+
+  /** The exact form on the driver: the (sum_score, n) row of
+    * [[exactSums]] over [[fitFeatures]], bit-identical, for [[riskTail]]
+    * to finish as a local 1-row frame. ONE Spark job:
+    * [[Exact.collectColumns]] collects the tuple histogram of a
+    * side-tagged union of both inputs — the typed quasi
+    * values, each numeric's `cast(double)` and [[Exact.cents]], and the
+    * tuple's row count. Everything else runs on the driver in the plan
+    * form's order of operations:
+    *  - the anon fit: exact Σ cents·count and Σ cents²·count per numeric
+    *    into [[Exact.meanDouble]] / [[Exact.stdPopDouble]] (σ 0 or NaN →
+    *    1), and each categorical's anon vocabulary;
+    *  - per distinct anon tuple the k=1 squared distance over the
+    *    distinct real tuples: numeric terms then categorical terms, added
+    *    left to right; its square root is d₀;
+    *  - the plan's second grouping by (standardized key, anon count),
+    *    which can merge anon tuples whose standardized keys coincide;
+    *  - the running sum of the scores in Catalyst's ascending, nulls-first
+    *    order of the standardized keys (ties, which only such coinciding
+    *    keys make, broken by count) and of the counts, each's maximum.
+    * None — take the plan form — when a quasi column is missing or is
+    * neither numeric nor a plain string on either side, when either
+    * side's row bound ([[graft.io.ScanStats.rowUpperBound]]) is unknown
+    * or above `maxRows`, when distinct anon × distinct real tuples pass
+    * `maxPairs`, or when a value is non-finite, outside the cents domain
+    * (|v| ≥ 10¹⁶) or a key that is not valid UTF-8 (the plan's vocabulary
+    * literals are re-encoded strings there). */
+  private[graft] def driverSums(anon: DataFrame, real: DataFrame, quasi: Seq[String],
+                                maxRows: Long, maxPairs: Long): Option[Row] = {
+    def typeOf(df: DataFrame, c: String) = df.schema.find(_.name == c).map(_.dataType)
+    val typed = quasi.nonEmpty && quasi.distinct.size == quasi.size && quasi.forall { c =>
+      (typeOf(anon, c), typeOf(real, c)) match {
+        case (Some(a), Some(r)) => a == r && (a.isInstanceOf[NumericType] || a == StringType)
+        case _                  => false
+      }
+    }
+    if (!typed || maxPairs < 0 ||
+        !Seq(anon, real).forall(ScanStats.rowUpperBound(_).exists(_ <= maxRows))) return None
+    val (nums, cats) = split(anon, quasi) // the fit's feature order
+    def tagged(df: DataFrame, side: Int): DataFrame =
+      df.select(lit(side).as("__side") +: (quasi.map(col) ++ nums.flatMap { c =>
+        val d = col(c).cast("double")
+        // the guard keeps the cents cast from faulting; a null cents on a
+        // non-null value declines below
+        Seq(d.as(s"__d_$c"), when(abs(d) < lit(1.0e16), Exact.cents(col(c))).as(s"__c_$c"))
+      }): _*)
+    val both = tagged(anon, 0).union(tagged(real, 1))
+    if (both.columns.distinct.length != both.columns.length) return None
+    val tuples = Exact.collectColumns(both, Nil, tupleCols = both.columns.toSeq).tuples
+    val k = quasi.length
+    val dblAt = nums.indices.map(j => 1 + k + 2 * j)
+    val catAt = cats.map(c => 1 + quasi.indexOf(c))
+    val ok = tuples.forall { case (t, _) =>
+      dblAt.forall { i =>
+        t.isNullAt(i) || { val d = t.getDouble(i); !d.isNaN && !d.isInfinite && !t.isNullAt(i + 1) }
+      } && catAt.forall(i =>
+        t.isNullAt(i) || graft.io.DriverParquet.strictUtf8(t.getUTF8String(i).getBytes).isDefined)
+    }
+    val (anonT, realT) = tuples.toArray.partition(_._1.getInt(0) == 0)
+    if (!ok || anonT.length.toLong * realT.length > maxPairs) return None
+    // no real tuple: the plan's cross join, and so its aggregate, is empty
+    if (realT.isEmpty) return Some(Row(null, null))
+
+    // the anon fit (fitFeatures): exact moments over the tuple counts
+    val stdP: IndexedSeq[Option[(Double, Double)]] = dblAt.map { i =>
+      var n = 0L
+      var s1 = java.math.BigInteger.ZERO
+      var s2 = java.math.BigInteger.ZERO
+      anonT.foreach { case (t, cnt) =>
+        if (!t.isNullAt(i)) {
+          val cents = java.math.BigInteger.valueOf(t.getLong(i + 1))
+          val w = cents.multiply(java.math.BigInteger.valueOf(cnt))
+          n += cnt
+          s1 = s1.add(w)
+          s2 = s2.add(w.multiply(cents))
+        }
+      }
+      if (n == 0L) None
+      else {
+        val (b1, b2) = (new java.math.BigDecimal(s1), new java.math.BigDecimal(s2))
+        val sd = Exact.stdPopDouble(b1, b2, n)
+        Some((Exact.meanDouble(b1, n), if (sd == 0.0 || sd.isNaN) 1.0 else sd))
+      }
+    }
+    // standardized numerics per tuple; NaN stands for SQL NULL (every
+    // collected value is finite, so no real value is NaN)
+    def standardized(t: InternalRow): Array[Double] = dblAt.indices.map { j =>
+      stdP(j) match {
+        case Some((mu, sd)) if !t.isNullAt(dblAt(j)) => (t.getDouble(dblAt(j)) - mu) / sd
+        case _                                       => Double.NaN
+      }
+    }.toArray
+    // categorical keys as ids (-1 = NULL); inFit = member of the anon
+    // vocabulary, which every non-null anon key is
+    val ids = new java.util.HashMap[UTF8String, Integer]()
+    def catIds(t: InternalRow): Array[Int] = catAt.map { i =>
+      if (t.isNullAt(i)) -1
+      else {
+        val key = t.getUTF8String(i)
+        val id = ids.get(key)
+        if (id != null) id.intValue else { ids.put(key.clone(), ids.size); ids.size - 1 }
+      }
+    }.toArray
+    val aNum = anonT.map(p => standardized(p._1)).toArray
+    val aCat = anonT.map(p => catIds(p._1)).toArray
+    val rNum = realT.map(p => standardized(p._1)).toArray
+    val rCat = realT.map(p => catIds(p._1)).toArray
+    val inVocab = Array.fill(cats.length)(new java.util.BitSet())
+    aCat.foreach(ks => ks.indices.foreach(c => if (ks(c) >= 0) inVocab(c).set(ks(c))))
+    val nNum = nums.length
+    val nTerms = nNum + cats.length
+    // real tuples with a NULL standardized numeric have a NULL distance
+    val rLive = rNum.indices.filter(r => !rNum(r).exists(_.isNaN)).toArray
+    val rFit = rCat.map(ks => ks.indices.map(c =>
+      if (ks(c) >= 0 && inVocab(c).get(ks(c))) 1.0 else 0.0).toArray)
+    val d0: Array[Double] = aNum.indices.map { a =>
+      val an = aNum(a)
+      val ac = aCat(a)
+      var best = Double.PositiveInfinity
+      var found = false
+      if (!an.exists(_.isNaN)) {
+        var ri = 0
+        while (ri < rLive.length && !(found && best == 0.0)) {
+          val r = rLive(ri)
+          val rn = rNum(r)
+          val rc = rCat(r)
+          // numTerms ++ catTerms reduced left to right; every term is ≥ 0
+          // and float addition is monotone, so a partial sum at or above
+          // the best can only end there
+          var acc = 0.0
+          var t = 0
+          while (t < nTerms && !(found && acc >= best)) {
+            val term =
+              if (t < nNum) { val x = an(t) - rn(t); x * x }
+              else {
+                val c = t - nNum
+                if (ac(c) == rc(c)) 0.0
+                else (if (ac(c) >= 0) 1.0 else 0.0) + rFit(r)(c)
+              }
+            acc = if (t == 0) term else acc + term
+            t += 1
+          }
+          if (t == nTerms && (!found || acc < best)) { best = acc; found = true }
+          ri += 1
+        }
+      }
+      if (found) math.sqrt(best) else Double.NaN
+    }.toArray
+
+    // the plan's d0 grouping: (k_ keys, __acnt), numerics standardized
+    val keyTypes = quasi.map(c => if (nums.contains(c)) DoubleType else StringType)
+    val numOfQuasi = quasi.map(nums.indexOf(_))
+    val groups = new java.util.HashMap[InternalRow, Array[Double]]()
+    anonT.indices.foreach { a =>
+      val key = new GenericInternalRow(k + 1)
+      quasi.indices.foreach { q =>
+        val j = numOfQuasi(q)
+        if (j >= 0) {
+          val v = aNum(a)(j)
+          if (!v.isNaN) key.update(q, if (v == 0.0) 0.0 else v)
+        } else {
+          val t = anonT(a)._1
+          if (!t.isNullAt(1 + q)) key.update(q, t.getUTF8String(1 + q).clone())
+        }
+      }
+      key.update(k, anonT(a)._2)
+      val prev = groups.get(key)
+      if (prev == null) groups.put(key, Array(d0(a)))
+      else if (!d0(a).isNaN && (prev(0).isNaN || d0(a) < prev(0))) prev(0) = d0(a)
+    }
+    val byKeys = InterpretedOrdering.forSchema(keyTypes)
+    val sorted = {
+      val out = new java.util.ArrayList[java.util.Map.Entry[InternalRow, Array[Double]]](groups.entrySet())
+      out.sort { (x, y) =>
+        val c = byKeys.compare(x.getKey, y.getKey)
+        if (c != 0) c else java.lang.Long.compare(x.getKey.getLong(k), y.getKey.getLong(k))
+      }
+      out
+    }
+    // sum(score) and sum(__acnt) over the cumulative window, then max of each
+    var cum: java.lang.Double = null
+    var maxCum: java.lang.Double = null
+    var n: java.lang.Long = null
+    sorted.forEach { e =>
+      val acnt = e.getKey.getLong(k)
+      val dd = e.getValue()(0)
+      if (!dd.isNaN) {
+        val score = (1.0 - dd / (dd + 1e-9)) * acnt.toDouble
+        cum = (if (cum == null) 0.0 else cum.doubleValue) + score
+        if (maxCum == null || cum > maxCum) maxCum = cum
+      }
+      n = (if (n == null) 0L else n.longValue) + acnt
+    }
+    Some(Row(maxCum, n))
+  }
 
   /** Exact V6: overall risk score as a 1-row DataFrame (risk_score).
     *
@@ -162,7 +405,14 @@ object Linkage {
     * runs BOTH physical forms over the same fit frame, and refitting per
     * form doubled the fused fit job (r16). */
   private[graft] def linkageRiskExactFitted(anon: DataFrame, real: DataFrame,
-                                            quasi: Seq[String], fitP: FeatParams): DataFrame = {
+                                            quasi: Seq[String], fitP: FeatParams): DataFrame =
+    riskTail(exactSums(anon, real, quasi, fitP))
+
+  /** The exact plan up to its 1-row (sum_score, n) aggregate: the
+    * weighted score sum and the anon row count that [[riskTail]] turns
+    * into the risk. */
+  private[graft] def exactSums(anon: DataFrame, real: DataFrame,
+                               quasi: Seq[String], fitP: FeatParams): DataFrame = {
     val nums = fitP.nums
     val cats = fitP.cats
     // ONE fused μ/σ + vocab fit, shared by both sides (the fit frame is
@@ -206,7 +456,6 @@ object Linkage {
     d0.withColumn("cum", sum(score).over(wCum))
       .withColumn("n", sum(col("__acnt")).over(wCum))
       .agg(max(col("cum")).as("sum_score"), max(col("n")).as("n"))
-      .select(round(least(lit(1.0), greatest(lit(0.0), col("sum_score") / col("n"))), 9).as("risk_score"))
   }
 
   /** Scale path: LSH approximate neighbor join. Anon rows with no real

@@ -259,4 +259,39 @@ class GraftSessionSpec extends SparkSpec {
     assert(fit.rows == li.count())
     assert(fit.catCounts("rf").values.sum == fit.rows)
   }
+
+  test("job counts on the sample pair as parquet: risk and each profile take one job") {
+    import graft.io.FastPath
+    import graft.ops.Profile
+    val dir = java.nio.file.Files.createTempDirectory("graft_pair").toString
+    real.write.parquet(s"$dir/real.parquet")
+    anon.write.parquet(s"$dir/anon.parquet")
+    val (pqReal, pqAnon) = (spark.read.parquet(s"$dir/real.parquet"), spark.read.parquet(s"$dir/anon.parquet"))
+    val cfg = PipelineConfig(sdcCols = Seq("gender"), generalizeCols = Seq("income"),
+      dpCols = Seq("age"), epsilon = 1.0, seed = 42L)
+    val s = new GraftSession(spark).uploadReal(pqReal).uploadAnon(pqAnon)
+
+    val linkage = FastPath.linkageDriver.get
+    val (risk, riskJobs) = jobsDuring(s.assessRisk())
+    assert(risk.riskScore == 1.0)
+    assert(riskJobs <= 1, s"assessRisk ran $riskJobs jobs")
+    assert(FastPath.linkageDriver.get == linkage + 1, "risk took the driver linkage form")
+
+    val prot = s.protect(cfg)
+    for ((name, df) <- Seq("scan" -> pqAnon, "protected" -> prot)) {
+      val finish = FastPath.profileDriverFinish.get
+      val (_, jobs) = jobsDuring(graft.report.Html.tableHtml(Profile.profile(df)))
+      assert(jobs <= 1, s"profile of the $name ran $jobs jobs")
+      assert(FastPath.profileDriverFinish.get == finish + 1, s"profile of the $name: driver finish")
+    }
+
+    val (run, jobs) = jobsDuring(new GraftSession(spark).runPipeline(pqReal, pqAnon, cfg,
+      clock = () => Instant.parse("2026-01-01T00:00:00Z")))
+    assert(run.risk.riskScore == 1.0)
+    assert(jobs == PipelineJobs, s"runPipeline ran $jobs jobs, measured $PipelineJobs")
+  }
+
+  /** Spark jobs of one `runPipeline` on the sample pair read from parquet,
+    * without the model-utility check, as measured. */
+  private val PipelineJobs = 11
 }

@@ -55,4 +55,23 @@ class ScanStatsSpec extends SparkSpec {
     assert(ScanStats.parquetScanRowUpperBound(atCeiling.filter(col("id") >= 0)).contains(n))
     assert(ScanStats.parquetIntegerRanges(atCeiling, Seq("id")).contains(Map("id" -> (0L, 0L, 0L))))
   }
+
+  test("row counts read through computed and non-deterministic Projects, never row-changing plans") {
+    val dir = java.nio.file.Files.createTempDirectory("scanstats_proj").toString
+    (0 until 500).map(i => (i.toDouble, s"k${i % 7}")).toDF("x", "s")
+      .write.parquet(s"$dir/t.parquet")
+    val scan = spark.read.parquet(s"$dir/t.parquet")
+    // V3's seeded Laplace noise is a Project holding rand(): one row per row
+    val noised = graft.ops.Privacy.dpNoise(scan, Seq("x"), epsilon = 1.0, seed = 7L)
+    val (n, jobs) = jobsDuring(ScanStats.exactRowCount(noised))
+    assert(n == 500L && jobs == 0, s"exactRowCount ran $jobs jobs")
+    assert(ScanStats.parquetScanRowCount(noised.withColumn("y", col("x") * 2)).contains(500L))
+    // row-changing plans over the same scan still count with a job
+    Seq(scan.filter(col("x") > 10), scan.sample(0.5, 3L),
+      scan.join(scan.select(col("s").as("s2")), col("s") === col("s2")),
+      scan.select(explode(array(col("x"), col("x"))).as("e"))).foreach { df =>
+      assert(ScanStats.parquetScanRowCount(df).isEmpty, df.queryExecution.optimizedPlan.toString)
+      assert(ScanStats.exactRowCount(df) == df.count())
+    }
+  }
 }

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.io.FastPath
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ProfileSpec extends SparkSpec {
@@ -356,5 +358,60 @@ class ProfileSpec extends SparkSpec {
     val d = Profile.distinctCounts(empty).collect()
     assert(d.map(_.getString(0)).toSeq == Seq("n", "s"))
     assert(d.forall(_.getLong(1) == 0L))
+  }
+
+  /** `profile` (driver finish when `driver`) against both plan forms
+    * (`profileWith(…, -1)`): the same column names and types, the same
+    * rows in the same order; the branch is read from the counters. */
+  private def assertFinishes(df: DataFrame, driver: Boolean = true): Unit = {
+    val (d0, p0) = (FastPath.profileDriverFinish.get, FastPath.profilePlanFinish.get)
+    val got = Profile.profile(df)
+    assert(FastPath.profileDriverFinish.get - d0 == (if (driver) 1 else 0))
+    val plan = Profile.profileWith(df, -1)
+    assert(FastPath.profilePlanFinish.get - p0 == (if (driver) 1 else 2))
+    assert(got.schema.map(f => f.name -> f.dataType) == plan.schema.map(f => f.name -> f.dataType))
+    assert(got.collect().toSeq == plan.collect().toSeq)
+  }
+
+  /** String, date, timestamp and boolean columns with nulls beside a
+    * numeric one. `s` ties "a", "b" and NULL at two rows each (NULL wins
+    * the mode) and holds keys whose UTF-16 order differs from their UTF-8
+    * byte order (U+1F600 sorts above U+FFFD and U+E000 in Spark). */
+  private lazy val nonNumeric: DataFrame = {
+    val ss = Seq("b", "a", null, "b", "a", null, "\uD83D\uDE00", "\uFFFD", "\uE000", "")
+    ss.indices.map { i =>
+      (ss(i),
+        if (i % 4 == 3) null else java.sql.Date.valueOf(s"2024-0${1 + i % 3}-1${i % 7}"),
+        if (i % 5 == 4) null else java.sql.Timestamp.valueOf(s"2023-12-31 23:59:5${i % 3}.${i}25"),
+        if (i % 3 == 2) null else java.lang.Boolean.valueOf(i % 2 == 0),
+        if (i % 6 == 5) None else Some(i * 1.25))
+    }.toDF("s", "d", "ts", "flag", "x").repartition(3)
+  }
+
+  test("profile: the driver string finish equals the plan form (string, date, timestamp, boolean)") {
+    assertFinishes(nonNumeric)
+    assertFinishes(nonNumeric.drop("x")) // no numeric column at all
+    // a non-finite numeric keeps the plan's wide aggregate beside the
+    // driver-finished string rows
+    assertFinishes(nonNumeric.withColumn("y",
+      when(col("x") > 5, lit(Double.NaN)).otherwise(col("x"))))
+    val p = Profile.profile(nonNumeric).collect().map(r => r.getString(0) -> r).toMap
+    assert(p("s").isNullAt(15) && p("s").getLong(16) == 2L, "NULL wins the mode tie")
+    assert(p("s").getString(13) == "" && p("s").getString(14) == "\uD83D\uDE00")
+    assert(p("ts").isNullAt(15) && p("flag").isNullAt(16), "only strings carry a mode")
+  }
+
+  test("profile: the driver string finish on empty input, and its plan fallback on invalid UTF-8") {
+    assertFinishes(nonNumeric.filter(lit(false)))
+    val bad = Seq(Array(0xC3.toByte, 0x28.toByte), Array(0xC4.toByte, 0x28.toByte),
+      "ok".getBytes("UTF-8")).toDF("raw")
+      .select(col("raw").cast("string").as("s"), lit(1.5).as("x"))
+    assertFinishes(bad, driver = false)
+  }
+
+  test("profile: a frame finished on the driver is local — collecting it runs no job") {
+    val got = Profile.profile(nonNumeric)
+    val (_, jobs) = jobsDuring(graft.report.Html.tableHtml(got))
+    assert(jobs == 0, s"rendering ran $jobs jobs")
   }
 }

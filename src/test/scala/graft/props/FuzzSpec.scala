@@ -534,6 +534,27 @@ class FuzzSpec extends SparkSpec {
       runDifferential(seed, materializeFixture(seed), PrivacyFuzzQueries)
     }
 
+  // V6's driver linkage form against the exact plan (the oracle-pinned
+  // form) on the same degenerate quasi shapes, as parquet scans so the
+  // footer row bounds admit it; no oracle process needed
+  for (seed <- (19 to 21) ++ extra(5000))
+    test(s"V6 driver linkage form equals the exact plan on privacy fuzz seed $seed") {
+      import org.apache.spark.sql.functions.col
+      import graft.risk.Linkage
+      val li = spark.read.parquet(s"${materializeFixture(seed)}/lineitem.parquet")
+      val anon = li.filter(col("l_orderkey") % 3 === 0)
+      val real = li.filter(col("l_orderkey") % 3 =!= 1)
+      val quasi = Seq("l_quantity", "l_discount", "l_returnflag")
+      def bits(r: Row) =
+        (Option(r.get(0)).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])),
+          Option(r.get(1)))
+      val driver = Linkage.driverSums(anon, real, quasi,
+        graft.ops.Exact.DriverFitMaxRows, Linkage.DriverMaxPairs)
+      assert(driver.isDefined, "the driver form declined")
+      val plan = Linkage.exactSums(anon, real, quasi, Linkage.fitFeatures(anon, quasi)).head()
+      assert(bits(driver.get) == bits(plan))
+    }
+
   /** Chunking / packing / sampling / mixing over documents (r10
     * widening), on corpora planting token counts exactly at the
     * chunk/pack boundaries (32/24/128/256 ±1). Every oracle is

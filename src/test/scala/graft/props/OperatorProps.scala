@@ -100,6 +100,25 @@ object OperatorProps extends Properties("graft") {
       math.abs(risk - expected) < 1e-6
     }
 
+  // V6 input rows: a money-like numeric and a category, each about one
+  // draw in eight null, over domains small enough to repeat tuples
+  private val quasiRows: Gen[List[(Option[Double], String)]] = Gen.listOf(for {
+    q <- Gen.frequency(7 -> Gen.choose(0, 40).map(v => Some(v * 0.25)), 1 -> Gen.const(None))
+    g <- Gen.frequency(7 -> word, 1 -> Gen.const[String](null))
+  } yield (q, g))
+
+  property("V6: the driver form's sums equal the exact plan's, bit for bit") =
+    forAllNoShrink(quasiRows, quasiRows) { (as, rs) =>
+      val (anon, real) = (as.toDF("q", "g"), rs.toDF("q", "g"))
+      val quasi = Seq("q", "g")
+      def bits(r: org.apache.spark.sql.Row) =
+        (Option(r.get(0)).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])),
+          Option(r.get(1)))
+      val driver = Linkage.driverSums(anon, real, quasi, Long.MaxValue, Long.MaxValue)
+      val plan = Linkage.exactSums(anon, real, quasi, Linkage.fitFeatures(anon, quasi)).head()
+      driver.map(bits).contains(bits(plan))
+    }
+
   property("minhash signature: length fixed, values in [0, P)") =
     forAll(Gen.listOfN(12, word)) { ws =>
       (ws.size >= 3) ==> {
