@@ -190,9 +190,10 @@ final class GraftSession(val spark: SparkSession) {
     * a handful of small jobs whose fixed cost, not the cores, bounds the
     * wall, so the overlap leaves the executors less idle. The wall is
     * about max(risk, before, protect + after); [[PipelineRun.stepSeconds]]
-    * holds each branch's. Inside the driver-fit ceilings risk is one job
-    * (the driver linkage form), each profile one collect finished on the
-    * driver, and the row counts come from parquet footers, so
+    * holds each branch's. Inside the driver-fit ceilings risk is one
+    * grouped count (the driver linkage form), each profile at most one
+    * collect finished on the driver (none on a pure parquet scan), and
+    * the row counts come from parquet footers, so
     * protect + after side — protect's fits, then drift — is the longest
     * branch. A failure on any branch is rethrown after every
     * branch has finished. The public steps ([[assessRisk]], [[protect]],

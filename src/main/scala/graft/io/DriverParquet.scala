@@ -9,8 +9,11 @@ import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Driver-side COLUMNAR collect for small pure parquet scans — the fast
@@ -40,8 +43,18 @@ object DriverParquet {
   /** Raw doubles per numeric column (nulls dropped; NaN/±Inf dropped AND
     * counted, or kept with -0.0 normalized to 0.0 under `keepNonFinite` —
     * the [[graft.ops.Exact.collectColumns]] contract; UNsorted), category
-    * histogram per string column (SQL NULL under the null key), and the
+    * histogram per category column (SQL NULL under the null key), and the
     * exact row count. None = not eligible; use the Spark form.
+    *
+    * Category columns are strings, booleans, dates and timestamps, keyed
+    * as the Spark form keys them: by the value's string cast. A
+    * non-string column counts its raw decoded values and casts only its
+    * distinct values, with Spark's own `Cast` in the session time zone.
+    * Timestamps must be INT64 MICROS with the UTC adjustment the Spark
+    * type implies. A date or a zoned timestamp must also be read without
+    * calendar rebasing: the file was written by Spark 3.0+ in the
+    * proleptic calendar, or names no writer and the session's parquet
+    * rebase mode is CORRECTED (Spark's own rule for picking the rebase).
     *
     * `rawInt64Timestamps` (r16 ADVICE): timestamp columns decode as their
     * RAW INT64 epoch value in the FILE's unit (e.g. micros) — NOT the
@@ -75,7 +88,10 @@ object DriverParquet {
       }
       val schema = df.schema
       def sparkType(c: String): DataType = schema(c).dataType
-      if (!catCols.forall(c => sparkType(c) == StringType)) return None
+      if (!catCols.forall(c => sparkType(c) match {
+        case StringType | BooleanType | DateType | TimestampType | TimestampNTZType => true
+        case _ => false
+      })) return None
       if (!numCols.forall(c => sparkType(c) match {
         case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
         // timestamps decode as their raw INT64 epoch value (the FILE's
@@ -88,6 +104,8 @@ object DriverParquet {
       })) return None
 
       val conf = df.sparkSession.sessionState.newHadoopConf()
+      val sqlConf = df.sparkSession.sessionState.conf
+      val corrected = sqlConf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString == "CORRECTED"
       // Validation pass: one footer per file — physical-type pairing and
       // flatness per column, exact row count. Refuse the whole call on
       // any surprise; eligibility must hold for every file.
@@ -103,6 +121,11 @@ object DriverParquet {
         try {
           rowsTotal += reader.getRecordCount
           val msg = reader.getFileMetaData.getSchema
+          val kv = reader.getFileMetaData.getKeyValueMetaData
+          val proleptic = Option(kv.get("org.apache.spark.version")) match {
+            case Some(v) => v >= "3.0.0" && kv.get("org.apache.spark.legacyDateTime") == null
+            case None    => corrected
+          }
           (numCols ++ catCols).foreach { c =>
             if (!msg.containsField(c)) return None // schema-evolved file: all-null column — Spark path knows, this doesn't
             val t = msg.getType(Array(c): _*)
@@ -114,18 +137,20 @@ object DriverParquet {
               case (ByteType | ShortType | IntegerType, PrimitiveTypeName.INT32) => true
               case (LongType, PrimitiveTypeName.INT64)                           => true
               case (TimestampType | TimestampNTZType, PrimitiveTypeName.INT64)   =>
-                rawInt64Timestamps
+                rawInt64Timestamps || catCols.contains(c)
+              case (DateType, PrimitiveTypeName.INT32)                           => true
+              case (BooleanType, PrimitiveTypeName.BOOLEAN)                      => true
               case (FloatType, PrimitiveTypeName.FLOAT)                          => true
               case (DoubleType, PrimitiveTypeName.DOUBLE)                        => true
               case (StringType, PrimitiveTypeName.BINARY)                        => true
               case _                                                             => false
             }
             if (!ok) return None
+            val ann = desc.getPrimitiveType.getLogicalTypeAnnotation
             sparkType(c) match {
-              case TimestampType | TimestampNTZType =>
+              case TimestampType | TimestampNTZType if numCols.contains(c) =>
                 // annotation carries unit + UTC adjustment; it must exist
                 // and be byte-identical across files
-                val ann = desc.getPrimitiveType.getLogicalTypeAnnotation
                 if (ann == null) return None
                 val key = ann.toString
                 tsUnit.get(c) match {
@@ -133,6 +158,16 @@ object DriverParquet {
                   case None                      => tsUnit(c) = key
                   case _                         => ()
                 }
+              case DateType =>
+                if (!proleptic || !ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation])
+                  return None
+              case st @ (TimestampType | TimestampNTZType) => ann match {
+                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                    if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
+                      ts.isAdjustedToUTC == (st == TimestampType) &&
+                      (proleptic || st == TimestampNTZType) => ()
+                case _ => return None
+              }
               case _ => ()
             }
           }
@@ -142,9 +177,10 @@ object DriverParquet {
       // Decode pass: one unit per (file × column), parallel. Each unit
       // re-opens its file (footer parse is ~ms and page-cache warm) and
       // walks only its own column's chunks.
-      val units = for (f <- files; c <- numCols ++ catCols) yield (f, c)
-      val decoded: Seq[(String, Either[(Array[Double], Long), java.util.HashMap[Binary, Array[Long]]])] =
-        units.par.map { case (f, c) =>
+      val units = for (f <- files; (c, isNum) <- numCols.map(_ -> true) ++ catCols.map(_ -> false))
+        yield (f, c, isNum)
+      val decoded: Seq[(String, Either[(Array[Double], Long), java.util.HashMap[AnyRef, Array[Long]]])] =
+        units.par.map { case (f, c, isNum) =>
           val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
           try {
             val msg = reader.getFileMetaData.getSchema
@@ -153,10 +189,11 @@ object DriverParquet {
             val projected = new org.apache.parquet.schema.MessageType("graft_projection",
               java.util.List.of[org.apache.parquet.schema.Type](msg.getType(Array(c): _*)))
             reader.setRequestedSchema(projected)
-            val isNum = sparkType(c) != StringType
             val nums = if (isNum) new scala.collection.mutable.ArrayBuilder.ofDouble else null
             var droppedNonFinite = 0L
-            val cats = if (isNum) null else new java.util.HashMap[Binary, Array[Long]]()
+            // string keys are their Binary; other types' keys are the
+            // boxed raw value, cast to a string after the merge
+            val cats = if (isNum) null else new java.util.HashMap[AnyRef, Array[Long]]()
             var gi = 0
             val nGroups = reader.getRowGroups.size()
             while (gi < nGroups) {
@@ -179,7 +216,7 @@ object DriverParquet {
                     if (keepNonFinite) nums += (if (v == 0.0) 0.0 else v)
                     else if (!v.isNaN && !v.isInfinite) nums += v
                     else droppedNonFinite += 1L
-                  } else {
+                  } else if (tpe == PrimitiveTypeName.BINARY) {
                     // probe with the (possibly page-buffer-backed) Binary;
                     // copy only on first insert — the vocabulary pays the
                     // allocation, not every row
@@ -187,6 +224,14 @@ object DriverParquet {
                     val cnt = cats.get(b)
                     if (cnt != null) cnt(0) += 1L
                     else cats.put(b.copy(), Array(1L))
+                  } else {
+                    val v: AnyRef = tpe match {
+                      case PrimitiveTypeName.BOOLEAN => java.lang.Boolean.valueOf(cr.getBoolean)
+                      case PrimitiveTypeName.INT32   => java.lang.Integer.valueOf(cr.getInteger)
+                      case _                         => java.lang.Long.valueOf(cr.getLong)
+                    }
+                    val cnt = cats.get(v)
+                    if (cnt != null) cnt(0) += 1L else cats.put(v, Array(1L))
                   }
                 } else if (!isNum) {
                   val cnt = cats.get(null)
@@ -211,10 +256,15 @@ object DriverParquet {
       // is not valid UTF-8 refuses the whole call and the collector runs
       // its Spark form, which merges keys by bytes — the fast path refuses
       // rather than miscounts.
+      val tz = Some(sqlConf.sessionLocalTimeZone)
       val catMaps: Map[String, Map[String, Long]] = catCols.map { c =>
         val merged = scala.collection.mutable.HashMap.empty[String, Long]
         decoded.collect { case (`c`, Right(m)) => m }.foreach(_.forEach { (k, v) =>
-          val key = if (k == null) null else strictUtf8(k.getBytes).getOrElse(return None)
+          val key = k match {
+            case null      => null
+            case b: Binary => strictUtf8(b.getBytes).getOrElse(return None)
+            case raw       => Cast(Literal(raw, sparkType(c)), StringType, tz).eval().toString
+          }
           merged.update(key, merged.getOrElse(key, 0L) + v(0))
         })
         c -> merged.toMap

@@ -24,7 +24,7 @@ object FastPath {
   val driverParquetHits   = new AtomicLong  // DriverParquet collects served
   val driverParquetMisses = new AtomicLong  // collects refused → Spark path
   // V6 linkage forms taken by Linkage.linkageRisk (one per call)
-  val linkageDriver       = new AtomicLong  // one tuple collect, finished on the driver
+  val linkageDriver       = new AtomicLong  // one grouped count, finished on the driver
   val linkagePlan         = new AtomicLong  // the exact cross-join plan
   val linkageLsh          = new AtomicLong  // above the exact pair ceiling
   // a1 profile string/date/timestamp/boolean stats (one per call with any)

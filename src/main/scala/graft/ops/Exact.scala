@@ -543,22 +543,17 @@ object Exact {
     * UTF-8. Such a column's histogram keys are lenient decodes (U+FFFD
     * for each malformed sequence) and byte-distinct keys that decode
     * alike share one summed entry, so a caller that must match the
-    * stored bytes (V1's rare set) takes a byte-exact form instead.
-    * `tuples` is the histogram of the distinct tuples of the collector's
-    * `tupleCols`: one row per tuple, its fields typed and ordered as
-    * those columns, with the tuple's row count. */
+    * stored bytes (V1's rare set) takes a byte-exact form instead. */
   final case class Columns(rows: Long,
                            nums: Map[String, (Array[Double], Long)],
                            cats: Map[String, Map[String, Long]],
-                           invalidUtf8: Set[String],
-                           tuples: Seq[(org.apache.spark.sql.catalyst.InternalRow, Long)] = Nil) {
+                           invalidUtf8: Set[String]) {
     def values(c: String): Array[Double] = nums(c)._1
   }
 
   /** The one column collector behind every driver-side fit: V2's driver
     * sort, V4 synthesis, the fused protect fit, the a1 profile,
-    * winsorize, robust-scale, the d3 drift tails and V6's driver linkage
-    * form. Every caller gates
+    * winsorize, robust-scale and the d3 drift tails. Every caller gates
     * it behind its own driver-fit ceiling ([[DriverFitMaxRows]],
     * `Profile.DriverSortMaxCells`, `Privacy.DriverFitMaxCells`,
     * `Drift.KsDriverMaxBytes`), so the columns it is asked for were
@@ -576,35 +571,18 @@ object Exact {
     *  - category keys are counted per partition on their UTF8String
     *    bytes and merged by bytes on the driver, then decoded strictly
     *    as the driver decode does (see [[Columns]] for keys that are not
-    *    valid UTF-8);
-    *  - `tupleCols` (V6's driver linkage form) are counted as TUPLES of
-    *    their typed values, grouped as Spark's groupBy groups them
-    *    (binary row equality, -0.0 = 0.0, one NaN): per partition on the
-    *    tuple's UnsafeRow, merged by those bytes on the driver. A tuple
-    *    histogram always runs the Spark form. */
+    *    valid UTF-8). */
   def collectColumns(df: org.apache.spark.sql.DataFrame, numCols: Seq[String],
                      catCols: Seq[String] = Nil,
-                     keepNonFinite: Boolean = false,
-                     tupleCols: Seq[String] = Nil): Columns = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    if (tupleCols.isEmpty)
-      graft.io.DriverParquet.collectColumns(df, numCols, catCols, keepNonFinite) match {
-        case Some((rows, nums, cats)) => return Columns(rows, nums, cats, Set.empty)
-        case None                     => ()
-      }
+                     keepNonFinite: Boolean = false): Columns = {
+    graft.io.DriverParquet.collectColumns(df, numCols, catCols, keepNonFinite) match {
+      case Some((rows, nums, cats)) => return Columns(rows, nums, cats, Set.empty)
+      case None                     => ()
+    }
     val kN = numCols.length
     val kC = catCols.length
-    val tupleTypes = tupleCols.map(c => df.schema(c).dataType)
-    // -0.0 → 0.0 before the key is encoded (UnsafeRow.setDouble already
-    // canonicalizes NaN): grouping equality as binary row equality
-    val tupleExprs = tupleCols.zip(tupleTypes).map {
-      case (c, t @ (DoubleType | FloatType)) =>
-        when(col(c) === lit(0), lit(0).cast(t)).otherwise(col(c))
-      case (c, _) => col(c)
-    }
     val proj = df.select(numCols.map(c => col(c).cast("double")) ++
-      catCols.map(c => col(c).cast("string")) ++ tupleExprs: _*)
+      catCols.map(c => col(c).cast("string")): _*)
     val parts = proj.queryExecution.toRdd.mapPartitions { it =>
       val bufs = Array.fill(kN)(new scala.collection.mutable.ArrayBuilder.ofDouble)
       val dropped = new Array[Long](kN)
@@ -613,13 +591,6 @@ object Exact {
       // safe — only the vocabulary pays an allocation, not every row
       val maps = Array.fill(kC)(
         new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Long]]())
-      // the same clone-on-insert for tuple keys, on their UnsafeRow
-      val tupleKey =
-        if (tupleTypes.isEmpty) null
-        else UnsafeProjection.create(tupleTypes.zipWithIndex.map { case (t, i) =>
-          BoundReference(kN + kC + i, t, nullable = true)
-        })
-      val tupleMap = new java.util.HashMap[UnsafeRow, Array[Long]]()
       var rows = 0L
       it.foreach { r =>
         rows += 1
@@ -641,20 +612,13 @@ object Exact {
           else maps(j).put(if (key == null) null else key.clone(), Array(1L))
           j += 1
         }
-        if (tupleKey != null) {
-          val key = tupleKey(r)
-          val cnt = tupleMap.get(key)
-          if (cnt != null) cnt(0) += 1L else tupleMap.put(key.copy(), Array(1L))
-        }
       }
       val hists = maps.map { m =>
         val out = Array.newBuilder[(Array[Byte], Long)]
         m.forEach((k, v) => out += ((if (k == null) null else k.getBytes) -> v(0)))
         out.result()
       }
-      val tuples = Array.newBuilder[(Array[Byte], Long)]
-      tupleMap.forEach((k, v) => tuples += (k.getBytes -> v(0)))
-      Iterator.single((rows, bufs.map(_.result()), dropped, hists, tuples.result()))
+      Iterator.single((rows, bufs.map(_.result()), dropped, hists))
     }.collect()
     val nums = numCols.zipWithIndex.map { case (c, i) =>
       val slices = parts.map(_._2(i))
@@ -684,16 +648,7 @@ object Exact {
       }
       c -> merged.toMap
     }.toMap
-    val tuples = new java.util.HashMap[UnsafeRow, Array[Long]]()
-    parts.foreach(_._5.foreach { case (bytes, n) =>
-      val key = new UnsafeRow(tupleCols.length)
-      key.pointTo(bytes, bytes.length)
-      val cnt = tuples.get(key)
-      if (cnt != null) cnt(0) += n else tuples.put(key, Array(n))
-    })
-    val tupleSeq = Seq.newBuilder[(org.apache.spark.sql.catalyst.InternalRow, Long)]
-    tuples.forEach((k, n) => tupleSeq += (k -> n(0)))
-    Columns(parts.map(_._1).sum, nums, cats, invalid, tupleSeq.result())
+    Columns(parts.map(_._1).sum, nums, cats, invalid)
   }
 
   /** Per-column fit of [[numProfileViaDriverSort]] and

@@ -148,16 +148,6 @@ object Profile {
       (if (fusedStats.isDefined) graft.io.FastPath.profileDriverFinish
        else graft.io.FastPath.profilePlanFinish).incrementAndGet()
 
-    // One wide aggregate covering every column's scan-side stats. The
-    // cents conversion (the only expensive per-row step — a BigDecimal
-    // round-trip) is projected ONCE per column under the aggregate;
-    // count/min/max still read the original value (NaN counts as
-    // non-null there but cents-converts to null).
-    def centsName(c: String) = s"__cents_$c"
-    // Only columns NOT fully fitted driver-side still need the wide
-    // aggregate (histogram branch: all of them; driver branch: only the
-    // non-finite fallbacks — usually none, and the whole numeric
-    // aggregate plan vanishes).
     // "fully fitted" = the driver fit carries everything the struct needs
     // (finite column inside the cents domain, or empty). A finite column
     // with moments None (|v| ≥ 10¹⁶ — outside DECIMAL(18,2)) keeps its
@@ -168,135 +158,98 @@ object Profile {
     val aggCols = numCols.toSeq.filterNot(c => fullyFitted(c).isDefined)
 
     def dtypeOf(c: String) = dtypeName(fields.find(_.name == c).get.dataType)
-    def local(rows: Seq[Row]): DataFrame =
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), LocalSchema)
-    // the fused rows finished on the driver, in the plan's column order
-    val fusedRowsLocal = fusedCols.zip(fusedStats.getOrElse(Nil)).map { case (c, st) =>
-      val isStr = fields.find(_.name == c).get.dataType == StringType
-      Row(c, dtypeOf(c), st.nTotal, st.nTotal - st.nNonNull,
-        if (st.nTotal > 0) (st.nTotal - st.nNonNull).toDouble / st.nTotal * 100.0 else null,
-        st.nUnique, null, null, null, null, null, null, null,
-        st.min.orNull, st.max.orNull,
-        if (isStr) st.top.map(_._1).orNull else null,
-        if (isStr) st.top.map(_._2).orNull else null)
-    }
-
-    // Every column finished on the driver: the profile is a local frame
-    // of the same rows, sorted by column name as the plan's orderBy sorts.
-    if (fields.nonEmpty && aggCols.isEmpty && loopCols.isEmpty &&
-        (fusedCols.isEmpty || fusedStats.isDefined)) {
-      def orNull(v: Option[Double]): Any = v.orNull
-      val numRowsLocal = numCols.toSeq.map { c =>
-        val f = fullyFitted(c).get
+    def orNull(v: Option[Double]): Any = v.orNull
+    // Every row finished on the driver, built once: each fully fitted
+    // numeric column, and the fused columns when the collect carried them.
+    val localRows: Seq[Row] =
+      numCols.toSeq.flatMap(c => fullyFitted(c).map { f =>
         val q = f.quantiles.get.map(v => if (v.isNaN) null else v)
         Row(c, dtypeOf(c), nRows, nRows - f.n,
+          // same double op order as the in-agg form
           if (nRows > 0) (nRows - f.n).toDouble / nRows * 100.0 else null,
           f.nUnique.get, orNull(f.mean), orNull(f.std), orNull(f.minV),
           q(0), q(1), q(2), orNull(f.maxV), null, null, null, null)
+      }) ++ fusedCols.zip(fusedStats.getOrElse(Nil)).map { case (c, st) =>
+        val isStr = fields.find(_.name == c).get.dataType == StringType
+        Row(c, dtypeOf(c), st.nTotal, st.nTotal - st.nNonNull,
+          if (st.nTotal > 0) (st.nTotal - st.nNonNull).toDouble / st.nTotal * 100.0 else null,
+          st.nUnique, null, null, null, null, null, null, null,
+          st.min.orNull, st.max.orNull,
+          if (isStr) st.top.map(_._1).orNull else null,
+          if (isStr) st.top.map(_._2).orNull else null)
       }
-      return local((numRowsLocal ++ fusedRowsLocal)
-        .sortWith((a, b) => utf8(a.getString(0)).compareTo(utf8(b.getString(0))) < 0))
-    }
-    // prune to the aggregated columns BEFORE the fan-out decision so the
-    // (possible) exchange ships only numeric columns, then project cents
-    // AFTER it so the expensive per-row step runs at machine parallelism
-    val wideIn =
-      if (aggCols.isEmpty) df
-      else fanOutNarrow(df.select(aggCols.map(col): _*))
-    val proj = wideIn.select(
-      wideIn.columns.map(col).toSeq ++
-        aggCols.map(c => Exact.cents(col(c)).as(centsName(c))): _*)
-    val aggs: Seq[Column] =
-      Seq(count(lit(1)).as("__n_total")) ++
-      aggCols.flatMap { c =>
-        Seq(count(col(c)).as(s"${c}__n")) ++
-        Exact.momentAggsPre(col(centsName(c)), c, hiLo) ++
-        Seq(
-          min(col(c)).cast("double").as(s"${c}__min"),
-          max(col(c)).cast("double").as(s"${c}__max")) ++
-        (if (driverFit(c).nUnique.isEmpty)
-          Seq(count_distinct(col(c)).as(s"${c}__uniq")) else Nil) ++
-        // fallback only for non-cents-eligible columns (>2 decimals / huge)
-        (if (driverFit(c).quantiles.isEmpty)
-          Seq(expr(s"percentile($c, array(0.25D, 0.5D, 0.75D))").as(s"${c}__q"))
-        else Nil)
-      }
+
+    // One wide aggregate over the numeric columns the driver fit could
+    // not finish (histogram branch: all of them; driver branch: only the
+    // non-finite fallbacks — usually none, and the plan vanishes). The
+    // cents conversion (the only expensive per-row step — a BigDecimal
+    // round-trip) is projected ONCE per column under the aggregate;
+    // count/min/max still read the original value (NaN counts as
+    // non-null there but cents-converts to null).
     // String/date/timestamp columns are NOT in the wide agg: a string
     // min/max buffer is immutable in UnsafeRow, which demotes the WHOLE
     // aggregate to an un-codegen'd SortAggregate, and their
     // count_distincts add an Expand multiplying every row — together
     // that made the interpreted wide agg the entire profile cost (13 s+
-    // at sf0.1). Their stats come from per-column value-count groupBys
-    // below instead — value-domain-sized, fully codegen'd, and shared
-    // with the mode computation via ReuseExchange.
-    // carrier for the per-column structs: the wide-agg row when any
-    // column still aggregates distributed; a bare 1-row frame when every
-    // numeric column was fitted driver-side (no numeric job at all)
-    val wide =
-      if (aggCols.isEmpty) df.sparkSession.range(1).toDF("__one")
-      else proj.agg(aggs.head, aggs.tail: _*)
-
-    def litOrNull(v: Option[Double]): Column =
-      v.map(lit(_)).getOrElse(lit(null)).cast("double")
-
-    // Re-shape the single wide row into one struct per NUMERIC column —
-    // pure literals for driver-fitted columns, wide-agg refs otherwise.
-    val rowStructs: Seq[Column] =
-      numCols.toSeq.map { c =>
-        val dt = lit(dtypeName(fields.find(_.name == c).get.dataType))
+    // at sf0.1). Their stats come from the fused value counts below.
+    val numRows: Option[DataFrame] = if (aggCols.isEmpty) None else {
+      def centsName(c: String) = s"__cents_$c"
+      // prune to the aggregated columns BEFORE the fan-out decision so the
+      // (possible) exchange ships only numeric columns, then project cents
+      // AFTER it so the expensive per-row step runs at machine parallelism
+      val wideIn = fanOutNarrow(df.select(aggCols.map(col): _*))
+      val proj = wideIn.select(
+        wideIn.columns.map(col).toSeq ++
+          aggCols.map(c => Exact.cents(col(c)).as(centsName(c))): _*)
+      val aggs: Seq[Column] =
+        Seq(count(lit(1)).as("__n_total")) ++
+        aggCols.flatMap { c =>
+          Seq(count(col(c)).as(s"${c}__n")) ++
+          Exact.momentAggsPre(col(centsName(c)), c, hiLo) ++
+          Seq(
+            min(col(c)).cast("double").as(s"${c}__min"),
+            max(col(c)).cast("double").as(s"${c}__max")) ++
+          (if (driverFit(c).nUnique.isEmpty)
+            Seq(count_distinct(col(c)).as(s"${c}__uniq")) else Nil) ++
+          // fallback only for non-cents-eligible columns (>2 decimals / huge)
+          (if (driverFit(c).quantiles.isEmpty)
+            Seq(expr(s"percentile($c, array(0.25D, 0.5D, 0.75D))").as(s"${c}__q"))
+          else Nil)
+        }
+      val wide = proj.agg(aggs.head, aggs.tail: _*)
+      // Re-shape the single wide row into one struct per column; the
+      // driver fit's quantiles and distinct count stay literals.
+      val rowStructs: Seq[Column] = aggCols.map { c =>
         val q: Int => Column = driverFit(c).quantiles match {
           case Some(vs) => i =>
             if (vs(i).isNaN) lit(null).cast("double") else lit(vs(i))
           case None => i => col(s"${c}__q").getItem(i)
         }
-        fullyFitted(c) match {
-          case Some(f) =>
-            struct(
-              lit(c).as("column"),
-              dt.as("dtype"),
-              lit(nRows).as("n_total"),
-              lit(nRows - f.n).as("n_missing"),
-              // same double op order as the in-agg form
-              (if (nRows > 0) lit((nRows - f.n).toDouble / nRows * 100.0)
-               else lit(null).cast("double")).as("missing_pct"),
-              lit(f.nUnique.get).as("n_unique"),
-              litOrNull(f.mean).as("mean"),
-              litOrNull(f.std).as("std"),
-              litOrNull(f.minV).as("min_num"),
-              q(0).as("p25"),
-              q(1).as("median"),
-              q(2).as("p75"),
-              litOrNull(f.maxV).as("max_num"),
-              lit(null).cast("string").as("min_str"),
-              lit(null).cast("string").as("max_str"))
-          case None =>
-            val uniqCol =
-              if (driverFit(c).nUnique.isDefined) lit(driverFit(c).nUnique.get)
-              else col(s"${c}__uniq")
-            struct(
-              lit(c).as("column"),
-              dt.as("dtype"),
-              col("__n_total").as("n_total"),
-              (col("__n_total") - col(s"${c}__n")).as("n_missing"),
-              // n_total=0 guard: ANSI (Spark 4 default) throws on 0/0
-              when(col("__n_total") > 0,
-                (col("__n_total") - col(s"${c}__n")).cast("double") / col("__n_total") * 100.0)
-                .as("missing_pct"),
-              uniqCol.as("n_unique"),
-              Exact.meanFromMoments(Exact.s1Col(c, hiLo), col(s"${c}__n")).as("mean"),
-              Exact.stdFromMoments(Exact.s1Col(c, hiLo), Exact.s2Col(c, hiLo), col(s"${c}__n")).as("std"),
-              col(s"${c}__min").as("min_num"),
-              q(0).as("p25"),
-              q(1).as("median"),
-              q(2).as("p75"),
-              col(s"${c}__max").as("max_num"),
-              lit(null).cast("string").as("min_str"),
-              lit(null).cast("string").as("max_str"))
-        }
+        val uniqCol =
+          if (driverFit(c).nUnique.isDefined) lit(driverFit(c).nUnique.get)
+          else col(s"${c}__uniq")
+        struct(
+          lit(c).as("column"),
+          lit(dtypeOf(c)).as("dtype"),
+          col("__n_total").as("n_total"),
+          (col("__n_total") - col(s"${c}__n")).as("n_missing"),
+          // n_total=0 guard: ANSI (Spark 4 default) throws on 0/0
+          when(col("__n_total") > 0,
+            (col("__n_total") - col(s"${c}__n")).cast("double") / col("__n_total") * 100.0)
+            .as("missing_pct"),
+          uniqCol.as("n_unique"),
+          Exact.meanFromMoments(Exact.s1Col(c, hiLo), col(s"${c}__n")).as("mean"),
+          Exact.stdFromMoments(Exact.s1Col(c, hiLo), Exact.s2Col(c, hiLo), col(s"${c}__n")).as("std"),
+          col(s"${c}__min").as("min_num"),
+          q(0).as("p25"),
+          q(1).as("median"),
+          q(2).as("p75"),
+          col(s"${c}__max").as("max_num"),
+          lit(null).cast("string").as("min_str"),
+          lit(null).cast("string").as("max_str"))
       }
-    val numRows: Option[DataFrame] =
-      if (numCols.isEmpty) None
-      else Some(wide.select(explode(array(rowStructs: _*)).as("r")).select(col("r.*")))
+      Some(wide.select(explode(array(rowStructs: _*)).as("r")).select(col("r.*")))
+    }
 
     // Non-numeric columns, FUSED (round 7) — the at-scale branch; inside
     // the driver-fit regime [[catStats]] finishes the same stats from the
@@ -317,7 +270,7 @@ object Profile {
     // aggregates — correctness first, fusion where proven.
     val fusedRows: Option[DataFrame] = fusedCols match {
       case Nil => None
-      case _ if fusedStats.isDefined => Some(local(fusedRowsLocal))
+      case _ if fusedStats.isDefined => None // finished in localRows
       case cs =>
         val entries = cs.zipWithIndex.map { case (c, i) =>
           struct(lit(i).as("ci"), col(c).cast("string").as("v"))
@@ -411,17 +364,19 @@ object Profile {
       }.reduce(_ unionByName _))
     }
 
-    val base = Seq(numRows, othRows).flatten.reduceOption(_ unionByName _)
-    // the legacy path carries no mode: every string column is fusable,
-    // and fused columns carry theirs from the counts aggregate
-    val baseWithTop = base.map(_
+    if (fields.isEmpty) throw new IllegalArgumentException("profile: input has no columns")
+    // the wide agg and the legacy path carry no mode: every string column
+    // is fusable, and fused columns carry theirs from the counts aggregate
+    val planRows = Seq(numRows, othRows).flatten.map(_
       .withColumn("top_value", lit(null).cast("string"))
-      .withColumn("top_freq", lit(null).cast("long")))
-    (Seq(baseWithTop, fusedRows).flatten.reduceOption(_ unionByName _) match {
-      case Some(all) => all
-      case None =>
-        throw new IllegalArgumentException("profile: input has no columns")
-    }).orderBy(col("column"))
+      .withColumn("top_freq", lit(null).cast("long"))) ++ fusedRows
+    // sorted by column name as the plan's orderBy sorts; with no plan
+    // rows the profile is this local frame and rendering it runs no job
+    val driverRows = df.sparkSession.createDataFrame(java.util.Arrays.asList(
+      localRows.sortWith((a, b) => utf8(a.getString(0)).compareTo(utf8(b.getString(0))) < 0): _*),
+      LocalSchema)
+    if (planRows.isEmpty) driverRows
+    else (driverRows +: planRows).reduce(_ unionByName _).orderBy(col("column"))
   }
 
   /** The local frame's schema: [[profile]]'s columns and types, every

@@ -70,8 +70,11 @@ class SourceSweepSpec extends AnyFunSuite {
     // as literals on both branches (no broadcast cross-join fit).
     "ops/RowTransforms.scala" -> (1, 2),
     "report/Html.scala" -> (1, 0),
-    // risk/Linkage.scala: 0 collects since the r11 fit-once refactor
-    // moved the bounded feature-stat collects into RowTransforms
+    // risk/Linkage.scala: the driver form's grouped count of distinct
+    // quasi tuples. Bounded twice: it runs only when both sides' row
+    // bounds are at most Exact.DriverFitMaxRows, and it returns one row
+    // per distinct (side, tuple), never more than the input rows.
+    "risk/Linkage.scala" -> (1, 0),
     "streaming/DriftStream.scala" -> (3, 0),
     "streaming/Events.scala" -> (0, 3))
 

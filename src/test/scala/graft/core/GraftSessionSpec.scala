@@ -260,7 +260,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(fit.catCounts("rf").values.sum == fit.rows)
   }
 
-  test("job counts on the sample pair as parquet: risk and each profile take one job") {
+  test("job counts on the sample pair as parquet: risk takes two jobs, each profile one") {
     import graft.io.FastPath
     import graft.ops.Profile
     val dir = java.nio.file.Files.createTempDirectory("graft_pair").toString
@@ -274,7 +274,8 @@ class GraftSessionSpec extends SparkSpec {
     val linkage = FastPath.linkageDriver.get
     val (risk, riskJobs) = jobsDuring(s.assessRisk())
     assert(risk.riskScore == 1.0)
-    assert(riskJobs <= 1, s"assessRisk ran $riskJobs jobs")
+    // the grouped count of distinct tuples: its shuffle stage and result
+    assert(riskJobs <= 2, s"assessRisk ran $riskJobs jobs")
     assert(FastPath.linkageDriver.get == linkage + 1, "risk took the driver linkage form")
 
     val prot = s.protect(cfg)
@@ -293,5 +294,5 @@ class GraftSessionSpec extends SparkSpec {
 
   /** Spark jobs of one `runPipeline` on the sample pair read from parquet,
     * without the model-utility check, as measured. */
-  private val PipelineJobs = 11
+  private val PipelineJobs = 12
 }

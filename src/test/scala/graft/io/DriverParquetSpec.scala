@@ -99,6 +99,46 @@ class DriverParquetSpec extends SparkSpec {
     assert(arr.toSeq == (0 until 100).map(_ * 1e6))
   }
 
+  test("category columns: booleans, dates and timestamps key as their string cast") {
+    def write(conf: Map[String, String])(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val path = java.nio.file.Files.createTempDirectory("dp_cats").toString + "/t.parquet"
+      val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        df.repartition(2).write.mode("overwrite").parquet(path)
+      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      spark.read.parquet(path)
+    }
+    val micros = Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    // nulls, a pre-Gregorian date and instants with and without fractions
+    val frame = spark.range(300).select(
+      when(col("id") % 5 =!= 0, col("id") % 3 === 0).as("b"),
+      when(col("id") % 7 =!= 0, date_add(lit("1000-01-01").cast("date"),
+        (col("id") * 997).cast("int"))).as("dt"),
+      when(col("id") % 4 =!= 0, timestamp_micros(col("id") * 86400000123L)).as("ts"),
+      when(col("id") % 6 =!= 0, timestamp_micros(col("id") * 3600000001L)
+        .cast("timestamp_ntz")).as("ntz"))
+    val cols = Seq("b", "dt", "ts", "ntz")
+    val df = write(micros)(frame)
+    val got = DriverParquet.collectColumns(df, Nil, cols)
+    assert(got.isDefined, "Spark 4 files in the proleptic calendar decode on the driver")
+    val viaSpark = graft.ops.Exact.collectColumns(df.filter(rand(7) >= 0), Nil, cols)
+    assert(got.get._1 == 300L)
+    for (c <- cols) assert(got.get._3(c) == viaSpark.cats(c), c)
+    assert(viaSpark.cats("b").keySet == Set("true", "false", null))
+    // INT96 and MILLIS timestamps, and a date written in the legacy
+    // hybrid calendar, refuse; the NTZ column still decodes beside none
+    val int96 = write(Map("spark.sql.parquet.outputTimestampType" -> "INT96"))(frame)
+    assert(DriverParquet.collectColumns(int96, Nil, Seq("ts")).isEmpty)
+    assert(DriverParquet.collectColumns(int96, Nil, Seq("ntz")).isDefined)
+    val millis = write(Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS"))(frame)
+    assert(DriverParquet.collectColumns(millis, Nil, Seq("ts")).isEmpty)
+    val legacy = write(micros + ("spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY"))(frame)
+    assert(DriverParquet.collectColumns(legacy, Nil, Seq("dt")).isEmpty)
+    assert(DriverParquet.collectColumns(legacy, Nil, Seq("ts")).isEmpty)
+    assert(DriverParquet.collectColumns(legacy, Nil, Seq("b", "ntz")).isDefined)
+  }
+
   test("timestamps: mixed per-file units refuse even the opt-in path") {
     val dir = java.nio.file.Files.createTempDirectory("dp_tsmix").toString + "/t.parquet"
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
